@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from lotad_spark.drift import MissingTableDrift, TableDataDiff, TableSchemaDrift
+from lotad_spark.sources.memory import bounded_local_df
 
 DATA_DRIFT_SUMMARY_TABLE = "lotad_db_data_drift_summary"
 MISSING_TABLE_TABLE = "lotad_missing_table_drift"
@@ -150,14 +151,9 @@ class DriftAnalysis:
             (self._missing_rows, _MISSING_SCHEMA, MISSING_TABLE_TABLE),
             (self._schema_rows, _SCHEMA_DRIFT_SCHEMA, SCHEMA_DRIFT_TABLE),
         ):
-            # Build the local relation as ONE partition up front. The naive
-            # createDataFrame(rows).coalesce(1) shape splits driver-local rows
-            # into defaultParallelism Python-RDD partitions, and coalesce
-            # makes a single task pay one Python-worker roundtrip per
-            # partition (~4.5 s for a 1-row write on local[32]).
-            rdd = self.spark.sparkContext.parallelize(rows, 1)
-            df = self.spark.createDataFrame(rdd, schema)
-            df.write.mode("overwrite").parquet(self.table_dir(name))
+            bounded_local_df(self.spark, rows, schema).write.mode(
+                "overwrite"
+            ).parquet(self.table_dir(name))
 
     # ---- getters (sorted like the reference's, data_analysis.py:181-200) ----
 

@@ -4,11 +4,12 @@ Spark re-expression of the reference's ``DatabaseComparator.compare_all``
 (lotad/db_compare.py:149-217):
 
 1. catalog scan on both sides, table-name set logic → missing-table drift;
-2. per shared table: schema drift from introspected schemas;
-3. per surviving table (regex filters applied): row-level data drift via
-   ``diff_tables``, written to the output dir; summary rows only for
-   non-empty diffs (reference probes LIMIT 1, db_compare.py:356-364);
-4. three summary tables + text report.
+2. per shared table, each side opened ONCE: schema drift from the opened
+   frames' schemas, then — for tables that pass the regex filters —
+   row-level data drift via ``diff_tables`` over the same frames, written
+   to the output dir; summary rows only for non-empty diffs (reference
+   probes LIMIT 1, db_compare.py:356-364);
+3. three summary tables + text report.
 
 Concurrency: the reference fans out one OS process per table
 (multiprocessing.Pool, db_compare.py:193). Here a driver ThreadPool submits
@@ -19,6 +20,7 @@ cluster, which the reference cannot do.
 
 from __future__ import annotations
 
+import logging
 import re
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -31,10 +33,24 @@ from pyspark.sql import functions as F
 from lotad_spark.analysis import DriftAnalysis
 from lotad_spark.drift import (
     TableDataDiff,
+    TableSchemaDrift,
     generate_missing_table_drift,
     generate_table_schema_drift,
 )
 from lotad_spark.operators.diff import diff_tables
+from lotad_spark.sources.parquet import schema_types
+
+# Driver threads submitting per-table job chains. Round-19 sweep (after
+# the pre-imported worker daemon and one-slice relations changed the
+# submission cost), local[32] at sf0.1, min-of-3 warm: 2→6.39s, 3→5.08s,
+# 4→4.39s, 6→4.97s, 8→5.61s → 4. Guide §2.6's "2-3 jobs in flight is
+# plenty" is the right intuition: enough concurrency to back-fill one
+# table's task tail, not so much that the Py4J gateway + Python GIL
+# serialize job submission and inflate every table; executor-side
+# capacity is not the limit. On a real cluster the same driver bound
+# applies — raise only if job submission (not execution) is the
+# bottleneck.
+MAX_CONCURRENT_TABLES = 4
 
 
 @dataclass
@@ -57,8 +73,8 @@ def _matches_any(patterns: Iterable[str], name: str) -> bool:
 
 class DatabaseComparator:
     """Compares two database sources (any objects exposing ``db_id``,
-    ``list_tables()``, ``get_schema(table, ignore_dates)``, ``table(name)`` —
-    see ``ParquetDatabase`` / ``DictDatabase``)."""
+    ``list_tables()`` and ``table(name)`` — see ``ParquetDatabase`` /
+    ``DictDatabase``)."""
 
     def __init__(
         self,
@@ -73,18 +89,6 @@ class DatabaseComparator:
         table_ignore_columns: dict[str, list[str]] | None = None,
         table_queries: dict[str, str] | None = None,
         strategy: str = "auto",
-        # Measured knee on local[32] at sf0.1. Round-6 sweep (after the
-        # single-exchange diff): 3→6.8s, 4→5.5s, 6→5.1s, 8→5.5s → 6.
-        # Round-19 re-sweep (after the pre-imported worker daemon and
-        # one-slice relations changed the submission cost): min-of-3 warm,
-        # 2→6.39s, 3→5.08s, 4→4.39s, 6→4.97s, 8→5.61s → 4. Guide §2.6's
-        # "2-3 jobs in flight is plenty" is the right intuition: enough
-        # concurrency to back-fill one table's task tail, not so much
-        # that the Py4J gateway + Python GIL serialize job submission and
-        # inflate every table; executor-side capacity is not the limit.
-        # On a real cluster the same driver bound applies — raise only if
-        # job submission (not execution) is the bottleneck.
-        max_concurrent_tables: int = 4,
     ):
         self.spark = spark
         self.db1 = db1
@@ -95,27 +99,17 @@ class DatabaseComparator:
         self.table_ignore_columns = table_ignore_columns or {}
         self.table_queries = table_queries or {}
         self.strategy = strategy
-        self.max_concurrent_tables = max_concurrent_tables
         self.analysis = DriftAnalysis(spark, output_path, db1.db_id, db2.db_id)
 
-    # ---- pieces (each independently usable) ----
+    # ---- per-table work ----
 
-    def schema_drift(self, table_name: str):
-        return generate_table_schema_drift(
-            table_name,
-            self.db1.db_id,
-            self.db1.get_schema(table_name, self.ignore_dates),
-            self.db2.db_id,
-            self.db2.get_schema(table_name, self.ignore_dates),
-        )
-
-    def _side_frames(self, table_name: str):
-        """Default: projected table scans. With a configured custom query,
-        the query result replaces the scan on BOTH sides (Q3, reference
-        db_compare.py:241-264)."""
+    def _side_frames(self, table_name: str, df1, df2):
+        """Default: the opened table frames. With a configured custom
+        query, the query result replaces the scan on BOTH sides (Q3,
+        reference db_compare.py:241-264)."""
         query = self.table_queries.get(table_name)
         if not query:
-            return self.db1.table(table_name), self.db2.table(table_name)
+            return df1, df2
         from lotad_spark.operators.custom_query import custom_query_frame
 
         return (
@@ -129,25 +123,42 @@ class DatabaseComparator:
             ),
         )
 
-    def _data_drift_one(self, table_name: str) -> TableDataDiff | None:
-        """Catalog-class failures (table vanished between list and scan,
+    def _compare_one(
+        self, table_name: str, compare_data: bool
+    ) -> tuple[list[TableSchemaDrift], TableDataDiff | None]:
+        """Open both sides of one shared table once; return its schema
+        drift and, when ``compare_data``, its data drift from the same
+        frames.
+
+        Catalog-class failures (table vanished between list and scan,
         unreadable path, missing column) skip THIS table and let the rest
         of the run complete — the reference warns and continues on
         duckdb.CatalogException (db_compare.py:366-369) and raises on
-        everything else (db_compare.py:370-377); AnalysisException is the
-        Spark face of the same error class."""
+        everything else (db_compare.py:370-377). AnalysisException is the
+        Spark face of the same error class; FileNotFoundError is what the
+        parquet source's footer probe raises for a listed file that is
+        gone. Schema drift already computed survives a later data-drift
+        failure."""
+        schema_drift: list[TableSchemaDrift] = []
         try:
-            return self._data_drift_one_inner(table_name)
-        except AnalysisException as err:
-            import logging
-
+            df1, df2 = self.db1.table(table_name), self.db2.table(table_name)
+            schema_drift = generate_table_schema_drift(
+                table_name,
+                self.db1.db_id,
+                schema_types(df1.schema, self.ignore_dates),
+                self.db2.db_id,
+                schema_types(df2.schema, self.ignore_dates),
+            )
+            if compare_data:
+                return schema_drift, self._data_drift(table_name, df1, df2)
+        except (AnalysisException, FileNotFoundError) as err:
             logging.getLogger(__name__).warning(
                 "Failed to process table %s: %s", table_name, err
             )
-            return None
+        return schema_drift, None
 
-    def _data_drift_one_inner(self, table_name: str) -> TableDataDiff | None:
-        df1, df2 = self._side_frames(table_name)
+    def _data_drift(self, table_name: str, df1, df2) -> TableDataDiff | None:
+        df1, df2 = self._side_frames(table_name, df1, df2)
         result = diff_tables(
             df1,
             df2,
@@ -206,12 +217,6 @@ class DatabaseComparator:
         tables2 = set(self.db2.list_tables())
         shared = sorted(tables1 & tables2)
 
-        all_schema_drift = []
-        for t in shared:
-            all_schema_drift.extend(self.schema_drift(t))
-        if all_schema_drift:
-            self.analysis.add_schema_drift(all_schema_drift)
-
         missing = generate_missing_table_drift(
             self.db1.db_id, tables1, self.db2.db_id, tables2
         )
@@ -225,13 +230,22 @@ class DatabaseComparator:
             and not (self.target_tables and not _matches_any(self.target_tables, t))
         ]
 
+        # One pool task per shared table; pool.map yields in submission
+        # (sorted) order, so records land in sorted table order.
+        compare_data = set(to_compare)
+        all_schema_drift = []
         drifted: list[TableDataDiff] = []
-        workers = max(1, min(self.max_concurrent_tables, len(to_compare) or 1))
+        workers = max(1, min(MAX_CONCURRENT_TABLES, len(shared)))
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            for res in pool.map(self._data_drift_one, to_compare):
+            for schema_drift, res in pool.map(
+                lambda t: self._compare_one(t, t in compare_data), shared
+            ):
+                all_schema_drift.extend(schema_drift)
                 if res is not None:
                     drifted.append(res)
-        for res in sorted(drifted, key=lambda r: r.table_name):
+        if all_schema_drift:
+            self.analysis.add_schema_drift(all_schema_drift)
+        for res in drifted:
             self.analysis.add_data_drift(res)
 
         self.analysis.write()

@@ -90,13 +90,16 @@ def _is_nested(dt: T.DataType) -> bool:
     return isinstance(dt, (T.StructType, T.MapType, T.ArrayType))
 
 
-def canonical_member(col: Column, dtype: T.DataType) -> Column:
+def canonical_member(
+    col: Column, dtype: T.DataType, json_strings: bool = True
+) -> Column:
     """Reduce one column to its canonical string member for row hashing.
 
     * nested types → ``to_json`` then canonical JSON digest;
     * strings → canonical JSON digest only when the value looks like JSON
       (the pandas UDF receives NULL otherwise — no Python cost for plain
-      strings);
+      strings); ``json_strings=False`` renders them as-is, keeping a
+      JSON-free row hash entirely inside whole-stage codegen;
     * binary → base64 rendering;
     * everything else → string cast; NULL → ``"None"`` (reference parity:
       ``str(None)``).
@@ -104,7 +107,7 @@ def canonical_member(col: Column, dtype: T.DataType) -> Column:
     if _is_nested(dtype):
         col = F.to_json(col)
         return F.coalesce(_canon_json_udf(col), F.lit(CANONICAL_NULL))
-    if isinstance(dtype, T.StringType):
+    if json_strings and isinstance(dtype, T.StringType):
         looks_json = (
             col.startswith("{") | col.startswith("[") | col.startswith("%7B")
         )
@@ -135,19 +138,6 @@ def _scalar_member(col: Column, dtype: T.DataType) -> Column:
     return F.coalesce(col.cast("string"), F.lit(CANONICAL_NULL))
 
 
-def canonical_member_fast(col: Column, dtype: T.DataType) -> Column:
-    """Pure-JVM member (no JSON canonicalization of string values).
-
-    For sources known to carry no JSON-in-string payloads this keeps the
-    entire row hash inside whole-stage codegen.
-    """
-    if _is_nested(dtype):
-        return F.coalesce(_canon_json_udf(F.to_json(col)), F.lit(CANONICAL_NULL))
-    if isinstance(dtype, T.BinaryType):
-        return F.coalesce(F.base64(col), F.lit(CANONICAL_NULL))
-    return _scalar_member(col, dtype)
-
-
 def canonical_row_hash(
     df: DataFrame,
     columns: Iterable[str] | None = None,
@@ -161,8 +151,9 @@ def canonical_row_hash(
     """
     fields = {f.name: f.dataType for f in df.schema.fields}
     cols = sorted(columns) if columns is not None else sorted(fields)
-    member = canonical_member if json_strings else canonical_member_fast
-    members = [member(F.col(f"`{c}`"), fields[c]) for c in cols]
+    members = [
+        canonical_member(F.col(f"`{c}`"), fields[c], json_strings) for c in cols
+    ]
     return F.lower(F.hex(F.xxhash64(*members)))
 
 
@@ -179,12 +170,7 @@ def register_sql_functions(spark) -> None:
     differs from the column-wise composition ``with_row_hash`` uses on the
     diff hot path. Registration is idempotent.
     """
-
-    @F.pandas_udf(T.StringType())
-    def get_row_hash(s: pd.Series) -> pd.Series:
-        return s.map(canonical_value_hash, na_action="ignore")
-
-    spark.udf.register("get_row_hash", get_row_hash)
+    spark.udf.register("get_row_hash", _canon_json_udf)
 
 
 def with_row_hash(

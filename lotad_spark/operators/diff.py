@@ -22,18 +22,13 @@ Spark-first execution strategies (selectable; ``auto`` ROUTES between
   trailing exact-duplicate collapse is a hash aggregate that REUSES the
   window's partitioning (hash is a prefix of the distinct key), so the
   whole diff is a single exchange — strictly fewer shuffled bytes than
-  ``antijoin`` (which additionally ships each side's hash column as a
-  join probe and re-shuffles the diff output for the distinct). Output is
-  identical to ``antijoin``: every raw variant canonicalizing to a
-  surviving hash is kept, then exact duplicates collapse. Measured ~35%
-  faster across the bench tables at sf0.1.
-* ``antijoin`` — direct translation of the reference plan (two left-anti
-  joins + union-distinct). Exact reference parity: every raw variant that
-  canonicalizes to the same hash survives. Costs two join shuffles and a
-  distinct shuffle; Spark reuses the per-side exchanges, and when one side
-  is small Catalyst/AQE picks a broadcast hash join, turning the diff into
-  a shuffle-free map-side probe — the strategy to pick when one side is
-  known-small and the other should not shuffle at all.
+  the reference plan's two left-anti joins + union-distinct (which
+  additionally ships each side's hash column as a join probe and
+  re-shuffles the diff output for the distinct). Output is identical to
+  that plan: every raw variant canonicalizing to a surviving hash is
+  kept, then exact duplicates collapse (tests/test_diff.py keeps the
+  reference plan as the equivalence oracle). Measured ~35% faster across
+  the bench tables at sf0.1.
 * ``groupby`` (opt-in, for scale) — two phases over HASH-ONLY projections:
   (1) union the two (hash, provenance) projections and aggregate
   ``collect_set(observed_in)`` per hash; hashes seen on exactly one side
@@ -43,7 +38,7 @@ Spark-first execution strategies (selectable; ``auto`` ROUTES between
   full-data shuffle and a metadata shuffle — and since real drift is
   small relative to the inputs, AQE turns phase 2 into a broadcast
   semi-join (no shuffle of full rows at all). Output is IDENTICAL to
-  ``antijoin`` (every raw variant that canonicalizes to a surviving hash
+  ``window`` (every raw variant that canonicalizes to a surviving hash
   is kept, then exact-duplicate rows collapse), so the two strategies
   are interchangeable; only the physical plan differs.
 
@@ -54,7 +49,8 @@ Spark-first execution strategies (selectable; ``auto`` ROUTES between
   An earlier formulation carried all columns through the aggregate as
   ``min(struct(*cols))`` + ``collect_set``; over near-unique hash keys
   map-side partial aggregation is pure overhead and the full-row hash
-  aggregate measured 3.8× slower than antijoin at sf0.1 (BENCH_r03).
+  aggregate measured 3.8× slower than the reference anti-join plan at
+  sf0.1 (BENCH_r03).
   The hash-only + semi-join-back shape restores the scale advantage.
 
 ``auto`` (default) — routes between the two with a duplicate-density
@@ -108,6 +104,7 @@ from lotad_spark.hashing import (
     canonical_row_hash,
     _is_nested,
 )
+from lotad_spark.sources.parquet import DATE_TYPES
 
 
 def _quoted(c: str) -> F.Column:
@@ -148,7 +145,7 @@ AUTO_DUP_DENSITY_THRESHOLD = 0.10
 # keeps winning at 100 TB. The fast path is bit-identical when the
 # probe proves no JSON prefix exists: for such strings the guarded
 # member reduces to coalesce(col, 'None'), exactly the fast member
-# (hashing.canonical_member vs canonical_member_fast), so the probe can
+# (hashing.canonical_member with json_strings on vs off), so the probe can
 # never change a result, only the physical plan. Below the floor the
 # probe's FIXED job cost (~0.15 s) exceeds the Arrow saving (r18 and
 # r19 both measured the sf0.1 per-table A/B within
@@ -277,14 +274,13 @@ def normalize_for_diff(
     ignore = set(ignore_columns)
     s1 = {f.name: f.dataType for f in df1.schema.fields}
     s2 = {f.name: f.dataType for f in df2.schema.fields}
-    date_types = (T.DateType, T.TimestampType, T.TimestampNTZType)
 
     shared: list[str] = []
     for name in sorted(set(s1) & set(s2)):
         if name in ignore:
             continue
         if ignore_dates and (
-            isinstance(s1[name], date_types) or isinstance(s2[name], date_types)
+            isinstance(s1[name], DATE_TYPES) or isinstance(s2[name], DATE_TYPES)
         ):
             continue
         shared.append(name)
@@ -458,18 +454,10 @@ def diff_tables(
         )
         # Phase 2: pull the full rows for surviving hashes. Drift is small
         # relative to the inputs, so AQE picks a broadcast semi-join here;
-        # dropDuplicates matches antijoin's exact-duplicate collapse.
+        # dropDuplicates is the same exact-duplicate collapse as window's.
         diff = (
             t1.unionByName(t2)
             .join(survivors, HASH_COL, "left_semi")
-            .dropDuplicates()
-            .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
-        )
-    elif strategy == "antijoin":
-        only1 = t1.join(t2.select(HASH_COL), HASH_COL, "left_anti")
-        only2 = t2.join(t1.select(HASH_COL), HASH_COL, "left_anti")
-        diff = (
-            only1.unionByName(only2)
             .dropDuplicates()
             .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
         )

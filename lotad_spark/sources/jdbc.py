@@ -18,9 +18,8 @@ cluster pass ``spark.jars`` with whichever engine's driver you need.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from lotad_spark.sources.parquet import spark_type_name
+from lotad_spark.sources.parquet import schema_types
 
 
 class JdbcDatabase:
@@ -86,13 +85,7 @@ class JdbcDatabase:
         return reader.load()
 
     def get_schema(self, table_name: str, ignore_dates: bool = False) -> dict[str, str]:
-        date_types = (T.DateType, T.TimestampType, T.TimestampNTZType)
-        out: dict[str, str] = {}
-        for field in self.table(table_name).schema.fields:
-            if ignore_dates and isinstance(field.dataType, date_types):
-                continue
-            out[field.name] = spark_type_name(field.dataType)
-        return out
+        return schema_types(self.table(table_name).schema, ignore_dates)
 
 
 class PostgresDatabase(JdbcDatabase):

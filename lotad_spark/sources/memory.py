@@ -3,16 +3,15 @@
 Implements the same catalog surface as ``ParquetDatabase`` (list_tables /
 get_schema / table — reference lotad/connection.py:148-162) for tests and
 for callers that assemble their sides from arbitrary Spark reads (JDBC,
-Delta, views). Any object with this trio + ``db_id`` works as a
-``compare_all`` side.
+Delta, views). Any object with ``list_tables``, ``table`` and ``db_id``
+works as a ``compare_all`` side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-from lotad_spark.sources.parquet import spark_type_name
+from lotad_spark.sources.parquet import schema_types
 
 
 class DictDatabase:
@@ -29,13 +28,7 @@ class DictDatabase:
         return self._tables[table_name]
 
     def get_schema(self, table_name: str, ignore_dates: bool = False) -> dict[str, str]:
-        date_types = (T.DateType, T.TimestampType, T.TimestampNTZType)
-        out: dict[str, str] = {}
-        for field in self.table(table_name).schema.fields:
-            if ignore_dates and isinstance(field.dataType, date_types):
-                continue
-            out[field.name] = spark_type_name(field.dataType)
-        return out
+        return schema_types(self.table(table_name).schema, ignore_dates)
 
 
 def bounded_local_df(spark, rows, schema):

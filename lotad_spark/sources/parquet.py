@@ -138,16 +138,24 @@ class ParquetDatabase:
         return read_table(self.spark, self.table_path(table_name))
 
     def get_schema(self, table_name: str, ignore_dates: bool = False) -> dict[str, str]:
-        """``{column: TYPE_NAME}`` in engine-style upper-case type strings,
-        optionally excluding date/timestamp columns (reference
-        queries/duckdb/get_schema.sql:5-8)."""
-        date_types = (T.DateType, T.TimestampType, T.TimestampNTZType)
-        out: dict[str, str] = {}
-        for field in self.table(table_name).schema.fields:
-            if ignore_dates and isinstance(field.dataType, date_types):
-                continue
-            out[field.name] = spark_type_name(field.dataType)
-        return out
+        return schema_types(self.table(table_name).schema, ignore_dates)
+
+
+# Column types that ``ignore_dates`` drops from schema drift and diffs
+# (reference queries/duckdb/get_schema.sql:5-8).
+DATE_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def schema_types(schema: T.StructType, ignore_dates: bool = False) -> dict[str, str]:
+    """``{column: TYPE_NAME}`` in engine-style upper-case type strings,
+    optionally excluding date/timestamp columns — the one schema
+    introspection behind every source's ``get_schema`` and compare_all's
+    schema drift."""
+    return {
+        f.name: spark_type_name(f.dataType)
+        for f in schema.fields
+        if not (ignore_dates and isinstance(f.dataType, DATE_TYPES))
+    }
 
 
 def spark_type_name(dt: T.DataType) -> str:

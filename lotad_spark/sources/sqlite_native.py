@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from lotad_spark.sources.parquet import spark_type_name
+from lotad_spark.sources.parquet import schema_types
 
 # SQLite type-affinity rules (https://sqlite.org/datatype3.html §3.1):
 # INT* → INTEGER, CHAR/CLOB/TEXT → TEXT, BLOB/'' → BLOB, REAL/FLOA/DOUB
@@ -135,10 +135,7 @@ class SqliteNativeDatabase:
     def get_schema(self, table_name: str, ignore_dates: bool = False) -> dict[str, str]:
         # SQLite has no date/timestamp storage class, so ignore_dates is a
         # no-op here (dates arrive as TEXT/INTEGER per the writer's choice).
-        return {
-            f.name: spark_type_name(f.dataType)
-            for f in self.spark_schema(table_name).fields
-        }
+        return schema_types(self.spark_schema(table_name), ignore_dates)
 
     # -- the scan --
 

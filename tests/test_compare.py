@@ -136,11 +136,6 @@ class TestCompareAll:
                 super().__init__(tables, db_id)
                 self._spark = spark
 
-            def get_schema(self, name, ignore_dates=False):
-                if name == "broken":
-                    return {"a": "BIGINT"}
-                return super().get_schema(name, ignore_dates)
-
             def table(self, name):
                 if name == "broken":
                     # genuine AnalysisException (PATH_NOT_FOUND) at scan
@@ -156,6 +151,60 @@ class TestCompareAll:
         # broken skipped, customer still compared and drifted
         assert sorted(res.compared_tables) == ["broken", "customer"]
         assert [d.table_name for d in res.data_drift] == ["customer"]
+
+    def test_vanished_parquet_table_skipped(self, spark, tmp_path, caplog):
+        """A listed table whose file is gone at open time (the pyarrow
+        footer probe raises FileNotFoundError, not AnalysisException) is
+        skipped with the same warning; the rest of the run completes."""
+        import logging
+
+        from lotad_spark.sources import ParquetDatabase
+
+        class _Vanishing(ParquetDatabase):
+            def list_tables(self):
+                return super().list_tables() + ["gone"]
+
+        sides = []
+        for i, rows in enumerate(([(1, "a"), (2, "b")], [(1, "a")])):
+            path = tmp_path / f"db{i + 1}"
+            spark.createDataFrame(rows, "k bigint, v string").write.parquet(
+                str(path / "t.parquet")
+            )
+            sides.append(_Vanishing(spark, str(path), f"db{i + 1}"))
+        with caplog.at_level(logging.WARNING, logger="lotad_spark.compare"):
+            res = compare_all(spark, *sides, output_path=str(tmp_path / "out"))
+        assert "Failed to process table gone" in caplog.text
+        assert res.compared_tables == ["gone", "t"]
+        assert [d.table_name for d in res.data_drift] == ["t"]
+        assert res.analysis.get_table_schema_drift() == []
+
+    def test_each_table_opened_once_per_side(self, spark, customer, tmp_path):
+        """Schema drift and data drift come from ONE open per side; a
+        table excluded by ignore_tables is opened once for its schema."""
+        from collections import Counter
+
+        class _Counting(DictDatabase):
+            def __init__(self, tables, db_id):
+                super().__init__(tables, db_id)
+                self.opens = Counter()
+
+            def table(self, name):
+                self.opens[name] += 1
+                return super().table(name)
+
+        mutated = customer.filter(F.col("c_custkey") != 5)
+        tables = {"a": customer, "b": customer, "skip_me": customer}
+        db1 = _Counting(tables, "db1")
+        db2 = _Counting({**tables, "a": mutated}, "db2")
+        res = compare_all(
+            spark, db1, db2,
+            output_path=str(tmp_path / "out"),
+            ignore_tables=[r"skip_"],
+        )
+        assert res.compared_tables == ["a", "b"]
+        assert [d.table_name for d in res.data_drift] == ["a"]
+        for db in (db1, db2):
+            assert db.opens == {"a": 1, "b": 1, "skip_me": 1}
 
     def test_ignore_tables_regex_filter(self, spark, customer, tmp_path):
         mutated = customer.filter(F.col("c_custkey") != 5)

@@ -4,9 +4,43 @@
 import pytest
 from pyspark.sql import functions as F
 
-from lotad_spark.operators.diff import diff_tables, normalize_for_diff
+from lotad_spark.hashing import HASH_COL, PROVENANCE_COL
+from lotad_spark.operators.diff import (
+    DiffResult,
+    _tag,
+    diff_tables,
+    normalize_for_diff,
+)
 
+# The engine's two strategies, plus "antijoin": the reference plan they
+# are held to (see reference_diff).
 STRATEGIES = ["groupby", "antijoin", "window"]
+
+
+def reference_diff(
+    df1, df2, *, db1_id="db1", db2_id="db2", ignore_columns=(), ignore_dates=False
+) -> DiffResult:
+    """The reference's diff plan, translated directly: two left-anti joins
+    on the canonical hash + union-distinct
+    (db_compare_create_tmp_table_merge.sql:1-45). The test oracle for the
+    engine's strategies; the scenarios below pin it too."""
+    n1, n2, cols = normalize_for_diff(
+        df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
+    )
+    t1, t2 = _tag(n1, db1_id, cols, True), _tag(n2, db2_id, cols, True)
+    diff = (
+        t1.join(t2.select(HASH_COL), HASH_COL, "left_anti")
+        .unionByName(t2.join(t1.select(HASH_COL), HASH_COL, "left_anti"))
+        .dropDuplicates()
+        .select(PROVENANCE_COL, *[F.col(f"`{c}`") for c in cols], HASH_COL)
+    )
+    return DiffResult(diff=diff, columns=cols, db1_id=db1_id, db2_id=db2_id)
+
+
+def _diff(df1, df2, *, strategy, **kwargs) -> DiffResult:
+    if strategy == "antijoin":
+        return reference_diff(df1, df2, **kwargs)
+    return diff_tables(df1, df2, strategy=strategy, **kwargs)
 
 
 @pytest.fixture(scope="module")
@@ -24,13 +58,13 @@ def events(spark, sf_dir):
 @pytest.mark.parametrize("strategy", STRATEGIES)
 class TestDiffScenarios:
     def test_identical_inputs_no_drift(self, customer, strategy):
-        res = diff_tables(customer, customer, strategy=strategy)
+        res = _diff(customer, customer, strategy=strategy)
         assert res.is_empty()
         assert res.counts() == {"db1": 0, "db2": 0}
 
     def test_deleted_row(self, customer, strategy):
         db1 = customer.filter(F.col("c_custkey") != 7)
-        res = diff_tables(db1, customer, strategy=strategy)
+        res = _diff(db1, customer, strategy=strategy)
         rows = res.diff.collect()
         assert len(rows) == 1
         assert rows[0].observed_in == "db2"
@@ -43,33 +77,33 @@ class TestDiffScenarios:
                 F.col("c_acctbal")
             ),
         )
-        res = diff_tables(db1, customer, strategy=strategy)
+        res = _diff(db1, customer, strategy=strategy)
         assert res.counts() == {"db1": 1, "db2": 1}
         keys = {(r.observed_in, r.c_custkey) for r in res.diff.collect()}
         assert keys == {("db1", 3), ("db2", 3)}
 
     def test_ignored_column_suppresses_drift(self, customer, strategy):
         db1 = customer.withColumn("c_acctbal", F.col("c_acctbal") + 1.0)
-        res = diff_tables(db1, customer, ignore_columns=["c_acctbal"], strategy=strategy)
+        res = _diff(db1, customer, ignore_columns=["c_acctbal"], strategy=strategy)
         assert res.is_empty()
         assert "c_acctbal" not in res.columns
 
     def test_missing_column_no_data_drift(self, customer, strategy):
         # schema intersection: dropped column doesn't produce data drift
         db1 = customer.drop("c_mktsegment")
-        res = diff_tables(db1, customer, strategy=strategy)
+        res = _diff(db1, customer, strategy=strategy)
         assert "c_mktsegment" not in res.columns
         assert res.is_empty()
 
     def test_type_mismatch_cast_no_drift(self, customer, strategy):
         db1 = customer.withColumn("c_custkey", F.col("c_custkey").cast("string"))
-        res = diff_tables(db1, customer, strategy=strategy)
+        res = _diff(db1, customer, strategy=strategy)
         assert res.is_empty()
 
     def test_ignore_dates(self, spark, sf_dir, strategy):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(500)
         db1 = li.withColumn("l_shipdate", F.col("l_shipdate") + F.expr("INTERVAL 1 DAY"))
-        res = diff_tables(db1, li, ignore_dates=True, strategy=strategy)
+        res = _diff(db1, li, ignore_dates=True, strategy=strategy)
         assert "l_shipdate" not in res.columns
         assert res.is_empty()
 
@@ -80,20 +114,20 @@ class TestDiffScenarios:
         db2 = spark.createDataFrame(
             [(1, '{"b": 2, "a": 1}'), (2, '{"x": [2, 1]}')], "id long, props string"
         )
-        res = diff_tables(db1, db2, strategy=strategy)
+        res = _diff(db1, db2, strategy=strategy)
         assert res.is_empty()
 
     def test_json_value_change_detected(self, spark, strategy):
         db1 = spark.createDataFrame([(1, '{"a": 1}')], "id long, props string")
         db2 = spark.createDataFrame([(1, '{"a": 2}')], "id long, props string")
-        res = diff_tables(db1, db2, strategy=strategy)
+        res = _diff(db1, db2, strategy=strategy)
         assert res.counts() == {"db1": 1, "db2": 1}
 
     def test_set_semantics_duplicate_hashes(self, spark, strategy):
         # hash present n× in db1 and ≥1× in db2 → removed entirely
         db1 = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "id long, v string")
         db2 = spark.createDataFrame([(1, "x")], "id long, v string")
-        res = diff_tables(db1, db2, strategy=strategy)
+        res = _diff(db1, db2, strategy=strategy)
         rows = res.diff.collect()
         assert len(rows) == 1
         assert (rows[0].observed_in, rows[0].id) == ("db1", 2)
@@ -101,17 +135,17 @@ class TestDiffScenarios:
     def test_nested_struct_column(self, spark, strategy):
         db1 = spark.createDataFrame([(1, {"j": "a", "s": 1})], "id long, o struct<j:string,s:long>")
         db2 = spark.createDataFrame([(1, {"j": "b", "s": 1})], "id long, o struct<j:string,s:long>")
-        res = diff_tables(db1, db2, strategy=strategy)
+        res = _diff(db1, db2, strategy=strategy)
         assert res.counts() == {"db1": 1, "db2": 1}
         db2_same = spark.createDataFrame(
             [(1, {"j": "a", "s": 1})], "id long, o struct<j:string,s:long>"
         )
-        assert diff_tables(db1, db2_same, strategy=strategy).is_empty()
+        assert _diff(db1, db2_same, strategy=strategy).is_empty()
 
     def test_provenance_tags(self, customer, strategy):
         db1 = customer.filter(F.col("c_custkey") > 10)
         db2 = customer.filter(F.col("c_custkey") <= 140)
-        res = diff_tables(db1, db2, db1_id="left.db", db2_id="right.db", strategy=strategy)
+        res = _diff(db1, db2, db1_id="left.db", db2_id="right.db", strategy=strategy)
         sides = {r.observed_in for r in res.diff.collect()}
         assert sides == {"left.db", "right.db"}
 
@@ -154,10 +188,12 @@ class TestNormalize:
 
 class TestStrategyEquivalence:
     def test_all_strategies_identical_on_randomized_inputs(self, spark):
-        """window ≡ antijoin ≡ groupby on adversarial inputs: duplicate
-        rows, rows duplicated across sides, near-identical rows, NULLs.
-        Deterministic pseudo-random corpus (seeded) — any divergence
-        between the physical strategies is a correctness bug."""
+        """window ≡ groupby ≡ the reference plan (two left-anti joins on
+        the hash + union-distinct, db_compare_create_tmp_table_merge.sql)
+        on adversarial inputs: duplicate rows, rows duplicated across
+        sides, near-identical rows, NULLs. Deterministic pseudo-random
+        corpus (seeded) — any divergence between the physical strategies
+        is a correctness bug."""
         import random
 
         rng = random.Random(20240813)
@@ -182,7 +218,7 @@ class TestStrategyEquivalence:
         def result(strategy):
             return sorted(
                 (r.observed_in, r.k, str(r.s), r.v)
-                for r in diff_tables(df1, df2, strategy=strategy).diff.collect()
+                for r in _diff(df1, df2, strategy=strategy).diff.collect()
             )
 
         w, a, g = result("window"), result("antijoin"), result("groupby")

@@ -9353,7 +9353,7 @@ def q_sql_row_hash_diff(spark, sf_dir):
         "'db2' AS observed_in FROM _rh_side2"
     )
     # Symmetric difference via ONE grouped pass over the tagged union —
-    # two anti-joins would re-execute each side's Arrow UDF hash scan
+    # two anti-joins would re-execute each side's hash scan
     # (4 UDF passes instead of 2).
     sides = h1.unionByName(h2).groupBy("event_id", "ph").agg(
         F.collect_set("observed_in").alias("_s")

@@ -15,8 +15,8 @@ exact/MinHash-LSH/SimHash dedup, text statistics, quality scoring,
 heuristic language ID, and document fingerprints.
 
 Architecture is Spark-first: lazy DataFrame plans, Catalyst optimization,
-a single pandas UDF on the JSON-canonicalization slow path, and no driver-side
-row loops.
+a Java UDF for JSON canonicalization inside whole-stage codegen, and no
+driver-side row loops.
 """
 
 from lotad_spark.hashing import canonical_row_hash, with_row_hash

@@ -16,32 +16,44 @@ Engineering differences from the reference (documented, deliberate):
 
 * The reference digests with xxh64 via the ``xxhash`` package; that package
   is not available in this environment, so nested-structure digests use
-  ``hashlib.blake2b(digest_size=8)``. The *algorithm* (recursion, key
-  sorting, hash-of-sorted-element-hashes) is identical; only the digest
-  primitive differs. Digests are internal join keys — both sides of a diff
-  are hashed by this engine, so cross-engine digest parity is not required.
+  BLAKE2b with an 8-byte digest. The *algorithm* (recursion, key sorting,
+  hash-of-sorted-element-hashes) is identical; only the digest primitive
+  differs. Both sides of a diff are hashed by this engine, so cross-engine
+  digest parity is not required; digests persisted by
+  ``write_hash_snapshot`` must stay stable, so the digest never changes.
 * The reference hashes the whole row as one JSON document through a scalar
-  (row-at-a-time) Python UDF. Here the row hash is composed **column-wise**:
-  each column is reduced to a canonical string member (JVM-side for
-  primitives; an Arrow-vectorized pandas UDF only for JSON-bearing strings
-  and nested types), and the members feed Spark's codegen'd ``xxhash64``.
-  This keeps the hot path inside whole-stage codegen — the Python stage only
-  ever sees strings that actually look like JSON.
+  Python UDF. Here the row hash is composed **column-wise**: each column is
+  reduced to a canonical string member by JVM expressions, and the members
+  feed Spark's codegen'd ``xxhash64``. JSON-looking strings and nested
+  columns (via ``to_json``) go through ``lotad_spark/jvm/CanonicalHash.java``,
+  a Java UDF registered as ``get_row_hash`` that stays inside whole-stage
+  codegen: hashing starts no Python worker.
 
-Scale notes: the pandas UDF is Arrow-batched and receives NULL for non-JSON
-values (via a ``when`` guard), so a 100 TB table of primitives pays zero
-Python cost. The hash column is computed last in the plan so parquet
-pushdown/pruning below it is unaffected.
+``canonical_value_hash`` below is the Python statement of the semantics and
+the oracle the Java port is tested against (tests/test_hashing.py), down to
+orjson's number and escaping rules and Python's ``repr(float)``.
+
+The Java class is compiled once per machine on first use (``javac``, JDK 17+)
+into ``~/.cache/lotad_spark/<hash of source + Spark version>/`` and loaded
+into each session with ``ADD JAR``. The hash column is computed last in the
+plan so parquet pushdown/pruning below it is unaffected.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
+import threading
 import urllib.parse
+import weakref
+import zipfile
 from collections.abc import Iterable
+from pathlib import Path
 
 import orjson
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,8 +61,12 @@ from pyspark.sql import types as T
 HASH_COL = "hashed_row"
 PROVENANCE_COL = "observed_in"
 CANONICAL_NULL = "None"
+SQL_FUNCTION = "get_row_hash"
 
 _JSON_INIT_CHARS = ("{", "[", "%7B")
+_JAVA_SOURCE = Path(__file__).with_name("jvm") / "CanonicalHash.java"
+_JAVA_CLASS = "lotad_spark.jvm.CanonicalHash"
+_JAR_CACHE = Path.home() / ".cache" / "lotad_spark"
 
 
 def _digest(payload: bytes) -> str:
@@ -62,7 +78,9 @@ def canonical_value_hash(value: object) -> str:
     """Python reference implementation of the canonical hash for one value.
 
     Mirrors the recursion of the reference ``get_row_hash``
-    (lotad/utils.py:19-77). Used by the pandas UDF and directly by tests.
+    (lotad/utils.py:19-77). The engine runs the Java port
+    (``lotad_spark/jvm/CanonicalHash.java``); this function is the oracle
+    that port is tested against, and the DuckDB oracle's ``get_row_hash``.
     """
     if isinstance(value, str) and value.startswith(_JSON_INIT_CHARS):
         try:
@@ -80,10 +98,76 @@ def canonical_value_hash(value: object) -> str:
     return str(value)
 
 
-@F.pandas_udf(T.StringType())
-def _canon_json_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized canonicalizer for JSON-bearing string values."""
-    return s.map(canonical_value_hash, na_action="ignore")
+def canonical_hash_jar(spark_version: str) -> str:
+    """Path of the compiled ``CanonicalHash`` jar, building it on first use.
+
+    The cache key covers the Java source and the Spark version; the jar is
+    written to a temporary name and renamed into place, so concurrent
+    builders never expose a partial file."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    source = _JAVA_SOURCE.read_bytes()
+    key = hashlib.sha256(source + spark_version.encode()).hexdigest()[:16]
+    jar = _JAR_CACHE / key / "canonical-hash.jar"
+    if jar.exists():
+        return str(jar)
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            "the canonical row hash needs `javac` (a JDK 17+) to compile "
+            f"{_JAVA_SOURCE.name} once; none is on PATH and no cached jar "
+            f"exists at {jar}"
+        )
+    classpath = os.path.join(_find_spark_home(), "jars", "*")
+    with tempfile.TemporaryDirectory() as classes:
+        build = subprocess.run(
+            [javac, "-encoding", "UTF-8", "--release", "17", "-cp", classpath,
+             "-d", classes, str(_JAVA_SOURCE)],
+            capture_output=True, text=True,
+        )
+        if build.returncode != 0:
+            raise RuntimeError(f"javac failed on {_JAVA_SOURCE}:\n{build.stderr}")
+        jar.parent.mkdir(parents=True, exist_ok=True)
+        fd, partial = tempfile.mkstemp(dir=jar.parent, suffix=".part")
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for cls in sorted(Path(classes).rglob("*.class")):
+                zf.write(cls, cls.relative_to(classes).as_posix())
+        os.replace(partial, jar)
+    return str(jar)
+
+
+_registered = weakref.WeakSet()
+_register_lock = threading.Lock()
+
+
+def register_sql_functions(spark) -> None:
+    """Register ``get_row_hash`` in ``spark`` (once per session).
+
+    Reference parity: the UDF is registered into every connection so custom
+    queries can call it (lotad/connection.py:133,247; queries use
+    ``get_row_hash(TO_JSON(t)::VARCHAR)``). Spark SQL shape:
+    ``get_row_hash(to_json(struct(*)))``. The function takes the JSON
+    rendering of a value/row and returns the canonical digest of its
+    recursive canonicalization, identical to ``canonical_value_hash``
+    (non-JSON strings come back unchanged, NULL stays NULL). That is the
+    reference's whole-row scalar (one digest over the sorted-key document),
+    which differs from the column-wise composition ``with_row_hash`` uses
+    on the diff hot path; the hot path calls the same function per
+    JSON-bearing member. Any session works, not only ones from
+    ``get_spark``: the jar is added with ``ADD JAR``."""
+    if spark in _registered:
+        return
+    with _register_lock:
+        if spark in _registered:
+            return
+        jar = canonical_hash_jar(spark.version)
+        spark.sql(f"ADD JAR '{jar}'")
+        spark.udf.registerJavaFunction(SQL_FUNCTION, _JAVA_CLASS, T.StringType())
+        _registered.add(spark)
+
+
+def _canonical(col: Column) -> Column:
+    return F.call_function(SQL_FUNCTION, col)
 
 
 def _is_nested(dt: T.DataType) -> bool:
@@ -95,24 +179,25 @@ def canonical_member(
 ) -> Column:
     """Reduce one column to its canonical string member for row hashing.
 
+    Needs ``get_row_hash`` registered in the session that resolves it
+    (``canonical_row_hash`` does that).
+
     * nested types → ``to_json`` then canonical JSON digest;
     * strings → canonical JSON digest only when the value looks like JSON
-      (the pandas UDF receives NULL otherwise — no Python cost for plain
-      strings); ``json_strings=False`` renders them as-is, keeping a
-      JSON-free row hash entirely inside whole-stage codegen;
+      (a JVM ``when`` guard: the UDF never sees plain strings);
+      ``json_strings=False`` renders them as-is;
     * binary → base64 rendering;
     * everything else → string cast; NULL → ``"None"`` (reference parity:
       ``str(None)``).
     """
     if _is_nested(dtype):
-        col = F.to_json(col)
-        return F.coalesce(_canon_json_udf(col), F.lit(CANONICAL_NULL))
+        return F.coalesce(_canonical(F.to_json(col)), F.lit(CANONICAL_NULL))
     if json_strings and isinstance(dtype, T.StringType):
         looks_json = (
             col.startswith("{") | col.startswith("[") | col.startswith("%7B")
         )
-        guarded = F.when(looks_json, col)
-        return F.coalesce(_canon_json_udf(guarded), col, F.lit(CANONICAL_NULL))
+        member = F.when(looks_json, _canonical(col)).otherwise(col)
+        return F.coalesce(member, F.lit(CANONICAL_NULL))
     if isinstance(dtype, T.BinaryType):
         return F.coalesce(F.base64(col), F.lit(CANONICAL_NULL))
     return _scalar_member(col, dtype)
@@ -146,31 +231,17 @@ def canonical_row_hash(
 ) -> Column:
     """Canonical hash over ``columns`` (sorted by name) as a hex-string Column.
 
-    ``json_strings=False`` selects the pure-JVM fast path for string columns
-    (skip the looks-like-JSON canonicalization entirely).
+    ``json_strings=False`` renders string columns as-is (no looks-like-JSON
+    canonicalization), for callers that know their strings embed no JSON.
+    Registers ``get_row_hash`` in ``df``'s session if needed.
     """
+    register_sql_functions(df.sparkSession)
     fields = {f.name: f.dataType for f in df.schema.fields}
     cols = sorted(columns) if columns is not None else sorted(fields)
     members = [
         canonical_member(F.col(f"`{c}`"), fields[c], json_strings) for c in cols
     ]
     return F.lower(F.hex(F.xxhash64(*members)))
-
-
-def register_sql_functions(spark) -> None:
-    """Register ``get_row_hash`` for SQL use (reference parity: the UDF is
-    registered into every connection so custom queries can call it,
-    lotad/connection.py:133,247 / queries use
-    ``get_row_hash(TO_JSON(t)::VARCHAR)``).
-
-    Spark SQL shape: ``get_row_hash(to_json(struct(*)))``. The function takes
-    the JSON rendering of a value/row and returns the canonical digest of
-    its recursive canonicalization — identical semantics to the reference's
-    whole-row scalar UDF (one digest over the sorted-key document), which
-    differs from the column-wise composition ``with_row_hash`` uses on the
-    diff hot path. Registration is idempotent.
-    """
-    spark.udf.register("get_row_hash", _canon_json_udf)
 
 
 def with_row_hash(

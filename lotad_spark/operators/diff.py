@@ -126,74 +126,6 @@ AUTO_PROBE_FRACTION = 0.02
 # Sampled duplicate density above which auto routes to groupby.
 AUTO_DUP_DENSITY_THRESHOLD = 0.10
 
-# --- JSON-presence probe (r19): drop the Python hash stage when provably
-# safe -------------------------------------------------------------------
-# The canonical row hash routes string columns through an Arrow-batched
-# pandas UDF ONLY for values that look like JSON ('{', '[', '%7B'
-# prefixes — hashing.canonical_member). The per-row guard already makes
-# non-JSON values free on the Python side, but the ArrowEvalPython node
-# itself still costs a boundary crossing + a whole-stage-codegen break
-# per scan pass — isolated on the 6M-row sf1 lineitem (noop sink,
-# alternating reps, steal-free box): 0.93 s/pass with the stage vs
-# 0.57 s/pass pure-JVM, i.e. ~0.72 s of removable Python-boundary cost
-# per diff (two hashed sides), while the probe — ONE aggregate job,
-# max(any string column starts with a JSON prefix) over the union of
-# both sides, scanning only the string columns — costs ~0.32 s there.
-# Both terms grow linearly with data, but the probe reads only the
-# string columns once where the Arrow stage taxes every hashed pass, so
-# from sf1-scale upward the probe wins ~2.4× on the removable term and
-# keeps winning at 100 TB. The fast path is bit-identical when the
-# probe proves no JSON prefix exists: for such strings the guarded
-# member reduces to coalesce(col, 'None'), exactly the fast member
-# (hashing.canonical_member with json_strings on vs off), so the probe can
-# never change a result, only the physical plan. Below the floor the
-# probe's FIXED job cost (~0.15 s) exceeds the Arrow saving (r18 and
-# r19 both measured the sf0.1 per-table A/B within
-# noise-to-slightly-negative), so small inputs keep the unconditional
-# Arrow plan — 64 MB combined keeps every sf0.1 driver table on the
-# unchanged plan while sf1's lineitem (281 MB combined) and anything
-# production-sized route through the probe. A table that DOES carry
-# JSON pays the probe and keeps the Arrow stage — one extra
-# string-column scan, the price of not knowing; callers that know
-# their data pass json_strings=False.
-JSON_PROBE_MIN_BYTES = 64 << 20
-
-
-def _strings_bear_json(n1: DataFrame, n2: DataFrame, cols: list[str]) -> bool:
-    """True when ANY value of ANY shared string column on either side
-    starts with a JSON prefix ('{', '[', '%7B') — i.e. when the canonical
-    hash's Python canonicalization stage can matter. One scan-only
-    aggregate job over the string columns only (column pruning keeps
-    non-string columns out of the scan). Nested columns were already
-    rendered to JSON text by ``normalize_for_diff``, so they carry the
-    '{'/'[' prefix and correctly keep the Arrow path."""
-    fields = {f.name: f.dataType for f in n1.schema.fields}
-    scols = [c for c in cols if isinstance(fields[c], T.StringType)]
-    if not scols:
-        return False
-
-    def any_json(df: DataFrame):
-        cond = None
-        for c in scols:
-            col = _quoted(c)
-            one = F.coalesce(
-                col.startswith("{")
-                | col.startswith("[")
-                | col.startswith("%7B"),
-                F.lit(False),
-            )
-            cond = one if cond is None else (cond | one)
-        return df.select(cond.alias("_any_json"))
-
-    row = (
-        any_json(n1)
-        .unionByName(any_json(n2))
-        .agg(F.max("_any_json").alias("m"))
-        .collect()[0]
-    )
-    return bool(row["m"])
-
-
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Optimizer-estimated relation size (driver-side, runs NO job).
 
@@ -218,8 +150,7 @@ def _route_strategy(n1: DataFrame, n2: DataFrame, cols: list[str]) -> str:
     # a 2-row exchange). The probe key is xxhash64 over the normalized
     # columns, NOT the canonical row hash: duplicate-density only needs
     # row identity, and heavy duplicate keys are byte-identical rows, so
-    # the pure-JVM codegen hash suffices — no JSON canonicalization, no
-    # Arrow/pandas UDF stage (measured ~2× the probe cost at sf0.1).
+    # plain xxhash64 suffices — no JSON canonicalization.
     # Rows that differ only in JSON formatting hash apart here and
     # UNDER-count density — a bias toward `window`, i.e. toward the
     # status-quo plan, never toward a wrong answer. Density is measured
@@ -310,9 +241,8 @@ class DiffResult:
     db2_id: str
     table_name: str | None = None
     strategy_used: str | None = None  # resolved strategy ("auto" routing visible here)
-    # Which hash path the diff compiled to: "arrow" (JSON-capable Python
-    # canonicalization stage) or "fast" (pure-JVM — caller opt-out or the
-    # JSON-presence probe proved the input JSON-free).
+    # Which hash the diff compiled to: "canonical" (JSON-looking strings
+    # canonicalized) or "fast" (the caller passed json_strings=False).
     hash_path: str | None = None
     _counts: dict | None = field(default=None, repr=False)
 
@@ -359,13 +289,10 @@ def diff_tables(
 ) -> DiffResult:
     """Row-level drift between two tables (the engine's core operator, J1+SO1).
 
-    ``json_strings=False`` keeps string columns out of the Python
-    canonicalization path (pure-JVM hash) when the source is known not to
-    embed JSON in strings. With the default ``json_strings=True``, inputs
-    above ``JSON_PROBE_MIN_BYTES`` combined run a one-job JSON-presence
-    probe first and take the pure-JVM path automatically when provably
-    safe (bit-identical results; ``DiffResult.hash_path`` records the
-    route).
+    ``json_strings=False`` hashes string columns as-is, skipping JSON
+    canonicalization, when the source is known not to embed JSON in
+    strings (``DiffResult.hash_path`` reads ``"fast"``); values that look
+    like JSON would then drift on formatting alone.
 
     Skew: the shuffle key is the content hash, so a dominant key means
     IDENTICAL duplicate rows. Identical rows compress to ~nothing in the
@@ -398,18 +325,6 @@ def diff_tables(
             f"diff_tables: input data columns collide with reserved metadata "
             f"columns {sorted(reserved)}; rename them before diffing"
         )
-    # Probe-gated JSON-free fast path (r19, see JSON_PROBE_MIN_BYTES):
-    # above the size floor, one scan-only job proves whether any string
-    # value can reach the Python canonicalizer; if none can, the whole
-    # row hash stays inside whole-stage codegen. Results are identical
-    # by construction — only the physical plan changes.
-    if json_strings:
-        sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
-        if (
-            all(s is not None for s in sizes)
-            and sum(sizes) >= JSON_PROBE_MIN_BYTES
-        ):
-            json_strings = _strings_bear_json(n1, n2, cols)
     t1 = _tag(n1, db1_id, cols, json_strings)
     t2 = _tag(n2, db2_id, cols, json_strings)
 
@@ -471,5 +386,5 @@ def diff_tables(
         db2_id=db2_id,
         table_name=table_name,
         strategy_used=strategy,
-        hash_path="arrow" if json_strings else "fast",
+        hash_path="canonical" if json_strings else "fast",
     )

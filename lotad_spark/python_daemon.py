@@ -3,9 +3,9 @@
 Spark forks one Python worker per concurrently-running Python-stage
 task. With the stock ``pyspark.daemon`` every FRESH fork pays the
 pandas/pyarrow import (~0.6 s single-threaded on this box) inside the
-task's critical path — and a burst of concurrent queries (compare_all's
-six table threads; any registry sweep section with overlapping Arrow
-stages) forks dozens of workers at once, so the imports contend for CPU
+task's critical path — and a burst of concurrent queries (the
+wizard's ``mapInPandas`` sweeps; any registry sweep section with
+overlapping Arrow stages) forks dozens of workers at once, so the imports contend for CPU
 and stretch to many seconds each: thread dumps during the stall show
 executor tasks parked in ``writeNextBatchToArrowStream`` waiting on
 brand-new workers while every table finishes in lockstep (measured

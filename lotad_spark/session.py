@@ -1,10 +1,11 @@
 """SparkSession factory tuned for the drift-diff workload.
 
 Local-mode defaults mirror what we would set fleet-wide on a real cluster:
-AQE on (runtime coalescing + skew-join handling), Arrow on (the canonical
-hash UDF is Arrow-vectorized), shuffle partitions sized to cores instead of
-the 200 default, UTC session timezone so timestamp comparisons against
-external engines (DuckDB oracle) are stable.
+AQE on (runtime coalescing + skew-join handling), Arrow on (the wizard's
+and the pipeline's ``mapInPandas`` stages), shuffle partitions sized to
+cores instead of the 200 default, UTC session timezone so timestamp
+comparisons against external engines (DuckDB oracle) are stable. Every
+session gets the Java ``get_row_hash`` UDF (``hashing.register_sql_functions``).
 """
 
 from __future__ import annotations
@@ -190,9 +191,9 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # SQL-callable canonical hash, mirroring the reference's per-connection
-    # UDF registration (lotad/connection.py:133,247) so custom queries can
-    # call get_row_hash(to_json(struct(*))).
+    # SQL-callable canonical hash (a Java UDF), mirroring the reference's
+    # per-connection UDF registration (lotad/connection.py:133,247) so
+    # custom queries can call get_row_hash(to_json(struct(*))).
     from lotad_spark.hashing import register_sql_functions
 
     register_sql_functions(spark)

@@ -41,48 +41,75 @@ class TestDiffPlans:
         assert "BatchEvalPython" not in plan  # never row-at-a-time
 
 
-class TestJsonProbeFastPath:
-    """r19: above JSON_PROBE_MIN_BYTES the default path runs a scan-only
-    JSON-presence probe and compiles provably JSON-free inputs to the
-    pure-JVM hash — the ArrowEvalPython node must vanish from the plan
-    while the diff rows stay identical."""
+class TestCanonicalHashPlans:
+    """The default diff hashes JSON-looking strings and nested columns
+    through the Java get_row_hash UDF: formatting-only JSON differences
+    cancel, and the executed plan carries no Python stage."""
 
-    def test_json_free_input_routes_fast(self, customer, monkeypatch):
-        import lotad_spark.operators.diff as diff_mod
-
-        monkeypatch.setattr(diff_mod, "JSON_PROBE_MIN_BYTES", 0)
-        r = diff_tables(customer, customer.filter("c_custkey != 5"))
-        assert r.hash_path == "fast"
-        assert "EvalPython" not in _plan(r.diff)
-        # identical rows to the unconditional Arrow plan
-        monkeypatch.setattr(diff_mod, "JSON_PROBE_MIN_BYTES", 1 << 60)
-        arrow = diff_tables(customer, customer.filter("c_custkey != 5"))
-        assert arrow.hash_path == "arrow"
-        assert sorted(map(tuple, r.diff.collect())) == sorted(
-            map(tuple, arrow.diff.collect())
-        )
-
-    def test_json_bearing_input_keeps_arrow(self, spark, monkeypatch):
-        import lotad_spark.operators.diff as diff_mod
-
-        monkeypatch.setattr(diff_mod, "JSON_PROBE_MIN_BYTES", 0)
+    @staticmethod
+    def _sides(spark):
+        schema = "id bigint, payload string, st struct<a:int,b:string>, tags array<string>"
         d1 = spark.createDataFrame(
-            [(1, '{"a":1,"b":2}'), (2, "plain")], "id bigint, payload string"
+            [(1, '{"a":1,"b":[1,2]}', (1, "x"), ["p", "q"]), (2, "plain", None, [])],
+            schema,
         )
         d2 = spark.createDataFrame(
-            [(1, '{ "b": 2, "a": 1 }'), (2, "plain")],
-            "id bigint, payload string",
+            [(1, '{ "b": [2, 1], "a": 1 }', (1, "x"), ["q", "p"]), (2, "plain", None, [])],
+            schema,
         )
-        r = diff_tables(d1, d2)
-        assert r.hash_path == "arrow"
-        assert "ArrowEvalPython" in _plan(r.diff)
-        # formatting-only JSON differences still cancel on the probed path
+        return d1, d2
+
+    def test_reformatted_json_cancels(self, spark):
+        r = diff_tables(*self._sides(spark))
+        assert r.hash_path == "canonical"
+        # formatting-only JSON differences cancel on the default path
         assert r.diff.count() == 0
 
-    def test_below_floor_skips_probe(self, customer):
-        # tiny input, default floor: no probe job, unconditional Arrow
-        r = diff_tables(customer, customer)
-        assert r.hash_path == "arrow"
+    def test_default_plan_has_no_python(self, spark):
+        d1, d2 = self._sides(spark)
+        d2 = d2.withColumn(
+            "payload",
+            F.when(F.col("id") == 1, F.lit('{"a": 2}')).otherwise(F.col("payload")),
+        )
+        r = diff_tables(d1, d2)
+        plan = _plan(r.diff)
+        assert "EvalPython" not in plan
+        assert "get_row_hash" in plan  # the Java UDF does the canonicalizing
+        assert r.diff.count() == 2
+
+    def test_plain_session_runs_canonical_hash(self, tmp_path):
+        """A session built with SparkSession.builder, not get_spark, gets
+        the Java UDF on first use: diff_tables cancels reformatted JSON
+        and SQL get_row_hash resolves afterwards."""
+        import os
+        import subprocess
+        import sys
+        import textwrap
+
+        script = tmp_path / "plain_session.py"
+        script.write_text(textwrap.dedent("""
+            from pyspark.sql import SparkSession
+            from lotad_spark.hashing import canonical_value_hash
+            from lotad_spark.operators.diff import diff_tables
+
+            spark = (SparkSession.builder.master("local[2]")
+                     .appName("plain-session").getOrCreate())
+            d1 = spark.createDataFrame([(1, '{"a":1,"b":2}')], "id bigint, j string")
+            d2 = spark.createDataFrame([(1, '{ "b": 2, "a": 1 }')], "id bigint, j string")
+            print("DIFF_ROWS", diff_tables(d1, d2).diff.count())
+            got = spark.sql("SELECT get_row_hash('[2, 1]') AS h").collect()[0].h
+            print("SQL_OK", got == canonical_value_hash("[1, 2]"))
+            spark.stop()
+        """))
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, PYTHONPATH=repo)
+        out = subprocess.run(
+            [sys.executable, str(script)], env=env, cwd=tmp_path,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert "DIFF_ROWS 0" in out.stdout
+        assert "SQL_OK True" in out.stdout
 
 
 class TestGroupbyDiffPlans:

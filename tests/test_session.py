@@ -38,7 +38,10 @@ class TestDefaultDriverMem:
         assert self._mem(8 * GB) == "4g"
 
     def test_huge_cgroup_clamps_at_16g(self):
-        assert self._mem(1024 * GB) == "16g"
+        # Hermetic: the host's own MemAvailable would cap the heap first.
+        meminfo = mock.mock_open(read_data=f"MemAvailable: {2048 * GB // 1024} kB\n")
+        with mock.patch.object(session, "open", meminfo, create=True):
+            assert self._mem(1024 * GB) == "16g"
 
     def test_unlimited_sentinels_ignored(self):
         # cgroup files report ~2^63 when unlimited; the resolver must

@@ -131,12 +131,10 @@ def _sym_except(cols: str, t1: str, t2: str) -> str:
 # ---------------------------------------------------------------------------
 
 def q_diff_deleted_rows(spark, sf_dir):
-    """Runs the GROUPBY strategy (the single-shuffle scale path) — the
-    r10 registry consolidation merged the old diff_deleted_rows /
-    diff_deleted_rows_groupby pair into this one row: every OTHER diff
-    row rides the window/default face (the auto router stays below the
-    probe floor at driver scale), so this row keeps the groupby plan
-    driver-checked without spending a second slot on the same query."""
+    """Runs the GROUPBY strategy, the plan ``auto`` picks for inputs of
+    ``WINDOW_MAX_BYTES`` (16 MB) or more. Every OTHER diff row takes the
+    default route, which stays below that size on the sf0.01 oracle data
+    and runs ``window``, so this row keeps the groupby plan oracle-checked."""
     r = diff_tables(
         _t(spark, sf_dir, "customer"), _customer_deleted(spark, sf_dir),
         db1_id="db1", db2_id="db2", strategy="groupby",

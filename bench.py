@@ -28,7 +28,12 @@ from lotad_spark.benchmarks.fixtures import (  # noqa: E402
     RELATIONAL_TABLES,
     build_parquet_variants,
 )
-from lotad_spark.operators.diff import diff_tables  # noqa: E402
+from lotad_spark.operators.diff import (  # noqa: E402
+    WINDOW_MAX_BYTES,
+    _plan_size_bytes,
+    diff_tables,
+    normalize_for_diff,
+)
 from lotad_spark.session import get_spark  # noqa: E402
 from lotad_spark.sources.memory import bounded_local_df  # noqa: E402
 from lotad_spark.sources.parquet import ParquetDatabase  # noqa: E402
@@ -135,10 +140,10 @@ def main() -> None:
 
     # r19: warm the orchestrator-only cold paths first (parquet WRITE
     # committer classes, the observe/accumulator sink, the report
-    # renderer, the router-probe codegen) on the two tiny tables — the
-    # diff warm-up above exercises none of them, so the first
-    # compare_all call used to pay 8-10 s of first-call JIT that no
-    # steady-state deployment pays (r18 sweep read 11-16 s single-shot
+    # renderer) on the two tiny tables — the diff warm-up above
+    # exercises none of them, so the first compare_all call used to
+    # pay 8-10 s of first-call JIT that no steady-state deployment
+    # pays (r18 sweep read 11-16 s single-shot
     # vs a 4.4-5.7 s warm floor). Untimed, ~1 s; the timed run still
     # re-executes every diff, write, and summary from scratch.
     out_dir = tempfile.mkdtemp(prefix="lotad_bench_warm_")
@@ -243,15 +248,15 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         queries[f"diff_skewed_{strat}"] = round(best, 3)
     # The default must route the dup-heavy fixture to the map-side-combine
-    # plan (probe cost included in diff_skewed_auto above) — but only when
-    # the fixture clears the router's size floor (AUTO_PROBE_MIN_BYTES):
-    # below it `auto` deliberately skips the probe and picks window, so
-    # at tiny smoke SFs (sf0.001/0.01) the gate would fail on the
-    # router's CORRECT small-input behavior. 200k rows/side is well past
-    # the floor for this 16-column fixture (the driver's sf0.1 fixture is
-    # ~750k/side and routed groupby, BASELINE.md r10 post-change bench).
+    # plan whenever the fixture reaches the router's size floor. Below it
+    # `auto` picks window by design (the tiny smoke SFs), so the gate
+    # applies the router's own condition: the optimizer size estimates of
+    # both normalized sides, summed, against WINDOW_MAX_BYTES.
+    n1, n2, _ = normalize_for_diff(sk1, sk2)
+    sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
+    over_floor = None in sizes or sum(sizes) >= WINDOW_MAX_BYTES
     routed = diff_tables(sk1, sk2, db1_id="db1", db2_id="db2").strategy_used
-    if sk1.count() >= 200_000 and routed != "groupby":
+    if over_floor and routed != "groupby":
         print(f"AUTO ROUTE MISMATCH on skew fixture: {routed}", file=sys.stderr)
         sys.exit(1)
 

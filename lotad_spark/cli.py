@@ -16,7 +16,7 @@ from datetime import datetime
 
 import click
 
-from lotad_spark.config import Config, comparator_from_config
+from lotad_spark.config import Config, comparator_from_config, database_from_config
 from lotad_spark.sources.memory import bounded_local_df
 from lotad_spark.session import get_spark
 
@@ -66,12 +66,12 @@ def run(
 @click.option("--table", "-t", "tables", multiple=True)
 def suggest_ignore_columns_cmd(db1_path, db2_path, tables) -> None:
     """Suggest per-table ignore_column rules (zero value overlap)."""
-    from lotad_spark.sources.parquet import ParquetDatabase
     from lotad_spark.wizard import suggest_ignore_columns
 
     spark = get_spark("lotad_spark_wizard")
-    db1 = ParquetDatabase(spark, db1_path, "db1")
-    db2 = ParquetDatabase(spark, db2_path, "db2")
+    config = Config(db1_path=db1_path, db2_path=db2_path)
+    db1 = database_from_config(spark, config, "db1")
+    db2 = database_from_config(spark, config, "db2")
     names = list(tables) or sorted(
         set(db1.list_tables()) & set(db2.list_tables())
     )

@@ -37,7 +37,7 @@ from lotad_spark.drift import (
     generate_missing_table_drift,
     generate_table_schema_drift,
 )
-from lotad_spark.operators.diff import diff_tables
+from lotad_spark.operators.diff import NoComparableColumns, diff_tables
 from lotad_spark.sources.parquet import schema_types
 
 # Driver threads submitting per-table job chains. Round-19 sweep (after
@@ -138,7 +138,8 @@ class DatabaseComparator:
         Spark face of the same error class; FileNotFoundError is what the
         parquet source's footer probe raises for a listed file that is
         gone. Schema drift already computed survives a later data-drift
-        failure."""
+        failure. A table whose ignore rules leave no column to compare
+        keeps its schema drift and skips its data drift."""
         schema_drift: list[TableSchemaDrift] = []
         try:
             df1, df2 = self.db1.table(table_name), self.db2.table(table_name)
@@ -154,6 +155,10 @@ class DatabaseComparator:
         except (AnalysisException, FileNotFoundError) as err:
             logging.getLogger(__name__).warning(
                 "Failed to process table %s: %s", table_name, err
+            )
+        except NoComparableColumns as err:
+            logging.getLogger(__name__).warning(
+                "Skipping data drift of table %s: %s", table_name, err
             )
         return schema_drift, None
 

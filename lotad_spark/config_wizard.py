@@ -26,7 +26,7 @@ import os
 
 import click
 
-from lotad_spark.config import Config, TableRule, TableRuleType
+from lotad_spark.config import Config, TableRule, TableRuleType, database_from_config
 
 
 MENU = [
@@ -72,12 +72,11 @@ class ConfigWizard:
         """Probe value overlap per shared table and record zero-overlap
         columns as ignore_column rules (reference config_wizard.py:101-147),
         one batched Spark pass per table."""
-        from lotad_spark.sources.parquet import ParquetDatabase
         from lotad_spark.wizard import suggest_ignore_columns
 
         spark = self._spark_session()
-        db1 = ParquetDatabase(spark, self.config.db1_path, "db1")
-        db2 = ParquetDatabase(spark, self.config.db2_path, "db2")
+        db1 = database_from_config(spark, self.config, "db1")
+        db2 = database_from_config(spark, self.config, "db2")
         tables = sorted(set(db1.list_tables()) & set(db2.list_tables()))
         if self.config.target_tables:
             tables = [t for t in tables if t in set(self.config.target_tables)]

@@ -13,8 +13,8 @@ lotad/db_compare.py:266-302):
    entirely;
 5. deduplicating UNION of the two branches.
 
-Spark-first execution strategies (selectable; ``auto`` ROUTES between
-``window`` and ``groupby`` with a duplicate-density probe, see below):
+Spark-first execution strategies (selectable; ``auto`` picks one by
+input size, see below):
 
 * ``window`` — ONE shuffle of the unioned, tagged rows by hash;
   a hash-partitioned window computes ``min(side) == max(side)`` per hash
@@ -27,66 +27,34 @@ Spark-first execution strategies (selectable; ``auto`` ROUTES between
   re-shuffles the diff output for the distinct). Output is identical to
   that plan: every raw variant canonicalizing to a surviving hash is
   kept, then exact duplicates collapse (tests/test_diff.py keeps the
-  reference plan as the equivalence oracle). Measured ~35% faster across
-  the bench tables at sf0.1.
-* ``groupby`` (opt-in, for scale) — two phases over HASH-ONLY projections:
-  (1) union the two (hash, provenance) projections and aggregate
-  ``collect_set(observed_in)`` per hash; hashes seen on exactly one side
-  survive; (2) LEFT SEMI join the tagged inputs against the surviving
-  hashes. The survivor aggregation shuffles ~40 bytes/row (hash + side)
-  instead of full rows — at 100 TB that is the difference between a
-  full-data shuffle and a metadata shuffle — and since real drift is
-  small relative to the inputs, AQE turns phase 2 into a broadcast
-  semi-join (no shuffle of full rows at all). Output is IDENTICAL to
-  ``window`` (every raw variant that canonicalizes to a surviving hash
-  is kept, then exact-duplicate rows collapse), so the two strategies
-  are interchangeable; only the physical plan differs.
+  reference plan as the equivalence oracle).
+* ``groupby`` — two phases: (1) union the two (hash, side number)
+  projections and aggregate ``min``/``max`` of the side per hash; hashes
+  seen on exactly one side survive; (2) LEFT SEMI join the tagged inputs
+  against the surviving hashes. The survivor aggregation shuffles
+  ~40 bytes/row (hash + side) instead of full rows, and its map-side
+  partial aggregation collapses duplicate rows before the exchange. Each
+  phase scans and hashes both inputs, so on duplicate-free input
+  ``groupby`` does more work than ``window``. Phase 2's plan follows the
+  survivors' size estimate:
+  under the broadcast threshold it is a broadcast semi-join and full rows
+  are not shuffled for it; over it (e.g. a 40 MB-a-side lineitem with
+  25% drift) it is a shuffled join on the hash, so each side's full rows
+  are shuffled once, and AQE switches to a broadcast semi-join only
+  after that shuffle has been written. Output is IDENTICAL to
+  ``window``; only the physical plan differs.
 
-  ``window`` shuffles full rows once and sorts them by hash inside each
-  partition; at 100 TB the metadata-only ``groupby`` shuffle is still the
-  right physical plan, which is why both exist.
-
-  An earlier formulation carried all columns through the aggregate as
-  ``min(struct(*cols))`` + ``collect_set``; over near-unique hash keys
-  map-side partial aggregation is pure overhead and the full-row hash
-  aggregate measured 3.8× slower than the reference anti-join plan at
-  sf0.1 (BENCH_r03).
-  The hash-only + semi-join-back shape restores the scale advantage.
-
-``auto`` (default) — routes between the two with a duplicate-density
-probe. The hazard it guards against: a dominant content hash means
-IDENTICAL duplicate rows, which compress to ~nothing in the shuffle, so
-AQE's *byte-based* skew detection provably cannot fire
-(tests/test_plans.py::TestSkewedDiffPlans) and the ``window`` strategy
-lands every copy in ONE row-count-bound partition — a straggler/OOM at
-production scale even though at bench scale (~350k rows in the skewed
-task) local wall-clock still favors ``window`` (BASELINE.md r10 sweep:
-the r9 6.79 s skew number was load; idle it is 1.61 s vs groupby's
-2.48 s). Local timing therefore CANNOT rank the strategies for scale;
-the router keys on the plan-shape hazard instead:
-
-1. if the combined optimizer-estimated input size is under
-   ``AUTO_PROBE_MIN_BYTES`` (driver-side stat, no job), any plan is
-   safe — pick ``window`` (single exchange, fastest small-case);
-2. otherwise run a one-job probe: Bernoulli-sample
-   ``AUTO_PROBE_FRACTION`` of each (normalized) side BEFORE hashing,
-   xxhash64 only the sample (pure JVM — density needs row identity,
-   not the canonical hash), and measure duplicate density
-   ``1 - approx_distinct/count`` over the sampled hashes PER SIDE
-   (union-level density would count every cross-side matched pair as
-   a duplicate — +f/2 bias on uniform data). Row-level sampling makes
-   the estimator blind to small duplicate groups (a pair survives
-   sampling with p=f²) but sharp for heavy keys (a key with ≥ ~1/f
-   copies contributes its full row share) — exactly the keys that
-   break the window plan. Max side density above
-   ``AUTO_DUP_DENSITY_THRESHOLD`` routes to ``groupby`` (map-side
-   combine absorbs duplicates before the exchange), else ``window``.
-
-The probe costs one scan-only job (no shuffle; hashes computed for the
-sampled fraction only) — bounded overhead against an unbounded
-straggler. Callers that know their data (or need a fully lazy plan —
-the probe runs a job at diff_tables() call time) pass an explicit
-strategy.
+``auto`` (default) picks ``window`` when the two inputs' combined
+optimizer-estimated size (a driver-side statistic, no job) is under
+``WINDOW_MAX_BYTES``, and ``groupby`` otherwise, including when either
+estimate is unavailable. Small inputs get the single-exchange plan.
+Large inputs get the plan that survives duplicate-key skew: a dominant
+content hash means IDENTICAL duplicate rows, which compress to ~nothing
+in the shuffle, so AQE's byte-based skew detection cannot split them
+(tests/test_plans.py::TestSkewedDiffPlans) and ``window`` would land
+every copy in one row-count-bound partition. ``diff_tables`` runs no
+Spark job for any strategy; callers that know their data pass an
+explicit strategy.
 """
 
 from __future__ import annotations
@@ -107,85 +75,35 @@ from lotad_spark.hashing import (
 from lotad_spark.sources.parquet import DATE_TYPES
 
 
+class NoComparableColumns(ValueError):
+    """The two inputs share no column left to compare."""
+
+
 def _quoted(c: str) -> F.Column:
     return F.col(f"`{c}`")
 
 
-# --- auto-strategy routing (duplicate-density probe) ---------------------
-# Below this combined (both sides) optimizer-estimated input size, skip the
-# probe entirely: a skewed window partition is row-count-bound, and at this
-# size even a fully-duplicated table fits one task comfortably. (The
-# optimizer stat runs ~0.6× the on-disk parquet size after column-pruning
-# scaling — the floor is calibrated against the stat, not `du`.)
-AUTO_PROBE_MIN_BYTES = 16 << 20
-# Row-level Bernoulli sample fraction for the probe. Detection threshold
-# scales as ~1/fraction copies per key: 0.02 → keys with ≳50 copies are
-# seen at their true row share, smaller duplicate groups are invisible
-# (and harmless to the window plan).
-AUTO_PROBE_FRACTION = 0.02
-# Sampled duplicate density above which auto routes to groupby.
-AUTO_DUP_DENSITY_THRESHOLD = 0.10
+# Below this combined (both sides) optimizer-estimated input size, ``auto``
+# picks ``window``; at or above it, ``groupby``. A skewed window partition
+# is row-count-bound, and at this size even a fully-duplicated table fits
+# one task comfortably. (The optimizer stat runs ~0.6× the on-disk parquet
+# size after column-pruning scaling, so the floor is calibrated against
+# the stat, not `du`.)
+WINDOW_MAX_BYTES = 16 << 20
+
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Optimizer-estimated relation size (driver-side, runs NO job).
 
     For file sources this is the sum of file sizes; for local relations an
     estimate from row count × row width. None when the JVM stat is
-    unavailable (unexpected — treated as "large" by the router so the
-    probe still runs)."""
+    unavailable (unexpected; the router then treats the input as large)."""
     try:
         return int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
         return None
-
-
-def _route_strategy(n1: DataFrame, n2: DataFrame, cols: list[str]) -> str:
-    """Pick window vs groupby for ``strategy="auto"`` (see module docs)."""
-    sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
-    if all(s is not None for s in sizes) and sum(sizes) < AUTO_PROBE_MIN_BYTES:
-        return "window"
-    # One scan-only job (the per-side agg groups on a 2-value side tag —
-    # a 2-row exchange). The probe key is xxhash64 over the normalized
-    # columns, NOT the canonical row hash: duplicate-density only needs
-    # row identity, and heavy duplicate keys are byte-identical rows, so
-    # plain xxhash64 suffices — no JSON canonicalization.
-    # Rows that differ only in JSON formatting hash apart here and
-    # UNDER-count density — a bias toward `window`, i.e. toward the
-    # status-quo plan, never toward a wrong answer. Density is measured
-    # PER SIDE: in a no-drift table every hash appears once per side, so
-    # a union-level density would count each cross-side matched pair as
-    # a duplicate (+f/2 bias on uniform data); within one side only
-    # genuine duplicate rows register. Sampling sits below the hash in
-    # the plan, so only the sampled fraction is hashed.
-    _pk = "_probe_hash"
-    _ps = "_probe_side"
-    probe = (
-        n1.sample(AUTO_PROBE_FRACTION, seed=7)
-        .select(
-            F.xxhash64(*[_quoted(c) for c in cols]).alias(_pk),
-            F.lit("1").alias(_ps),
-        )
-        .unionByName(
-            n2.sample(AUTO_PROBE_FRACTION, seed=7).select(
-                F.xxhash64(*[_quoted(c) for c in cols]).alias(_pk),
-                F.lit("2").alias(_ps),
-            )
-        )
-    )
-    rows = (
-        probe.groupBy(_ps)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(_pk, 0.02).alias("d"),
-        )
-        .collect()
-    )
-    density = max(
-        (1.0 - r["d"] / r["n"] for r in rows if r["n"]), default=0.0
-    )
-    return "groupby" if density > AUTO_DUP_DENSITY_THRESHOLD else "window"
 
 
 def normalize_for_diff(
@@ -295,27 +213,22 @@ def diff_tables(
     like JSON would then drift on formatting alone.
 
     Skew: the shuffle key is the content hash, so a dominant key means
-    IDENTICAL duplicate rows. Identical rows compress to ~nothing in the
-    shuffle, so AQE's byte-based skew-join detection cannot see them
-    (verified in tests/test_plans.py::TestSkewedDiffPlans) and the
-    ``window`` strategy lands every copy in one row-count-bound window
-    partition. The default ``strategy="auto"`` guards this automatically:
-    above ``AUTO_PROBE_MIN_BYTES`` of input it runs a one-job
-    duplicate-density probe (sampled before hashing) and routes dup-heavy
-    inputs to ``groupby``, whose phase-1 partial aggregation collapses
-    duplicates MAP-SIDE — each map task emits one (hash, min/max-side)
-    partial — so the exchange never carries the duplicate stream at all.
-    The probe executes at call time (auto is not fully lazy); pass an
-    explicit strategy to skip it. Genuinely byte-skewed joins
-    (heterogeneous rows, e.g. the phase-2 semi-join back or custom-query
-    joins) are covered by the session's AQE skew-join config, proven
-    live in the same test class.
+    IDENTICAL duplicate rows, which AQE's byte-based skew detection cannot
+    see (verified in tests/test_plans.py::TestSkewedDiffPlans). The
+    default ``strategy="auto"`` therefore sends every input of
+    ``WINDOW_MAX_BYTES`` or more to ``groupby``, whose phase-1 partial
+    aggregation collapses duplicates MAP-SIDE, and keeps the
+    single-exchange ``window`` plan for smaller inputs. The choice reads
+    the optimizer's size estimate only, so no Spark job runs at call
+    time. Genuinely byte-skewed joins (heterogeneous rows, e.g. the
+    phase-2 semi-join back or custom-query joins) are covered by the
+    session's AQE skew-join config, proven live in the same test class.
     """
     n1, n2, cols = normalize_for_diff(
         df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
     )
     if not cols:
-        raise ValueError(
+        raise NoComparableColumns(
             "diff_tables: the two inputs share no comparable columns "
             f"(df1: {df1.columns}, df2: {df2.columns}, ignored: {sorted(set(ignore_columns))})"
         )
@@ -328,8 +241,10 @@ def diff_tables(
     t1 = _tag(n1, db1_id, cols, json_strings)
     t2 = _tag(n2, db2_id, cols, json_strings)
 
-    if strategy == "auto":
-        strategy = _route_strategy(n1, n2, cols)
+    if strategy == "auto":  # by input size alone, see module docs
+        sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
+        small = None not in sizes and sum(sizes) < WINDOW_MAX_BYTES
+        strategy = "window" if small else "groupby"
 
     if strategy == "window":
         from pyspark.sql import Window
@@ -350,25 +265,26 @@ def diff_tables(
         )
     elif strategy == "groupby":
         # Phase 1: survivor hashes from a metadata-only aggregation. The
-        # shuffle carries (hash, provenance) — ~40 B/row — never full rows.
-        # min==max over the two provenance literals is true exactly when
-        # the hash was seen on one side only (same predicate as the window
-        # strategy); unlike the earlier collect_set formulation it keeps
-        # the aggregate in codegen HashAggregate (primitive buffers)
-        # instead of ObjectHashAggregate.
+        # shuffle carries (hash, side) — ~40 B/row — never full rows.
+        # min==max over the side number is true exactly when the hash was
+        # seen on one side only (the window strategy's predicate; equal
+        # ids give equal numbers, as they give equal provenance strings).
+        # An integer side keeps the aggregate in codegen HashAggregate:
+        # min/max over the provenance strings plans a SortAggregate,
+        # which sorts both sides' hashes before and after the exchange.
         survivors = (
-            t1.select(HASH_COL, PROVENANCE_COL)
-            .unionByName(t2.select(HASH_COL, PROVENANCE_COL))
-            .groupBy(HASH_COL)
-            .agg(
-                F.min(PROVENANCE_COL).alias("_mn"),
-                F.max(PROVENANCE_COL).alias("_mx"),
+            t1.select(HASH_COL, F.lit(0).alias("_side"))
+            .unionByName(
+                t2.select(HASH_COL, F.lit(int(db2_id != db1_id)).alias("_side"))
             )
+            .groupBy(HASH_COL)
+            .agg(F.min("_side").alias("_mn"), F.max("_side").alias("_mx"))
             .filter(F.col("_mn") == F.col("_mx"))
             .select(HASH_COL)
         )
         # Phase 2: pull the full rows for surviving hashes. Drift is small
-        # relative to the inputs, so AQE picks a broadcast semi-join here;
+        # relative to the inputs, so this ends as a broadcast semi-join,
+        # possibly after a full-row shuffle (see module docs);
         # dropDuplicates is the same exact-duplicate collapse as window's.
         diff = (
             t1.unionByName(t2)

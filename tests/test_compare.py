@@ -178,6 +178,32 @@ class TestCompareAll:
         assert [d.table_name for d in res.data_drift] == ["t"]
         assert res.analysis.get_table_schema_drift() == []
 
+    def test_fully_ignored_table_skips_only_its_data_drift(
+        self, spark, tmp_path, caplog
+    ):
+        """A table whose ignore rules cover every shared column has no
+        data to diff: its data drift is skipped with a warning, its schema
+        drift is kept, and the other tables' drift still lands."""
+        import logging
+
+        t1 = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
+        t2 = t1.withColumn("w", F.lit(0))
+        u1 = spark.createDataFrame([(1, "x"), (2, "y")], "k bigint, s string")
+        db1, db2 = _dbs(spark, {"t": t1, "u": u1}, {"t": t2, "u": u1.limit(1)})
+        with caplog.at_level(logging.WARNING, logger="lotad_spark.compare"):
+            res = compare_all(
+                spark, db1, db2,
+                output_path=str(tmp_path / "out"),
+                table_ignore_columns={"t": ["id", "v"]},
+            )
+        assert "Skipping data drift of table t" in caplog.text
+        assert res.compared_tables == ["t", "u"]
+        assert [d.table_name for d in res.data_drift] == ["u"]
+        assert [
+            (d["table_name"], d["column_name"])
+            for d in res.analysis.get_table_schema_drift()
+        ] == [('"t"', '"w"')]
+
     def test_each_table_opened_once_per_side(self, spark, customer, tmp_path):
         """Schema drift and data drift come from ONE open per side; a
         table excluded by ignore_tables is opened once for its schema."""

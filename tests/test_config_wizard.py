@@ -126,3 +126,43 @@ class TestWizardMenuActions:
         loaded = Config.load(cfg)
         tc = loaded.get_table_config("customer")
         assert tc is not None and "c_custkey" in tc.ignore_columns
+
+
+class TestSqliteSideSuggestions:
+    """Suggestions open each side the way ``run`` does, so a SQLite file
+    side lists its tables instead of reading as an empty parquet dir."""
+
+    @staticmethod
+    def _sides(tmp_path, sf_dir):
+        import pandas as pd
+
+        from lotad_spark.sources import write_sqlite
+
+        cust = pd.read_parquet(f"{sf_dir}/customer.parquet")[
+            ["c_custkey", "c_name"]
+        ]
+        db1 = tmp_path / "db1"
+        db1.mkdir()
+        cust.to_parquet(db1 / "customer.parquet")
+        db2 = str(tmp_path / "db2.sqlite")
+        # c_custkey shifted out of overlap → suggested ignorable
+        write_sqlite(cust.assign(c_custkey=cust.c_custkey + 1000000), db2, "customer")
+        return str(db1), db2
+
+    def test_cli_suggests_for_sqlite_side(self, spark, tmp_path, sf_dir):
+        db1, db2 = self._sides(tmp_path, sf_dir)
+        res = _run(["suggest-ignore-columns", "--db1", db1, "--db2", db2], "")
+        assert res.exit_code == 0, res.output
+        assert "customer: c_custkey" in res.output.splitlines()
+
+    def test_wizard_suggests_for_sqlite_side(self, spark, tmp_path, sf_dir):
+        from lotad_spark.config_wizard import ConfigWizard
+
+        db1, db2 = self._sides(tmp_path, sf_dir)
+        cfg = str(tmp_path / "wiz.yaml")
+        Config(db1_path=db1, db2_path=db2).write(cfg)
+        wiz = ConfigWizard(Config.load(cfg), cfg, spark=spark)
+        with CliRunner().isolation(input="y\n"):
+            wiz.run_generate_ignored_columns()
+        tc = Config.load(cfg).get_table_config("customer")
+        assert tc is not None and tc.ignore_columns == ["c_custkey"]

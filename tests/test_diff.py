@@ -225,6 +225,18 @@ class TestStrategyEquivalence:
         assert w == a == g
         assert len(w) > 0
 
+    def test_window_and_groupby_agree_on_equal_side_ids(self, spark):
+        """groupby compares side numbers where window compares provenance
+        strings; with both sides named alike the two must still agree."""
+        df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
+        df2 = spark.createDataFrame([(1, "a"), (3, "c")], "k bigint, s string")
+
+        def result(strategy):
+            r = diff_tables(df1, df2, db1_id="x", db2_id="x", strategy=strategy)
+            return sorted((row.observed_in, row.k) for row in r.diff.collect())
+
+        assert result("groupby") == result("window")
+
 
 class TestKeyedDiff:
     def _frames(self, spark):

@@ -334,9 +334,10 @@ class TestSkewedDiffPlans:
         r = diff_tables(skew1, skew2, strategy="groupby", json_strings=False)
         plan = _plan(r.diff)
         # partial aggregation below the exchange = map-side combine
-        # (min/max over provenance: primitive buffers keep phase 1 in
-        # codegen HashAggregate rather than ObjectHashAggregate)
+        # (min/max over an integer side: primitive buffers keep phase 1 in
+        # codegen HashAggregate rather than a sort-based aggregate)
         assert "partial_min" in plan and "partial_max" in plan, plan
+        assert "SortAggregate" not in plan, plan
         rows = r.diff.collect()
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
@@ -350,17 +351,22 @@ class TestSkewedDiffPlans:
         rows = r.diff.collect()
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
+    @staticmethod
+    def _auto_route(spark, df1, df2):
+        """diff_tables(strategy="auto") and the Spark jobs its call ran."""
+        tracker = spark.sparkContext.statusTracker()
+        before = tracker.getJobIdsForGroup(None)
+        r = diff_tables(df1, df2, strategy="auto", json_strings=False)
+        return r, set(tracker.getJobIdsForGroup(None)) - set(before)
+
     def test_auto_routes_skewed_input_to_groupby(self, spark, customer, monkeypatch):
-        """The auto router's duplicate-density probe must send dup-heavy
-        inputs to the map-side-combine plan (the scale-safe choice: AQE
-        provably cannot split the window plan's row-count-bound skewed
-        partition). Size floor dropped and probe fraction raised so the
-        small in-memory fixture both crosses the probe threshold and
-        yields a stable density estimate."""
+        """Above the size floor auto sends input to the map-side-combine
+        plan (the scale-safe choice: AQE provably cannot split the window
+        plan's row-count-bound skewed partition). The floor is dropped so
+        the small fixture counts as large."""
         from lotad_spark.operators import diff as diff_mod
 
-        monkeypatch.setattr(diff_mod, "AUTO_PROBE_MIN_BYTES", 0)
-        monkeypatch.setattr(diff_mod, "AUTO_PROBE_FRACTION", 0.5)
+        monkeypatch.setattr(diff_mod, "WINDOW_MAX_BYTES", 0)
         skew1 = self._skewed(spark, customer)
         skew2 = self._skewed(spark, customer.filter("c_custkey != 5"))
         r = diff_tables(skew1, skew2, strategy="auto", json_strings=False)
@@ -369,32 +375,38 @@ class TestSkewedDiffPlans:
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_auto_routes_uniform_input_to_window(self, spark, customer, monkeypatch):
-        """Near-unique hashes must route to the single-exchange window
-        plan — including the no-drift case where every hash appears once
-        per side (the per-side density measurement must not count
-        cross-side matched pairs as duplicates)."""
+        """The route depends on input size only: the same duplicate-free
+        input takes window below the floor and groupby at or above it,
+        and neither call runs a Spark job."""
         from lotad_spark.operators import diff as diff_mod
 
-        monkeypatch.setattr(diff_mod, "AUTO_PROBE_MIN_BYTES", 0)
-        monkeypatch.setattr(diff_mod, "AUTO_PROBE_FRACTION", 0.5)
-        r = diff_tables(
-            customer,
-            customer.filter("c_custkey != 5"),
-            strategy="auto",
-            json_strings=False,
-        )
-        assert r.strategy_used == "window"
-        rows = r.diff.collect()
-        assert len(rows) == 1 and rows[0]["c_custkey"] == 5
+        smaller = customer.filter("c_custkey != 5")
+        n1, n2, _ = diff_mod.normalize_for_diff(customer, smaller)
+        size = diff_mod._plan_size_bytes(n1) + diff_mod._plan_size_bytes(n2)
+        for floor, expected in ((size + 1, "window"), (size, "groupby")):
+            monkeypatch.setattr(diff_mod, "WINDOW_MAX_BYTES", floor)
+            r, jobs = self._auto_route(spark, customer, smaller)
+            assert (r.strategy_used, jobs) == (expected, set())
+            rows = r.diff.collect()
+            assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_auto_small_input_skips_probe(self, spark, customer):
-        """Below AUTO_PROBE_MIN_BYTES the router picks window from the
-        driver-side size stat alone — no probe job, diff stays lazy."""
-        tracker = spark.sparkContext.statusTracker()
-        before = tracker.getJobIdsForGroup(None)
-        r = diff_tables(customer, customer, strategy="auto", json_strings=False)
+        """Below WINDOW_MAX_BYTES the router picks window from the
+        driver-side size stat alone: no job, the diff stays lazy."""
+        r, jobs = self._auto_route(spark, customer, customer)
         assert r.strategy_used == "window"
-        assert tracker.getJobIdsForGroup(None) == before  # nothing executed
+        assert jobs == set()
+
+    def test_auto_unknown_size_routes_to_groupby(self, spark, customer, monkeypatch):
+        """Without a size estimate the router assumes a large input:
+        groupby, still with no job at call time."""
+        from lotad_spark.operators import diff as diff_mod
+
+        monkeypatch.setattr(diff_mod, "_plan_size_bytes", lambda df: None)
+        r, jobs = self._auto_route(spark, customer, customer.filter("c_custkey != 5"))
+        assert (r.strategy_used, jobs) == ("groupby", set())
+        rows = r.diff.collect()
+        assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_aqe_skew_join_fires_under_session_config(self, spark):
         """The session's AQE skew-join machinery must actually engage when

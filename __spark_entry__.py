@@ -298,8 +298,8 @@ def q_drift_summary(spark, sf_dir):
     ]
     return bounded_local_df(spark, 
         rows,
-        "table_name string, db1 string, rows_only_in_db1 int, "
-        "db2 string, rows_only_in_db2 int",
+        "table_name string, db1 string, rows_only_in_db1 bigint, "
+        "db2 string, rows_only_in_db2 bigint",
     )
 
 
@@ -10062,12 +10062,12 @@ def oracle_sql() -> dict[str, str]:
         ),
         "drift_summary": (
             "SELECT 'customer' AS table_name, 'db1' AS db1, "
-            "CAST((SELECT count(*) FROM customer WHERE c_custkey % 97 = 0) AS INTEGER) "
-            "AS rows_only_in_db1, 'db2' AS db2, CAST(0 AS INTEGER) AS rows_only_in_db2 "
+            "CAST((SELECT count(*) FROM customer WHERE c_custkey % 97 = 0) AS BIGINT) "
+            "AS rows_only_in_db1, 'db2' AS db2, CAST(0 AS BIGINT) AS rows_only_in_db2 "
             "UNION ALL "
             "SELECT 'orders', 'db1', "
-            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 89 = 0) AS INTEGER), "
-            "'db2', CAST(0 AS INTEGER)"
+            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 89 = 0) AS BIGINT), "
+            "'db2', CAST(0 AS BIGINT)"
         ),
         "wizard_overlap_probe": (
             "SELECT CAST(count(*) AS BIGINT) AS overlap_n FROM supplier "

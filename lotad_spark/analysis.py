@@ -31,8 +31,8 @@ MISSING_TABLE_TABLE = "lotad_missing_table_drift"
 SCHEMA_DRIFT_TABLE = "lotad_table_schema_drift"
 
 _SUMMARY_SCHEMA = (
-    "table_name string, db1 string, rows_only_in_db1 int, "
-    "db2 string, rows_only_in_db2 int"
+    "table_name string, db1 string, rows_only_in_db1 bigint, "
+    "db2 string, rows_only_in_db2 bigint"
 )
 _MISSING_SCHEMA = "table_name string, observed_in string, missing_in string"
 _SCHEMA_DRIFT_SCHEMA = (

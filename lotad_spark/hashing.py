@@ -33,9 +33,11 @@ Engineering differences from the reference (documented, deliberate):
 the oracle the Java port is tested against (tests/test_hashing.py), down to
 orjson's number and escaping rules and Python's ``repr(float)``.
 
-The Java class is compiled once per machine on first use (``javac``, JDK 17+)
-into ``~/.cache/lotad_spark/<hash of source + Spark version>/`` and loaded
-into each session with ``ADD JAR``. The hash column is computed last in the
+The Java classes of ``lotad_spark/jvm/`` (this UDF and the JVM helpers of
+the parquet source and the wizard, see ``jvm_helper``) are compiled once per
+machine on first use (``javac``, JDK 17+) into one jar under
+``~/.cache/lotad_spark/<hash of sources + Spark version>/`` and loaded into
+each session with ``ADD JAR``. The hash column is computed last in the
 plan so parquet pushdown/pruning below it is unaffected.
 """
 
@@ -64,7 +66,7 @@ CANONICAL_NULL = "None"
 SQL_FUNCTION = "get_row_hash"
 
 _JSON_INIT_CHARS = ("{", "[", "%7B")
-_JAVA_SOURCE = Path(__file__).with_name("jvm") / "CanonicalHash.java"
+_JAVA_DIR = Path(__file__).with_name("jvm")
 _JAVA_CLASS = "lotad_spark.jvm.CanonicalHash"
 _JAR_CACHE = Path.home() / ".cache" / "lotad_spark"
 
@@ -98,35 +100,45 @@ def canonical_value_hash(value: object) -> str:
     return str(value)
 
 
-def canonical_hash_jar(spark_version: str) -> str:
-    """Path of the compiled ``CanonicalHash`` jar, building it on first use.
+def _jar_key(spark_version: str) -> str:
+    """Cache key of the jar: every Java source (name and bytes) plus the
+    Spark version the Spark-internal references compile against."""
+    digest = hashlib.sha256()
+    for source in sorted(_JAVA_DIR.glob("*.java")):
+        digest.update(source.name.encode() + b"\0" + source.read_bytes() + b"\0")
+    digest.update(spark_version.encode())
+    return digest.hexdigest()[:16]
 
-    The cache key covers the Java source and the Spark version; the jar is
+
+def canonical_hash_jar(spark_version: str) -> str:
+    """Path of the jar of every ``lotad_spark/jvm/*.java`` class (the
+    canonical hash UDF and the JVM helpers), building it on first use.
+
+    The cache key covers the Java sources and the Spark version; the jar is
     written to a temporary name and renamed into place, so concurrent
     builders never expose a partial file."""
     from pyspark.find_spark_home import _find_spark_home
 
-    source = _JAVA_SOURCE.read_bytes()
-    key = hashlib.sha256(source + spark_version.encode()).hexdigest()[:16]
-    jar = _JAR_CACHE / key / "canonical-hash.jar"
+    jar = _JAR_CACHE / _jar_key(spark_version) / "lotad-spark.jar"
     if jar.exists():
         return str(jar)
     javac = shutil.which("javac")
     if javac is None:
         raise RuntimeError(
-            "the canonical row hash needs `javac` (a JDK 17+) to compile "
-            f"{_JAVA_SOURCE.name} once; none is on PATH and no cached jar "
-            f"exists at {jar}"
+            "the canonical row hash and the JVM helpers need `javac` (a JDK "
+            f"17+) to compile {_JAVA_DIR} once; none is on PATH and no "
+            f"cached jar exists at {jar}"
         )
+    sources = [str(p) for p in sorted(_JAVA_DIR.glob("*.java"))]
     classpath = os.path.join(_find_spark_home(), "jars", "*")
     with tempfile.TemporaryDirectory() as classes:
         build = subprocess.run(
             [javac, "-encoding", "UTF-8", "--release", "17", "-cp", classpath,
-             "-d", classes, str(_JAVA_SOURCE)],
+             "-d", classes, *sources],
             capture_output=True, text=True,
         )
         if build.returncode != 0:
-            raise RuntimeError(f"javac failed on {_JAVA_SOURCE}:\n{build.stderr}")
+            raise RuntimeError(f"javac failed on {_JAVA_DIR}:\n{build.stderr}")
         jar.parent.mkdir(parents=True, exist_ok=True)
         fd, partial = tempfile.mkstemp(dir=jar.parent, suffix=".part")
         with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
@@ -164,6 +176,19 @@ def register_sql_functions(spark) -> None:
         spark.sql(f"ADD JAR '{jar}'")
         spark.udf.registerJavaFunction(SQL_FUNCTION, _JAVA_CLASS, T.StringType())
         _registered.add(spark)
+
+
+def jvm_helper(spark, name: str):
+    """A new instance of the jar's class ``lotad_spark.jvm.<name>``.
+
+    Loaded through the session's jar class loader: ``ADD JAR`` makes the
+    jar visible only to the thread that ran it, and ``spark._jvm`` resolves
+    classes through the calling thread's loader, so compare_all's pool
+    threads would not find them there. Methods are called on the instance,
+    which py4j resolves on the object's own class."""
+    register_sql_functions(spark)
+    loader = spark._jsparkSession.sharedState().jarClassLoader()
+    return loader.loadClass(f"lotad_spark.jvm.{name}").newInstance()
 
 
 def _canonical(col: Column) -> Column:

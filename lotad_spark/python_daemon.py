@@ -1,16 +1,18 @@
 """Python worker daemon with the heavyweight UDF stack pre-imported.
 
 Spark forks one Python worker per concurrently-running Python-stage
-task. With the stock ``pyspark.daemon`` every FRESH fork pays the
-pandas/pyarrow import (~0.6 s single-threaded on this box) inside the
-task's critical path — and a burst of concurrent queries (the
-wizard's ``mapInPandas`` sweeps; any registry sweep section with
-overlapping Arrow stages) forks dozens of workers at once, so the imports contend for CPU
+task. A drift run (``compare_all``, ``report()``, the wizard) has no
+Python stage and never starts this daemon; the pipeline's and the
+multimodal sources' ``mapInPandas`` / pandas-UDF stages do. With the
+stock ``pyspark.daemon`` every FRESH fork pays the pandas/pyarrow import
+(~0.6 s single-threaded) inside the task's critical path — and a burst
+of concurrent queries (any registry sweep section with overlapping Arrow
+stages) forks dozens of workers at once, so the imports contend for CPU
 and stretch to many seconds each: thread dumps during the stall show
 executor tasks parked in ``writeNextBatchToArrowStream`` waiting on
-brand-new workers while every table finishes in lockstep (measured
-r18: compare_all over 8 tables swung 10-99 s run-to-run; with the
-pre-imported daemon it holds ~10 s).
+brand-new workers (measured r18, when compare_all still ran a Python
+stage per table: 8 tables swung 10-99 s run-to-run; with the
+pre-imported daemon they held ~10 s).
 
 Importing the stack HERE — in the daemon process, before ``manager()``
 forks anything — puts the modules in the fork image: child workers

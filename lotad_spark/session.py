@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the drift-diff workload.
 
 Local-mode defaults mirror what we would set fleet-wide on a real cluster:
-AQE on (runtime coalescing + skew-join handling), Arrow on (the wizard's
-and the pipeline's ``mapInPandas`` stages), shuffle partitions sized to
+AQE on (runtime coalescing + skew-join handling), Arrow on (the
+pipeline's ``mapInPandas`` stages), shuffle partitions sized to
 cores instead of the 200 default, UTC session timezone so timestamp
 comparisons against external engines (DuckDB oracle) are stable. Every
 session gets the Java ``get_row_hash`` UDF (``hashing.register_sql_functions``).
@@ -133,9 +133,9 @@ def get_spark(
         # Fork Python workers from a daemon that has pandas/pyarrow and
         # the Arrow-UDF serializer stack ALREADY imported (see
         # lotad_spark/python_daemon.py): a burst of concurrent Arrow
-        # stages otherwise forks dozens of fresh workers that each pay
-        # the ~0.6 s import storm inside the task critical path —
-        # measured as 10-99 s run-to-run swings on compare_all.
+        # stages (the pipeline's; a drift run has none) otherwise forks
+        # dozens of fresh workers that each pay the ~0.6 s import storm
+        # inside the task critical path.
         .config(
             "spark.python.daemon.module", "lotad_spark.python_daemon"
         )

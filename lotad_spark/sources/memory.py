@@ -32,22 +32,35 @@ class DictDatabase:
 
 
 def bounded_local_df(spark, rows, schema):
-    """Bounded driver-side relation as a ONE-slice DataFrame.
+    """Bounded driver-side relation (tuples or Rows matching ``schema``,
+    a DDL string or ``StructType``) as a JVM ``LocalRelation``.
 
-    ``createDataFrame(list)`` parallelizes into
-    ``sc.defaultParallelism`` Python partitions (32 on the bench box).
-    Any later single-task evaluation of that relation — a
-    ``coalesce(1)`` metadata write is the common case in the index
-    builders — computes the partitions SERIALLY through one
-    PythonRunner handshake each: measured 3.7-4.7 s to write a
-    ONE-ROW meta parquet at 32 cores, vs 0.29 s with a single slice
-    (13x; r18 optimization round, guide §4 "the Python boundary").
-    Bounded relations (centroids, codebooks, metadata, query/LUT
-    tables) never need scan parallelism — one slice is the right
-    shape at any scale, and every downstream use either broadcasts or
-    coalesces anyway. Values and schema are identical to the plain
-    ``createDataFrame`` path (same row-verification code path).
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
+    The rows go to the JVM as Arrow batches (``createDataFrame`` of a
+    ``pyarrow.Table``), so evaluating the relation starts no Python
+    worker: a ``createDataFrame(list)`` relation is a Python RDD whose
+    every partition is computed by a Python worker, which is what made a
+    one-row metadata write cost 3.7-4.7 s at 32 cores. Bounded relations
+    (centroids, codebooks, metadata, query/LUT tables, drift summaries)
+    never need scan parallelism; above
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) Spark keeps
+    the batches in a JVM RDD instead. Values that do not fit their
+    column's type raise, as in the plain ``createDataFrame`` path. A naive
+    ``datetime`` in a timestamp column reads as UTC wall-clock time, where
+    ``createDataFrame(list)`` reads it in the process's local time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row must have {width} fields: {schema.simpleString()}")
+    columns = list(zip(*rows)) or [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, schema)

@@ -6,6 +6,12 @@ Parquet"). This module provides the catalog surface the reference exposes
 per connection (list_tables / get_schema / table scan — reference
 lotad/connection.py:148-162) re-expressed over Spark.
 
+A table opens with no Spark job: its schema comes from one footer read on
+the driver (``lotad_spark/jvm/FooterSchema.java``, the file and conversion
+Spark's own inference would use), and the scan is built with
+``spark.read.schema``. The footer is read through the Hadoop FileSystem
+API, so every scheme Spark reads works.
+
 TIMESTAMP(NANOS) parquet columns: Spark refuses them by default
 (PARQUET_TYPE_ILLEGAL). We set ``spark.sql.legacy.parquet.nanosAsLong`` and
 rebuild a proper timestamp with integer division (``DIV 1000`` — no
@@ -15,26 +21,36 @@ truncation, so cross-engine value comparisons stay exact.
 
 from __future__ import annotations
 
-import os
+import json
 from pathlib import Path
 
-import pyarrow.dataset as pads
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lotad_spark.hashing import jvm_helper
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Column names carrying timestamp[ns] in the parquet footer.
 
-    Uses ``pyarrow.dataset`` so single-file AND directory-per-table sources
-    both probe correctly (a bare footer read raises on directories, which
-    previously made the result order-dependent). For remote filesystems
-    pyarrow needs the matching fsspec driver; without it we raise rather
-    than silently mis-typing ns columns as BIGINT.
-    """
-    schema = pads.dataset(path.removeprefix("file://"), format="parquet").schema
-    return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
+def _open_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """The table at ``path`` as Spark's ``read.parquet`` would open it
+    (same schema), and its TIMESTAMP(NANOS) columns, which read as BIGINT.
+
+    A path that does not exist raises ``FileNotFoundError``; a directory
+    without data files raises the ``AnalysisException`` Spark's inference
+    raises. Under ``spark.sql.parquet.mergeSchema`` every footer counts,
+    so Spark infers the schema itself."""
+    try:
+        footer = jvm_helper(spark, "FooterSchema").read(spark._jsparkSession, path)
+    except Py4JJavaError as err:
+        if err.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            raise FileNotFoundError(path) from None
+        raise
+    schema = footer.json()
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+    return reader.parquet(path), list(footer.nanosColumns())
 
 
 def _floor_div_1000(col_name: str) -> F.Column:
@@ -60,20 +76,9 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     cast is value-preserving — same wall-clock rendering DuckDB gives the
     naive TIMESTAMP, keeping cross-engine hashes exact.
     """
-    nanos = _nanos_timestamp_columns(path)
-    if nanos:
-        # Also set at session build (get_spark); re-assert here for
-        # externally-built sessions. The conf is harmless for µs/ms tables.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df, nanos = _open_parquet(spark, path)
     for c in nanos:
-        # The rebuild applies only when the column actually surfaced as
-        # LONG. Spark-written INT96 timestamps probe as timestamp[ns]
-        # through pyarrow but Spark reads them back as TIMESTAMP directly
-        # (nanosAsLong covers only TIMESTAMP(NANOS)-annotated columns) —
-        # re-ingesting Spark output must not DIV-1000 a real timestamp.
-        if isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(_floor_div_1000(c)))
+        df = df.withColumn(c, F.timestamp_micros(_floor_div_1000(c)))
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))

@@ -19,11 +19,9 @@ def write_params(
 ) -> None:
     """Record build parameters as a one-row parquet at ``path``.
 
-    One-slice relation (r18): ``createDataFrame(list)`` splits even a
-    single row into defaultParallelism Python-RDD partitions, paying
-    one Python-worker roundtrip per partition on evaluation (~4 s per
-    params write at local[32] — the same disease as the index builders'
-    metadata writes, see ``bounded_local_df``)."""
+    A ``bounded_local_df`` relation: a ``createDataFrame(list)`` one is a
+    Python RDD, which cost ~4 s of Python-worker roundtrips per params
+    write at local[32]."""
     from lotad_spark.sources.memory import bounded_local_df
 
     bounded_local_df(spark, [values], schema).write.mode(

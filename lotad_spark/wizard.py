@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lotad_spark.hashing import jvm_helper
+
 SAMPLE_LIMIT = 10000  # reference: LIMIT 10000
 
 
@@ -33,31 +35,14 @@ def column_overlap_count(
 
 def _local_top_values(melted: DataFrame, limit: int) -> DataFrame:
     """Per-partition cap of a melted (column_name, value) relation to the
-    ``limit`` lexicographically-first DISTINCT values per column — an
-    Arrow-batched narrow stage (no shuffle; string cast already happened
-    JVM-side in the melt). State is bounded: per column at most
-    ``2 * limit`` values are held before pruning back to ``limit``."""
-
-    def cap_batches(batches):
-        import pandas as pd
-
-        state: dict[str, set] = {}
-        for pdf in batches:
-            for col_name, vals in pdf.groupby("column_name")["value"]:
-                s = state.setdefault(col_name, set())
-                s.update(vals)
-                if len(s) > 2 * limit:
-                    state[col_name] = set(sorted(s)[:limit])
-        rows = [
-            (c, v)
-            for c, s in state.items()
-            for v in sorted(s)[:limit]
-        ]
-        yield pd.DataFrame(rows, columns=["column_name", "value"])
-
-    return melted.mapInPandas(
-        cap_batches, schema="column_name string, value string"
-    )
+    ``limit`` first DISTINCT values per column by code point (the order
+    Spark's ``orderBy`` gives strings) — a narrow JVM stage
+    (``lotad_spark/jvm/TopValues.java``: no shuffle, no Python worker;
+    the string cast already happened in the melt). State is bounded: per
+    column at most ``limit`` values are held."""
+    spark = melted.sparkSession
+    capped = jvm_helper(spark, "TopValues").cap(melted._jdf, limit)
+    return DataFrame(capped, spark)
 
 
 def suggest_ignore_columns(
@@ -80,14 +65,14 @@ def suggest_ignore_columns(
     once total instead of once per column. NULLs never count as overlap
     (matches the reference's equi-join probe).
 
-    BOUNDED SHUFFLE: the df1 melt never shuffles raw values. An
-    Arrow-batched per-partition cap (:func:`_local_top_values`) keeps the
-    ``sample_limit`` lexicographically-first distinct values per column
-    WITHIN each partition, so the global distinct + window shuffles at
-    most partitions × columns × limit rows instead of rows × columns —
-    the exchange is bounded by config, not by table size (pinned by
-    tests/test_wizard.py). Exact: every value in the global first-k is in
-    some partition's local first-k."""
+    BOUNDED SHUFFLE: the df1 melt never shuffles raw values. A JVM
+    per-partition cap (:func:`_local_top_values`) keeps the
+    ``sample_limit`` first distinct values per column by code point (the
+    order of the window below) WITHIN each partition, so the global
+    distinct + window shuffles at most partitions × columns × limit rows
+    instead of rows × columns — the exchange is bounded by config, not
+    by table size (pinned by tests/test_wizard.py). Exact: every value in
+    the global first-k is in some partition's local first-k."""
     from pyspark.sql import Window
 
     s1 = {f.name: f.dataType for f in df1.schema.fields}

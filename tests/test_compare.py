@@ -153,9 +153,9 @@ class TestCompareAll:
         assert [d.table_name for d in res.data_drift] == ["customer"]
 
     def test_vanished_parquet_table_skipped(self, spark, tmp_path, caplog):
-        """A listed table whose file is gone at open time (the pyarrow
-        footer probe raises FileNotFoundError, not AnalysisException) is
-        skipped with the same warning; the rest of the run completes."""
+        """A listed table whose file is gone at open time (the footer
+        read raises FileNotFoundError, not AnalysisException) is skipped
+        with the same warning; the rest of the run completes."""
         import logging
 
         from lotad_spark.sources import ParquetDatabase
@@ -304,6 +304,125 @@ class TestCompareAll:
             "db2",
             "rows_only_in_db2",
         }
+
+
+    def test_summary_counts_past_int32(self, spark, tmp_path):
+        """A drifted-row count over 2^31-1 is written and read back whole."""
+        from lotad_spark.analysis import DATA_DRIFT_SUMMARY_TABLE, DriftAnalysis
+        from lotad_spark.drift import TableDataDiff
+
+        analysis = DriftAnalysis(spark, str(tmp_path / "out"), "db1", "db2")
+        analysis.add_data_drift(
+            TableDataDiff("big", str(tmp_path / "out" / "big"), 3_000_000_000, 7)
+        )
+        analysis.write()
+        row = spark.read.parquet(
+            analysis.table_dir(DATA_DRIFT_SUMMARY_TABLE)
+        ).collect()[0]
+        assert (row.rows_only_in_db1, row.rows_only_in_db2) == (3_000_000_000, 7)
+
+
+class TestBoundedLocalDf:
+    def test_rows_become_a_local_relation(self, spark):
+        from lotad_spark.sources.memory import bounded_local_df
+
+        df = bounded_local_df(spark, [(1, "a", [1.5]), (2, None, [])],
+                              "k bigint, v string, xs array<double>")
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert [tuple(r) for r in df.collect()] == [(1, "a", [1.5]), (2, None, [])]
+        assert bounded_local_df(spark, [], "k bigint").schema.names == ["k"]
+
+    def test_row_width_must_match_schema(self, spark):
+        from lotad_spark.sources.memory import bounded_local_df
+
+        with pytest.raises(ValueError, match="2 fields"):
+            bounded_local_df(spark, [(1, "a", "extra")], "k bigint, v string")
+
+
+class TestNoPythonWorker:
+    def test_drift_run_starts_no_python_process(self, tmp_path):
+        """In a fresh session, compare_all, report() and
+        suggest_ignore_columns over a parquet pair leave the JVM with no
+        Python child (no Python worker daemon was ever started), and opening
+        a parquet table starts no Spark job."""
+        import os
+        import subprocess
+        import sys
+        import textwrap
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # Written with pyarrow: a Spark write would start Python workers in
+        # this test's session, not in the one under test.
+        rows = {
+            "id": [1, 2, 3],
+            "doc": ['{"a": 1, "b": 2}', '{"x": []}', "plain"],
+            "ts": pa.array([0, 1, 2], pa.timestamp("ns")),
+            "load_id": ["u1", "u2", "u3"],
+        }
+        db1, db2 = tmp_path / "db1", tmp_path / "db2"
+        for db in (db1, db2):
+            db.mkdir()
+        pq.write_table(pa.table(rows), db1 / "t.parquet")
+        changed = dict(rows, doc=['{ "b": 2, "a": 1 }', '{"x": []}', "edited"],
+                       load_id=["v1", "v2", "v3"])
+        pq.write_table(pa.table(changed), db2 / "t.parquet")
+        pq.write_table(pa.table({"id": [1]}), db1 / "only_db1.parquet")
+        pq.write_table(pa.table({"id": [1], "v": [1.0]}), db1 / "s.parquet")
+        pq.write_table(pa.table({"id": [1], "v": ["1.0"]}), db2 / "s.parquet")
+
+        script = tmp_path / "drift_run.py"
+        script.write_text(textwrap.dedent(f"""
+            import os
+            from lotad_spark import compare_all
+            from lotad_spark.session import get_spark
+            from lotad_spark.sources import ParquetDatabase
+            from lotad_spark.wizard import suggest_ignore_columns
+
+            spark = get_spark("no-python-worker", master="local[2]")
+            sc = spark.sparkContext
+            d1 = ParquetDatabase(spark, {str(db1)!r}, "db1")
+            d2 = ParquetDatabase(spark, {str(db2)!r}, "db2")
+            sc.setJobGroup("open", "open", True)
+            t1, t2 = d1.table("t"), d2.table("t")
+            sc.setJobGroup(None, None)
+            print("OPEN_JOBS", len(sc.statusTracker().getJobIdsForGroup("open")))
+            res = compare_all(spark, d1, d2, output_path={str(tmp_path / "out")!r})
+            print("DRIFT", [(d.table_name, d.rows_only_in_db1, d.rows_only_in_db2)
+                            for d in res.data_drift])
+            print("REPORT_OK", '"only_db1" not found in "db2"' in res.report())
+            print("SUGGEST", suggest_ignore_columns(t1, t2))
+            jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+            children = []
+            for entry in os.listdir("/proc"):
+                try:
+                    with open(f"/proc/{{entry}}/stat") as fh:
+                        stat = fh.read()
+                except OSError:
+                    continue
+                comm = stat[stat.index("(") + 1:stat.rindex(")")]
+                ppid = int(stat[stat.rindex(")") + 2:].split()[1])
+                if ppid == jvm and comm.startswith("python"):
+                    children.append(comm)
+            print("PY_CHILDREN", children)
+            spark.stop()
+        """))
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = subprocess.run(
+            [sys.executable, str(script)], env=dict(os.environ, PYTHONPATH=repo),
+            cwd=tmp_path, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        lines = dict(
+            line.split(" ", 1) for line in out.stdout.splitlines() if " " in line
+        )
+        assert lines["OPEN_JOBS"] == "0"
+        assert lines["DRIFT"] == "[('t', 3, 3)]"
+        assert lines["REPORT_OK"] == "True"
+        assert lines["SUGGEST"] == "['load_id']"
+        assert lines["PY_CHILDREN"] == "[]"
 
 
 class TestGenericTypes:

@@ -326,6 +326,41 @@ def test_missing_javac_error_names_it(monkeypatch, tmp_path):
         hashing.canonical_hash_jar("0.0-test")
 
 
+def test_jar_key_covers_every_java_source(monkeypatch, tmp_path):
+    """Editing any one Java source, or moving to another Spark version,
+    changes the jar's cache key, so no stale class is ever loaded."""
+    import shutil
+
+    import lotad_spark.hashing as hashing
+
+    sources_dir = tmp_path / "jvm"
+    shutil.copytree(hashing._JAVA_DIR, sources_dir)
+    monkeypatch.setattr(hashing, "_JAVA_DIR", sources_dir)
+    base = hashing._jar_key("4.1.2")
+    sources = sorted(sources_dir.glob("*.java"))
+    assert {s.name for s in sources} >= {
+        "CanonicalHash.java", "FooterSchema.java", "TopValues.java"
+    }
+    for source in sources:
+        original = source.read_bytes()
+        source.write_bytes(original + b"\n")
+        assert hashing._jar_key("4.1.2") != base, source.name
+        source.write_bytes(original)
+    assert hashing._jar_key("4.1.2") == base
+    assert hashing._jar_key("4.1.3") != base
+
+
+def test_jar_holds_every_java_source(spark):
+    import zipfile
+
+    import lotad_spark.hashing as hashing
+
+    with zipfile.ZipFile(hashing.canonical_hash_jar(spark.version)) as jar:
+        names = set(jar.namelist())
+    for source in hashing._JAVA_DIR.glob("*.java"):
+        assert f"lotad_spark/jvm/{source.stem}.class" in names
+
+
 class TestGoldenHashes:
     """with_row_hash digests recorded before the Java port: hashes that
     write_hash_snapshot persisted must still match after any change to

@@ -85,7 +85,7 @@ class TestSuggestIgnoreColumns:
 
     def test_local_cap_bounds_shuffle_and_stays_exact(self, spark):
         """The df1 sample shuffle must be bounded by the per-partition cap:
-        no Exchange may sit BELOW the MapInPandas stage (raw rows×columns
+        no Exchange may sit BELOW the MapPartitions stage (raw rows×columns
         never shuffle), and a binding limit still yields the exact
         lexicographically-first distinct sample."""
         from pyspark.sql import functions as F
@@ -101,10 +101,33 @@ class TestSuggestIgnoreColumns:
         )
         capped = _local_top_values(melted, 5)
         plan = capped._jdf.queryExecution().executedPlan().toString()
-        map_idx = plan.index("MapInPandas")
+        map_idx = plan.index("MapPartitions")
         below = plan[map_idx:]  # plans print root-first; below = upstream
         assert "Exchange" not in below, below
         # Exact: global first-5 distinct == first-5 of the partition-capped
         # union, even though each of the 8 partitions capped independently.
         got = sorted(r.value for r in capped.collect())
         assert got[:5] == [f"v{i:04d}" for i in range(5)]
+
+    def test_local_cap_orders_by_code_point(self, spark):
+        """Under a binding limit the cap keeps the first values by code
+        point, the order Spark's orderBy gives strings: U+E000..U+FFFF
+        sort before astral characters, which UTF-16 unit order would put
+        first (their surrogates are U+D800..U+DFFF)."""
+        from pyspark.sql import functions as F
+
+        from lotad_spark.wizard import _local_top_values
+
+        values = ["\U0001F600", "\U00010000", "\uFFFD", "\uE000", "\uFFFF"]
+        melted = spark.createDataFrame(
+            [("c", v) for v in values], "column_name string, value string"
+        ).coalesce(1)
+        got = [r.value for r in _local_top_values(melted, 2).collect()]
+        assert got == ["\uE000", "\uFFFD"]
+        spark_order = [r.value for r in melted.orderBy(F.col("value")).collect()]
+        assert got == spark_order[:2]
+        # the full suggestion path over the same values: db2 holds only the
+        # astral ones, which a UTF-16 cap would have sampled
+        df1 = melted.select(F.col("value").alias("c"))
+        df2 = spark.createDataFrame([(v,) for v in values[:2]], "c string")
+        assert suggest_ignore_columns(df1, df2, sample_limit=2) == ["c"]

@@ -131,13 +131,9 @@ def _sym_except(cols: str, t1: str, t2: str) -> str:
 # ---------------------------------------------------------------------------
 
 def q_diff_deleted_rows(spark, sf_dir):
-    """Runs the GROUPBY strategy, the plan ``auto`` picks for inputs of
-    ``WINDOW_MAX_BYTES`` (16 MB) or more. Every OTHER diff row takes the
-    default route, which stays below that size on the sf0.01 oracle data
-    and runs ``window``, so this row keeps the groupby plan oracle-checked."""
     r = diff_tables(
         _t(spark, sf_dir, "customer"), _customer_deleted(spark, sf_dir),
-        db1_id="db1", db2_id="db2", strategy="groupby",
+        db1_id="db1", db2_id="db2",
     )
     return r.diff.drop(HASH_COL)
 

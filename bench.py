@@ -28,12 +28,7 @@ from lotad_spark.benchmarks.fixtures import (  # noqa: E402
     RELATIONAL_TABLES,
     build_parquet_variants,
 )
-from lotad_spark.operators.diff import (  # noqa: E402
-    WINDOW_MAX_BYTES,
-    _plan_size_bytes,
-    diff_tables,
-    normalize_for_diff,
-)
+from lotad_spark.operators.diff import diff_tables  # noqa: E402
 from lotad_spark.session import get_spark  # noqa: E402
 from lotad_spark.sources.memory import bounded_local_df  # noqa: E402
 from lotad_spark.sources.parquet import ParquetDatabase  # noqa: E402
@@ -159,45 +154,15 @@ def main() -> None:
     queries["compare_all_concurrent"] = round(time.perf_counter() - t0, 3)
     shutil.rmtree(out_dir, ignore_errors=True)
 
-    # Scale-path variant: hash-only-shuffle groupby strategy on the largest
-    # table, min-of-two like the per-table loop above.
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        diff_tables(
-            db1.table("lineitem"), db2.table("lineitem"),
-            db1_id="db1", db2_id="db2", strategy="groupby",
-        ).diff.count()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    queries["diff_lineitem_groupby"] = round(best, 3)
-
-    # Same scale-path strategy driven END-TO-END through the orchestrator
-    # (ThreadPool + FAIR pools + observe-on-write sink), restricted to the
-    # largest table: proves the config knob reaches the sink path and
-    # prices the full orchestration under the 100 TB strategy.
-    out_dir = tempfile.mkdtemp(prefix="lotad_bench_out_gb_")
-    t0 = time.perf_counter()
-    compare_all(
-        spark, db1, db2, output_path=out_dir,
-        strategy="groupby", target_tables=["lineitem"],
-    )
-    queries["compare_lineitem_groupby_e2e"] = round(
-        time.perf_counter() - t0, 3
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-
     # Duplicate-key skew stress: one constant row replicated to ~25% of
     # lineitem on BOTH sides (all copies share ONE content hash and
     # cancel in the diff; drift stays the standard mutation set). The
-    # window strategy lands every copy in one row-count-bound window
-    # partition — invisible to AQE's byte-based skew detection because
-    # identical rows compress to ~nothing in the shuffle — while the
-    # groupby strategy collapses them map-side before the exchange
-    # (tests/test_plans.py::TestSkewedDiffPlans pins both claims).
+    # diff lands every copy in one row-count-bound partition, invisible
+    # to AQE's byte-based skew detection because identical rows compress
+    # to ~nothing in the shuffle (tests/test_plans.py::TestSkewedDiffPlans).
     # Versioned fixture path: the spec changed in r9 (deterministic
     # off-mutation-set row). A bare exists() guard would trust a stale
-    # pre-change fixture forever, silently making diff_skewed_* numbers
+    # pre-change fixture forever, silently making diff_skewed numbers
     # non-comparable across work dirs — bump the suffix on any spec change.
     skew_dir = os.path.join(work, "skew_v2")
     li1, li2 = db1.table("lineitem"), db2.table("lineitem")
@@ -237,27 +202,20 @@ def main() -> None:
 
     sk1 = _read_table(spark, f"{skew_dir}/db1")
     sk2 = _read_table(spark, f"{skew_dir}/db2")
-    for strat in ("window", "groupby", "auto"):
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            diff_tables(
-                sk1, sk2, db1_id="db1", db2_id="db2", strategy=strat
-            ).diff.count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        queries[f"diff_skewed_{strat}"] = round(best, 3)
-    # The default must route the dup-heavy fixture to the map-side-combine
-    # plan whenever the fixture reaches the router's size floor. Below it
-    # `auto` picks window by design (the tiny smoke SFs), so the gate
-    # applies the router's own condition: the optimizer size estimates of
-    # both normalized sides, summed, against WINDOW_MAX_BYTES.
-    n1, n2, _ = normalize_for_diff(sk1, sk2)
-    sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
-    over_floor = None in sizes or sum(sizes) >= WINDOW_MAX_BYTES
-    routed = diff_tables(sk1, sk2, db1_id="db1", db2_id="db2").strategy_used
-    if over_floor and routed != "groupby":
-        print(f"AUTO ROUTE MISMATCH on skew fixture: {routed}", file=sys.stderr)
+    best = None
+    for _ in range(2):
+        t0 = time.perf_counter()
+        skew_drift = diff_tables(sk1, sk2, db1_id="db1", db2_id="db2").diff.count()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    queries["diff_skewed"] = round(best, 3)
+    # The copies cancel, so the skew fixture drifts exactly as lineitem does.
+    if skew_drift != drift_counts["lineitem"]:
+        print(
+            f"SKEW DRIFT MISMATCH: {skew_drift} rows vs lineitem's "
+            f"{drift_counts['lineitem']}",
+            file=sys.stderr,
+        )
         sys.exit(1)
 
     # Headline analytics queries from the driver contract.

@@ -88,7 +88,6 @@ class DatabaseComparator:
         target_tables: Iterable[str] = (),
         table_ignore_columns: dict[str, list[str]] | None = None,
         table_queries: dict[str, str] | None = None,
-        strategy: str = "auto",
     ):
         self.spark = spark
         self.db1 = db1
@@ -98,7 +97,6 @@ class DatabaseComparator:
         self.target_tables = list(target_tables)
         self.table_ignore_columns = table_ignore_columns or {}
         self.table_queries = table_queries or {}
-        self.strategy = strategy
         self.analysis = DriftAnalysis(spark, output_path, db1.db_id, db2.db_id)
 
     # ---- per-table work ----
@@ -171,7 +169,6 @@ class DatabaseComparator:
             db2_id=self.db2.db_id,
             ignore_columns=self.table_ignore_columns.get(table_name, []),
             ignore_dates=self.ignore_dates,
-            strategy=self.strategy,
             table_name=table_name,
         )
         # ONE execution, ONE Spark job: materialize straight to the sink with

@@ -13,48 +13,26 @@ lotad/db_compare.py:266-302):
    entirely;
 5. deduplicating UNION of the two branches.
 
-Spark-first execution strategies (selectable; ``auto`` picks one by
-input size, see below):
+Spark execution: ONE shuffle of the unioned, tagged rows by hash. A
+hash-partitioned window computes ``min(side) == max(side)`` per hash (true
+exactly when the hash was observed on one side only), and the trailing
+exact-duplicate collapse is a hash aggregate that REUSES the window's
+partitioning (the hash is part of its key), so each input is scanned
+and hashed once and the whole diff is a single exchange: strictly fewer
+shuffled bytes than the reference plan's two left-anti joins +
+union-distinct (which additionally ships each side's hash column as a
+join probe and re-shuffles the diff output for the distinct). Output is
+identical to that plan: every raw variant canonicalizing to a surviving
+hash is kept, then exact duplicates collapse (tests/test_diff.py keeps
+the reference plan as the equivalence oracle). Float and double values
+stay raw through the collapse, so ``-0.0`` stays ``-0.0`` as in DuckDB.
+``diff_tables`` runs no Spark job.
 
-* ``window`` — ONE shuffle of the unioned, tagged rows by hash;
-  a hash-partitioned window computes ``min(side) == max(side)`` per hash
-  (true exactly when the hash was observed on one side only), and the
-  trailing exact-duplicate collapse is a hash aggregate that REUSES the
-  window's partitioning (hash is a prefix of the distinct key), so the
-  whole diff is a single exchange — strictly fewer shuffled bytes than
-  the reference plan's two left-anti joins + union-distinct (which
-  additionally ships each side's hash column as a join probe and
-  re-shuffles the diff output for the distinct). Output is identical to
-  that plan: every raw variant canonicalizing to a surviving hash is
-  kept, then exact duplicates collapse (tests/test_diff.py keeps the
-  reference plan as the equivalence oracle).
-* ``groupby`` — two phases: (1) union the two (hash, side number)
-  projections and aggregate ``min``/``max`` of the side per hash; hashes
-  seen on exactly one side survive; (2) LEFT SEMI join the tagged inputs
-  against the surviving hashes. The survivor aggregation shuffles
-  ~40 bytes/row (hash + side) instead of full rows, and its map-side
-  partial aggregation collapses duplicate rows before the exchange. Each
-  phase scans and hashes both inputs, so on duplicate-free input
-  ``groupby`` does more work than ``window``. Phase 2's plan follows the
-  survivors' size estimate:
-  under the broadcast threshold it is a broadcast semi-join and full rows
-  are not shuffled for it; over it (e.g. a 40 MB-a-side lineitem with
-  25% drift) it is a shuffled join on the hash, so each side's full rows
-  are shuffled once, and AQE switches to a broadcast semi-join only
-  after that shuffle has been written. Output is IDENTICAL to
-  ``window``; only the physical plan differs.
-
-``auto`` (default) picks ``window`` when the two inputs' combined
-optimizer-estimated size (a driver-side statistic, no job) is under
-``WINDOW_MAX_BYTES``, and ``groupby`` otherwise, including when either
-estimate is unavailable. Small inputs get the single-exchange plan.
-Large inputs get the plan that survives duplicate-key skew: a dominant
-content hash means IDENTICAL duplicate rows, which compress to ~nothing
-in the shuffle, so AQE's byte-based skew detection cannot split them
-(tests/test_plans.py::TestSkewedDiffPlans) and ``window`` would land
-every copy in one row-count-bound partition. ``diff_tables`` runs no
-Spark job for any strategy; callers that know their data pass an
-explicit strategy.
+Duplicate-key skew: a dominant content hash means IDENTICAL duplicate
+rows, which compress to ~nothing in the shuffle, so AQE's byte-based skew
+detection cannot split them (tests/test_plans.py::TestSkewedDiffPlans)
+and every copy lands in one row-count-bound partition (SCALING.md prices
+it).
 """
 
 from __future__ import annotations
@@ -62,7 +40,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,29 +59,6 @@ class NoComparableColumns(ValueError):
 
 def _quoted(c: str) -> F.Column:
     return F.col(f"`{c}`")
-
-
-# Below this combined (both sides) optimizer-estimated input size, ``auto``
-# picks ``window``; at or above it, ``groupby``. A skewed window partition
-# is row-count-bound, and at this size even a fully-duplicated table fits
-# one task comfortably. (The optimizer stat runs ~0.6× the on-disk parquet
-# size after column-pruning scaling, so the floor is calibrated against
-# the stat, not `du`.)
-WINDOW_MAX_BYTES = 16 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Optimizer-estimated relation size (driver-side, runs NO job).
-
-    For file sources this is the sum of file sizes; for local relations an
-    estimate from row count × row width. None when the JVM stat is
-    unavailable (unexpected; the router then treats the input as large)."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
 
 
 def normalize_for_diff(
@@ -158,7 +113,8 @@ class DiffResult:
     db1_id: str
     db2_id: str
     table_name: str | None = None
-    strategy_used: str | None = None  # resolved strategy ("auto" routing visible here)
+    # Always "window", the one plan: perfbench's traced layers read it.
+    strategy_used: str | None = None
     # Which hash the diff compiled to: "canonical" (JSON-looking strings
     # canonicalized) or "fast" (the caller passed json_strings=False).
     hash_path: str | None = None
@@ -201,7 +157,6 @@ def diff_tables(
     db2_id: str = "db2",
     ignore_columns: Iterable[str] = (),
     ignore_dates: bool = False,
-    strategy: str = "auto",
     json_strings: bool = True,
     table_name: str | None = None,
 ) -> DiffResult:
@@ -212,17 +167,8 @@ def diff_tables(
     strings (``DiffResult.hash_path`` reads ``"fast"``); values that look
     like JSON would then drift on formatting alone.
 
-    Skew: the shuffle key is the content hash, so a dominant key means
-    IDENTICAL duplicate rows, which AQE's byte-based skew detection cannot
-    see (verified in tests/test_plans.py::TestSkewedDiffPlans). The
-    default ``strategy="auto"`` therefore sends every input of
-    ``WINDOW_MAX_BYTES`` or more to ``groupby``, whose phase-1 partial
-    aggregation collapses duplicates MAP-SIDE, and keeps the
-    single-exchange ``window`` plan for smaller inputs. The choice reads
-    the optimizer's size estimate only, so no Spark job runs at call
-    time. Genuinely byte-skewed joins (heterogeneous rows, e.g. the
-    phase-2 semi-join back or custom-query joins) are covered by the
-    session's AQE skew-join config, proven live in the same test class.
+    The plan is one exchange of both sides' tagged rows by hash; see the
+    module docs for its shape and for duplicate-key skew.
     """
     n1, n2, cols = normalize_for_diff(
         df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
@@ -241,59 +187,25 @@ def diff_tables(
     t1 = _tag(n1, db1_id, cols, json_strings)
     t2 = _tag(n2, db2_id, cols, json_strings)
 
-    if strategy == "auto":  # by input size alone, see module docs
-        sizes = [_plan_size_bytes(n1), _plan_size_bytes(n2)]
-        small = None not in sizes and sum(sizes) < WINDOW_MAX_BYTES
-        strategy = "window" if small else "groupby"
-
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(HASH_COL)
-        # A hash survives iff it was observed on exactly one side:
-        # min(side) == max(side) over the hash's window (sides are
-        # non-NULL literals). The dropDuplicates hash-aggregate reuses the
-        # window's hash partitioning — one exchange for the whole diff.
-        diff = (
-            t1.unionByName(t2)
-            .withColumn("_min_side", F.min(PROVENANCE_COL).over(w))
-            .withColumn("_max_side", F.max(PROVENANCE_COL).over(w))
-            .filter(F.col("_min_side") == F.col("_max_side"))
-            .drop("_min_side", "_max_side")
-            .dropDuplicates()
-            .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
-        )
-    elif strategy == "groupby":
-        # Phase 1: survivor hashes from a metadata-only aggregation. The
-        # shuffle carries (hash, side) — ~40 B/row — never full rows.
-        # min==max over the side number is true exactly when the hash was
-        # seen on one side only (the window strategy's predicate; equal
-        # ids give equal numbers, as they give equal provenance strings).
-        # An integer side keeps the aggregate in codegen HashAggregate:
-        # min/max over the provenance strings plans a SortAggregate,
-        # which sorts both sides' hashes before and after the exchange.
-        survivors = (
-            t1.select(HASH_COL, F.lit(0).alias("_side"))
-            .unionByName(
-                t2.select(HASH_COL, F.lit(int(db2_id != db1_id)).alias("_side"))
-            )
-            .groupBy(HASH_COL)
-            .agg(F.min("_side").alias("_mn"), F.max("_side").alias("_mx"))
-            .filter(F.col("_mn") == F.col("_mx"))
-            .select(HASH_COL)
-        )
-        # Phase 2: pull the full rows for surviving hashes. Drift is small
-        # relative to the inputs, so this ends as a broadcast semi-join,
-        # possibly after a full-row shuffle (see module docs);
-        # dropDuplicates is the same exact-duplicate collapse as window's.
-        diff = (
-            t1.unionByName(t2)
-            .join(survivors, HASH_COL, "left_semi")
-            .dropDuplicates()
-            .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
-        )
-    else:
-        raise ValueError(f"unknown diff strategy: {strategy!r}")
+    w = Window.partitionBy(HASH_COL)
+    # A hash survives iff it was observed on exactly one side:
+    # min(side) == max(side) over the hash's window (sides are non-NULL
+    # literals). The exact-duplicate collapse keys on the hash, so its
+    # aggregate reuses the window's partitioning: one exchange for the
+    # whole diff. Grouping keys normalize -0.0 to 0.0, so float and double
+    # columns stay out of the key and keep their first raw value; that is
+    # exact, because equal hashes mean equal rendered floats.
+    floats = {f.name for f in n1.schema.fields
+              if isinstance(f.dataType, (T.FloatType, T.DoubleType))}
+    diff = (
+        t1.unionByName(t2)
+        .withColumn("_min_side", F.min(PROVENANCE_COL).over(w))
+        .withColumn("_max_side", F.max(PROVENANCE_COL).over(w))
+        .filter(F.col("_min_side") == F.col("_max_side"))
+        .drop("_min_side", "_max_side")
+        .dropDuplicates([PROVENANCE_COL, HASH_COL, *(c for c in cols if c not in floats)])
+        .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
+    )
 
     return DiffResult(
         diff=diff,
@@ -301,6 +213,6 @@ def diff_tables(
         db1_id=db1_id,
         db2_id=db2_id,
         table_name=table_name,
-        strategy_used=strategy,
+        strategy_used="window",
         hash_path="canonical" if json_strings else "fast",
     )

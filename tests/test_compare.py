@@ -99,16 +99,19 @@ class TestCompareAll:
         assert rows[0]["observed_in"] == "db1"
 
     def test_groupby_strategy_end_to_end(self, spark, customer, tmp_path):
-        """The scale-path diff strategy is reachable through the
-        orchestrator's config knob and produces the same summary and
-        drift rows as the default strategy."""
-        mutated = customer.filter(F.col("c_custkey") != 5)
-        db1, db2 = _dbs(spark, {"customer": customer}, {"customer": mutated})
-        res = compare_all(
-            spark, db1, db2,
-            output_path=str(tmp_path / "out"),
-            strategy="groupby",
+        """Copies of one row on both sides cancel through the orchestrator's
+        write path: the summary and drift rows are the deleted row's alone."""
+        copies = (
+            customer.filter(F.col("c_custkey") == 1)
+            .crossJoin(spark.range(200)).drop("id")
         )
+        mutated = customer.filter(F.col("c_custkey") != 5)
+        db1, db2 = _dbs(
+            spark,
+            {"customer": customer.unionByName(copies)},
+            {"customer": mutated.unionByName(copies)},
+        )
+        res = compare_all(spark, db1, db2, output_path=str(tmp_path / "out"))
         summary = res.analysis.get_data_drift_summary()
         assert summary == [
             {

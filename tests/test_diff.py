@@ -12,8 +12,11 @@ from lotad_spark.operators.diff import (
     normalize_for_diff,
 )
 
-# The engine's two strategies, plus "antijoin": the reference plan they
-# are held to (see reference_diff).
+# How each scenario runs: "window" is ``diff_tables`` on the inputs as
+# given, "groupby" is ``diff_tables`` on inputs split into several
+# partitions (duplicates collapse across input partitions), "antijoin" is
+# the reference plan the engine is held to (see reference_diff). The IDs
+# name the plans these parameters once selected.
 STRATEGIES = ["groupby", "antijoin", "window"]
 
 
@@ -40,7 +43,9 @@ def reference_diff(
 def _diff(df1, df2, *, strategy, **kwargs) -> DiffResult:
     if strategy == "antijoin":
         return reference_diff(df1, df2, **kwargs)
-    return diff_tables(df1, df2, strategy=strategy, **kwargs)
+    if strategy == "groupby":
+        df1, df2 = df1.repartition(3), df2.repartition(4)
+    return diff_tables(df1, df2, **kwargs)
 
 
 @pytest.fixture(scope="module")
@@ -188,12 +193,12 @@ class TestNormalize:
 
 class TestStrategyEquivalence:
     def test_all_strategies_identical_on_randomized_inputs(self, spark):
-        """window ≡ groupby ≡ the reference plan (two left-anti joins on
-        the hash + union-distinct, db_compare_create_tmp_table_merge.sql)
-        on adversarial inputs: duplicate rows, rows duplicated across
-        sides, near-identical rows, NULLs. Deterministic pseudo-random
-        corpus (seeded) — any divergence between the physical strategies
-        is a correctness bug."""
+        """The diff ≡ the reference plan (two left-anti joins on the hash +
+        union-distinct, db_compare_create_tmp_table_merge.sql), on the
+        inputs as given and split into several partitions, on adversarial
+        inputs: duplicate rows, rows duplicated across sides,
+        near-identical rows, NULLs. Deterministic pseudo-random corpus
+        (seeded) — any divergence is a correctness bug."""
         import random
 
         rng = random.Random(20240813)
@@ -225,17 +230,43 @@ class TestStrategyEquivalence:
         assert w == a == g
         assert len(w) > 0
 
-    def test_window_and_groupby_agree_on_equal_side_ids(self, spark):
-        """groupby compares side numbers where window compares provenance
-        strings; with both sides named alike the two must still agree."""
-        df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
-        df2 = spark.createDataFrame([(1, "a"), (3, "c")], "k bigint, s string")
 
-        def result(strategy):
-            r = diff_tables(df1, df2, db1_id="x", db2_id="x", strategy=strategy)
-            return sorted((row.observed_in, row.k) for row in r.diff.collect())
+class TestDriftRowValues:
+    def test_float_values_keep_their_sign_and_nan_rows_collapse(self, spark):
+        """Drift rows carry the source's raw float and double values: a
+        ``-0.0`` stays ``-0.0``, as in DuckDB's ``EXCEPT``/``UNION``,
+        while exact-duplicate NaN rows still collapse to one row."""
+        import math
 
-        assert result("groupby") == result("window")
+        import duckdb
+
+        nan = float("nan")
+        schema = "id bigint, d double, f float"
+        rows1 = [(1, -0.0, -0.0), (2, nan, nan), (2, nan, nan), (3, 0.0, 0.0)]
+        rows2 = [(3, 0.0, 0.0), (4, 0.0, -0.0)]
+
+        def key(r):
+            return tuple(
+                "nan" if isinstance(v, float) and math.isnan(v)
+                else (v, math.copysign(1.0, v)) if isinstance(v, float) else v
+                for v in r
+            )
+
+        res = diff_tables(spark.createDataFrame(rows1, schema),
+                          spark.createDataFrame(rows2, schema))
+        got = sorted(key((r.observed_in, r.id, r.d, r.f)) for r in res.diff.collect())
+
+        con = duckdb.connect()
+        for name, rows in (("t1", rows1), ("t2", rows2)):
+            con.execute(f"CREATE TABLE {name} (id BIGINT, d DOUBLE, f FLOAT)")
+            con.executemany(f"INSERT INTO {name} VALUES (?, ?, ?)", rows)
+        want = sorted(key(r) for r in con.execute(
+            "SELECT 'db1', * FROM (SELECT * FROM t1 EXCEPT SELECT * FROM t2) "
+            "UNION ALL SELECT 'db2', * FROM (SELECT * FROM t2 EXCEPT SELECT * FROM t1)"
+        ).fetchall())
+        assert got == want
+        assert ("db1", 1, (-0.0, -1.0), (-0.0, -1.0)) in got
+        assert [r[:2] for r in got].count(("db1", 2)) == 1
 
 
 class TestKeyedDiff:

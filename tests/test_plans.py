@@ -2,6 +2,9 @@
 promises (pruning, pushdown, broadcast, vectorized-only Python) must stay
 visible in the executed plan, not just hold by accident."""
 
+import re
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -112,33 +115,48 @@ class TestCanonicalHashPlans:
         assert "SQL_OK True" in out.stdout
 
 
-class TestGroupbyDiffPlans:
-    def test_survivor_aggregate_shuffles_hash_only(self, customer):
-        """The scale property of the groupby strategy: the aggregation
-        exchange must carry (hashed_row, observed_in) ONLY — never the data
-        columns. A data column appearing under the hash aggregate's
-        exchange means the round-3 full-row-shuffle regression is back."""
-        r = diff_tables(customer, customer.filter("c_custkey != 5"),
-                        strategy="groupby")
-        plan = _plan(r.diff)
-        # Locate the aggregate exchange: hashpartitioning on hashed_row.
-        agg_exchanges = [
-            l for l in plan.splitlines()
-            if "Exchange hashpartitioning(hashed_row" in l
-        ]
-        assert agg_exchanges, plan
-        assert all("c_name" not in l and "c_acctbal" not in l
-                   for l in agg_exchanges)
+@contextmanager
+def _scaled_estimates(spark, factor: float):
+    """File scans' optimizer size estimates multiplied by ``factor``, so a
+    fixture-sized table plans as if it were that much larger (a factor
+    past 2^63 saturates the estimate at Spark's value for an unknown
+    size). The estimate is taken when a plan is optimized: re-read the
+    table inside the block."""
+    key = "spark.sql.sources.fileCompressionFactor"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(factor))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
-    def test_semi_join_back_broadcasts_small_survivors(self, customer):
-        """AQE should turn the phase-2 semi-join into a broadcast when the
-        survivor set is small (the common case: little real drift)."""
-        r = diff_tables(customer, customer.filter("c_custkey != 5"),
-                        strategy="groupby")
-        r.diff.count()  # let AQE finalize
-        plan = _plan(r.diff)
-        assert "LeftSemi" in plan
-        assert "BroadcastHashJoin" in plan, plan
+
+class TestGroupbyDiffPlans:
+    """The diff plans one scan per side, one exchange and no join at any
+    input size: a table estimated in the terabytes plans like a small
+    one."""
+
+    def test_survivor_aggregate_shuffles_hash_only(self, spark, sf_dir):
+        """Each side is scanned (and hashed) once, and the only exchange
+        is the one by ``hashed_row``."""
+        with _scaled_estimates(spark, 1e9):
+            big = ParquetDatabase(spark, sf_dir, "db").table("customer")
+            plan = _plan(diff_tables(big, big.filter("c_custkey != 5")).diff)
+        assert plan.count("FileScan") == 2, plan
+        exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(hashed_row" in exchanges[0]
+
+    def test_semi_join_back_broadcasts_small_survivors(self, spark, sf_dir):
+        """No join in the plan, before or after AQE finalizes it: the
+        surviving rows are never joined back against the inputs."""
+        with _scaled_estimates(spark, 1e9):
+            big = ParquetDatabase(spark, sf_dir, "db").table("customer")
+            r = diff_tables(big, big.filter("c_custkey != 5"))
+            assert "Join" not in _plan(r.diff)
+            rows = r.diff.collect()
+        assert "Join" not in _plan(r.diff)
+        assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
 
 class TestWindowDiffPlans:
@@ -308,11 +326,10 @@ class TestSkewedDiffPlans:
     content hash, so a dominant key MEANS identical duplicate rows — which
     compress to ~nothing in the shuffle, making them INVISIBLE to AQE's
     byte-based skew-join detection (verified empirically: 50k constant
-    copies never trip skewedPartitionThresholdInBytes). The engineered
-    mitigation is therefore the groupby strategy's map-side partial
-    aggregation, which collapses every duplicate before the exchange —
-    pinned here — while the AQE skew-join config is proven live for the
-    genuinely byte-skewed joins it CAN see."""
+    copies never trip skewedPartitionThresholdInBytes). Every copy lands
+    in one partition, where the copies must cancel exactly; the plan does
+    not change with input size or duplication. The AQE skew-join config
+    is proven live for the genuinely byte-skewed joins it CAN see."""
 
     def _skewed(self, spark, customer, n=5000):
         const = customer.limit(1)
@@ -326,86 +343,88 @@ class TestSkewedDiffPlans:
 
     def test_groupby_partial_agg_absorbs_duplicate_skew(self, spark, customer):
         """With one row duplicated thousands of times on both sides, the
-        groupby strategy's phase-1 shuffle must carry map-side-combined
-        partials (one (hash, side-set) per map task), never the raw
-        duplicate stream — and the duplicates must cancel exactly."""
+        copies cancel exactly, and the duplicate collapse is a codegen
+        HashAggregate that reuses the window's exchange (no sort-based
+        aggregate, no second exchange by hash)."""
         skew1 = self._skewed(spark, customer)
         skew2 = self._skewed(spark, customer.filter("c_custkey != 5"))
-        r = diff_tables(skew1, skew2, strategy="groupby", json_strings=False)
+        r = diff_tables(skew1, skew2, json_strings=False)
         plan = _plan(r.diff)
-        # partial aggregation below the exchange = map-side combine
-        # (min/max over an integer side: primitive buffers keep phase 1 in
-        # codegen HashAggregate rather than a sort-based aggregate)
-        assert "partial_min" in plan and "partial_max" in plan, plan
-        assert "SortAggregate" not in plan, plan
+        assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+        assert plan.count("Exchange hashpartitioning(hashed_row") == 1, plan
         rows = r.diff.collect()
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_window_strategy_correct_under_duplicate_skew(self, spark, customer):
-        """The window strategy stays CORRECT under duplicate skew (all
-        copies land in one window partition and cancel); the groupby
-        strategy is the scale path for dup-heavy tables (see diff.py)."""
+        """The diff stays CORRECT under duplicate skew: all copies land in
+        one window partition and cancel."""
         skew1 = self._skewed(spark, customer)
         skew2 = self._skewed(spark, customer.filter("c_custkey != 5"))
-        r = diff_tables(skew1, skew2, strategy="window", json_strings=False)
+        r = diff_tables(skew1, skew2, json_strings=False)
         rows = r.diff.collect()
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     @staticmethod
-    def _auto_route(spark, df1, df2):
-        """diff_tables(strategy="auto") and the Spark jobs its call ran."""
+    def _call(spark, df1, df2):
+        """diff_tables, the Spark jobs its call ran, and the operator names
+        of its (not yet executed) plan."""
         tracker = spark.sparkContext.statusTracker()
         before = tracker.getJobIdsForGroup(None)
-        r = diff_tables(df1, df2, strategy="auto", json_strings=False)
-        return r, set(tracker.getJobIdsForGroup(None)) - set(before)
+        r = diff_tables(df1, df2, json_strings=False)
+        jobs = set(tracker.getJobIdsForGroup(None)) - set(before)
+        ops = [re.match(r"[\s:+|-]*(?:\*\(\d+\) )?(\w+)", l).group(1)
+               for l in _plan(r.diff).splitlines()]
+        return r, jobs, ops
 
-    def test_auto_routes_skewed_input_to_groupby(self, spark, customer, monkeypatch):
-        """Above the size floor auto sends input to the map-side-combine
-        plan (the scale-safe choice: AQE provably cannot split the window
-        plan's row-count-bound skewed partition). The floor is dropped so
-        the small fixture counts as large."""
-        from lotad_spark.operators import diff as diff_mod
+    def _small_and_large(self, spark, sf_dir, factor, side=lambda df: df):
+        """``_call`` on customer against customer minus one row (each
+        passed through ``side``), under the table's own size estimate and
+        under one ``factor`` times larger."""
+        out = []
+        for f in (1.0, factor):
+            with _scaled_estimates(spark, f):
+                c = ParquetDatabase(spark, sf_dir, "db").table("customer")
+                out.append(self._call(spark, side(c), side(c.filter("c_custkey != 5"))))
+        return out
 
-        monkeypatch.setattr(diff_mod, "WINDOW_MAX_BYTES", 0)
-        skew1 = self._skewed(spark, customer)
-        skew2 = self._skewed(spark, customer.filter("c_custkey != 5"))
-        r = diff_tables(skew1, skew2, strategy="auto", json_strings=False)
-        assert r.strategy_used == "groupby"
-        rows = r.diff.collect()
-        assert len(rows) == 1 and rows[0]["c_custkey"] == 5
+    def test_auto_routes_skewed_input_to_groupby(self, spark, sf_dir):
+        """A duplicate-heavy input plans the same operators under its own
+        size estimate and under one a billion times larger, runs no job at
+        call time, and cancels its copies."""
+        (r1, jobs1, ops1), (r2, jobs2, ops2) = self._small_and_large(
+            spark, sf_dir, 1e9, side=lambda c: self._skewed(spark, c)
+        )
+        assert ops1 == ops2
+        assert jobs1 == jobs2 == set()
+        for r in (r1, r2):
+            rows = r.diff.collect()
+            assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
-    def test_auto_routes_uniform_input_to_window(self, spark, customer, monkeypatch):
-        """The route depends on input size only: the same duplicate-free
-        input takes window below the floor and groupby at or above it,
-        and neither call runs a Spark job."""
-        from lotad_spark.operators import diff as diff_mod
-
-        smaller = customer.filter("c_custkey != 5")
-        n1, n2, _ = diff_mod.normalize_for_diff(customer, smaller)
-        size = diff_mod._plan_size_bytes(n1) + diff_mod._plan_size_bytes(n2)
-        for floor, expected in ((size + 1, "window"), (size, "groupby")):
-            monkeypatch.setattr(diff_mod, "WINDOW_MAX_BYTES", floor)
-            r, jobs = self._auto_route(spark, customer, smaller)
-            assert (r.strategy_used, jobs) == (expected, set())
+    def test_auto_routes_uniform_input_to_window(self, spark, sf_dir):
+        """The plan does not depend on input size: the same duplicate-free
+        input plans the same operators under its own size estimate and
+        under one a billion times larger, and neither call runs a job."""
+        (r1, jobs1, ops1), (r2, jobs2, ops2) = self._small_and_large(spark, sf_dir, 1e9)
+        assert ops1 == ops2
+        assert jobs1 == jobs2 == set()
+        for r in (r1, r2):
             rows = r.diff.collect()
             assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_auto_small_input_skips_probe(self, spark, customer):
-        """Below WINDOW_MAX_BYTES the router picks window from the
-        driver-side size stat alone: no job, the diff stays lazy."""
-        r, jobs = self._auto_route(spark, customer, customer)
+        """A small input runs no job at call time: the diff stays lazy."""
+        r, jobs, _ = self._call(spark, customer, customer)
         assert r.strategy_used == "window"
         assert jobs == set()
 
-    def test_auto_unknown_size_routes_to_groupby(self, spark, customer, monkeypatch):
-        """Without a size estimate the router assumes a large input:
-        groupby, still with no job at call time."""
-        from lotad_spark.operators import diff as diff_mod
-
-        monkeypatch.setattr(diff_mod, "_plan_size_bytes", lambda df: None)
-        r, jobs = self._auto_route(spark, customer, customer.filter("c_custkey != 5"))
-        assert (r.strategy_used, jobs) == ("groupby", set())
-        rows = r.diff.collect()
+    def test_auto_unknown_size_routes_to_groupby(self, spark, sf_dir):
+        """An estimate saturated at Spark's unknown-size value plans the
+        same operators as the table's own estimate, still with no job at
+        call time."""
+        (r1, jobs1, ops1), (r2, jobs2, ops2) = self._small_and_large(spark, sf_dir, 1e30)
+        assert ops1 == ops2
+        assert jobs1 == jobs2 == set()
+        rows = r2.diff.collect()
         assert len(rows) == 1 and rows[0]["c_custkey"] == 5
 
     def test_aqe_skew_join_fires_under_session_config(self, spark):

@@ -40,16 +40,13 @@ from lotad_spark.drift import (
 from lotad_spark.operators.diff import NoComparableColumns, diff_tables
 from lotad_spark.sources.parquet import schema_types
 
-# Driver threads submitting per-table job chains. Round-19 sweep (after
-# the pre-imported worker daemon and one-slice relations changed the
-# submission cost), local[32] at sf0.1, min-of-3 warm: 2→6.39s, 3→5.08s,
-# 4→4.39s, 6→4.97s, 8→5.61s → 4. Guide §2.6's "2-3 jobs in flight is
-# plenty" is the right intuition: enough concurrency to back-fill one
-# table's task tail, not so much that the Py4J gateway + Python GIL
-# serialize job submission and inflate every table; executor-side
-# capacity is not the limit. On a real cluster the same driver bound
-# applies — raise only if job submission (not execution) is the
-# bottleneck.
+# Driver threads submitting per-table job chains. Round-19 sweep,
+# local[32] at sf0.1, min-of-3 warm: 2→6.39s, 3→5.08s, 4→4.39s,
+# 6→4.97s, 8→5.61s → 4. That sweep predates the JVM row hash: every
+# table then ran a Python stage, and the Py4J gateway plus the Python
+# GIL serialized job submission past 4 threads. A drift run now starts
+# no Python process, so the value is not re-priced for the current
+# plan; re-sweep it before changing it.
 MAX_CONCURRENT_TABLES = 4
 
 
@@ -89,6 +86,11 @@ class DatabaseComparator:
         table_ignore_columns: dict[str, list[str]] | None = None,
         table_queries: dict[str, str] | None = None,
     ):
+        if db1.db_id == db2.db_id:
+            raise ValueError(
+                f"DatabaseComparator: both databases have db_id {db1.db_id!r}; "
+                "the per-side counts and summary tables need distinct ids"
+            )
         self.spark = spark
         self.db1 = db1
         self.db2 = db2

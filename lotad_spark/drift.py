@@ -71,20 +71,15 @@ def generate_table_schema_drift(
     schema1: dict[str, str],
     db2_id: str,
     schema2: dict[str, str],
-    *,
-    generic_type: "callable | None" = None,
 ) -> list[TableSchemaDrift]:
     """Column set-difference + type-mismatch records for one shared table
     (reference lotad/db_compare.py:35-116).
 
-    ``generic_type`` maps an engine type string to its cross-engine generic
-    form (reference lotad/connection.py:184-211); a mismatch is only
-    reported when the *generic* types differ, and the reported type string
-    becomes ``"RAW (GENERIC)"`` when the two differ (db_compare.py:97-107).
-    Spark-typed sources share one type vocabulary, so the default generic
-    map is the identity.
+    The reference normalizes engine type names through static type maps
+    before comparing (lotad/connection.py:184-211). Every source here
+    reports Spark type names (``sources.parquet.schema_types``), which is
+    that one map, so types compare as given.
     """
-    generic = generic_type or (lambda t: t)
     out = []
     for column in sorted(set(schema1) - set(schema2)):
         out.append(
@@ -112,17 +107,14 @@ def generate_table_schema_drift(
         t1, t2 = schema1[column], schema2[column]
         if t1 == t2:
             continue
-        g1, g2 = generic(t1), generic(t2)
-        if g1 == g2:
-            continue
         out.append(
             TableSchemaDrift(
                 table_name=table_name,
                 column_name=column,
                 db1=db1_id,
                 db2=db2_id,
-                db1_column_type=t1 if t1 == g1 else f"{t1} ({g1})",
-                db2_column_type=t2 if t2 == g2 else f"{t2} ({g2})",
+                db1_column_type=t1,
+                db2_column_type=t2,
             )
         )
     return out

@@ -14,7 +14,6 @@ from lotad_spark.operators.rollup import (
     multi_grain_report,
     read_rollup,
     rollup_distinct,
-    rollup_report,
     rollup_time_bucket,
     time_weighted_sum,
     upsert_rollup,
@@ -55,7 +54,6 @@ __all__ = [
     "upsert_rollup",
     "write_rollup",
     "range_join",
-    "rollup_report",
     "rollup_time_bucket",
     "funnel_counts",
     "diff_against_snapshot",

@@ -7,7 +7,8 @@ lotad/db_compare.py:266-302):
    ignore rules and (optionally) date/timestamp columns;
 2. nested columns → JSON strings; type-mismatched shared columns → string
    cast; columns sorted alphabetically;
-3. tag provenance (``observed_in``) and compute the canonical row hash;
+3. tag provenance (``observed_in``: side 0 or 1, mapped to the db ids
+   only in the output) and compute the canonical row hash;
 4. symmetric hash anti-join: rows whose hash appears on exactly one side;
    **set semantics** — a hash occurring n× in db1 and ≥1× in db2 is removed
    entirely;
@@ -140,12 +141,18 @@ class DiffResult:
         return self._counts
 
 
-def _tag(df: DataFrame, db_id: str, cols: list[str], json_strings: bool) -> DataFrame:
+def _tag(df: DataFrame, side: int, cols: list[str], json_strings: bool) -> DataFrame:
+    """Hash ``df`` and tag it with its side, 0 or 1, as a ``tinyint``.
+
+    The plan compares and shuffles the side, never the user's db id: ids
+    may be equal, and a one-byte tag is what each shuffled row carries."""
     hashed = df.withColumn(
         HASH_COL, canonical_row_hash(df, cols, json_strings=json_strings)
     )
     return hashed.select(
-        F.lit(db_id).alias(PROVENANCE_COL), *[_quoted(c) for c in cols], HASH_COL
+        F.lit(side).cast("tinyint").alias(PROVENANCE_COL),
+        *[_quoted(c) for c in cols],
+        HASH_COL,
     )
 
 
@@ -184,17 +191,19 @@ def diff_tables(
             f"diff_tables: input data columns collide with reserved metadata "
             f"columns {sorted(reserved)}; rename them before diffing"
         )
-    t1 = _tag(n1, db1_id, cols, json_strings)
-    t2 = _tag(n2, db2_id, cols, json_strings)
+    t1 = _tag(n1, 0, cols, json_strings)
+    t2 = _tag(n2, 1, cols, json_strings)
 
     w = Window.partitionBy(HASH_COL)
     # A hash survives iff it was observed on exactly one side:
-    # min(side) == max(side) over the hash's window (sides are non-NULL
-    # literals). The exact-duplicate collapse keys on the hash, so its
-    # aggregate reuses the window's partitioning: one exchange for the
-    # whole diff. Grouping keys normalize -0.0 to 0.0, so float and double
-    # columns stay out of the key and keep their first raw value; that is
-    # exact, because equal hashes mean equal rendered floats.
+    # min(side) == max(side) over the hash's window (sides are the
+    # literals 0 and 1; the ids replace them only in the final
+    # projection, so equal ids stay apart). The exact-duplicate collapse
+    # keys on the hash, so its aggregate reuses the window's
+    # partitioning: one exchange for the whole diff. Grouping keys
+    # normalize -0.0 to 0.0, so float and double columns stay out of the
+    # key and keep their first raw value; that is exact, because equal
+    # hashes mean equal rendered floats.
     floats = {f.name for f in n1.schema.fields
               if isinstance(f.dataType, (T.FloatType, T.DoubleType))}
     diff = (
@@ -204,7 +213,13 @@ def diff_tables(
         .filter(F.col("_min_side") == F.col("_max_side"))
         .drop("_min_side", "_max_side")
         .dropDuplicates([PROVENANCE_COL, HASH_COL, *(c for c in cols if c not in floats)])
-        .select(PROVENANCE_COL, *[_quoted(c) for c in cols], HASH_COL)
+        .select(
+            F.when(F.col(PROVENANCE_COL) == 0, F.lit(db1_id))
+            .otherwise(F.lit(db2_id))
+            .alias(PROVENANCE_COL),
+            *[_quoted(c) for c in cols],
+            HASH_COL,
+        )
     )
 
     return DiffResult(

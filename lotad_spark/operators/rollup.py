@@ -249,23 +249,6 @@ def read_rollup(spark, path: str) -> DataFrame:
     return spark.read.parquet(path).drop("bucket_day")
 
 
-def rollup_report(rollup: DataFrame, *, dims: Sequence[str] = ()) -> DataFrame:
-    """Read-time projection of a rollup: the stored partials plus the
-    derived average (sum/count — computed here precisely because a stored
-    avg would not merge)."""
-    return rollup.select(
-        F.col("bucket").cast("string").alias("bucket"),
-        *[F.col(f"`{c}`") for c in dims],
-        "n",
-        "sum_value",
-        "min_value",
-        "max_value",
-        (F.col("sum_value") / F.col("n"))
-        .cast("decimal(27,6)")
-        .alias("avg_value"),
-    )
-
-
 def multi_grain_report(
     events: DataFrame,
     *,

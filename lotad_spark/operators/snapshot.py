@@ -1,7 +1,8 @@
 """Hash snapshots: incremental drift against a stored fingerprint.
 
 Nightly drift at 100 TB should not read yesterday's 100 TB again: write
-yesterday's canonical row hashes once (~8 bytes/row + provenance-free),
+yesterday's canonical row hashes once (one 16-character hex string a
+row before parquet encoding, no provenance),
 and today's run diffs against THAT — one scan of today's data plus a
 join against a hash-only table. The hash is the same canonical
 ``hashed_row`` the row diff uses, so snapshot drift and full drift agree

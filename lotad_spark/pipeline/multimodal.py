@@ -3850,31 +3850,20 @@ def extract_audio_hist(
     return df.mapInPandas(audio_batches, schema=out_schema)
 
 
-def ahash_parts(payload: bytes):
+def _ahash_from_pixels(arr) -> tuple[int, int]:
     """64-bit average-hash (aHash — the classic perceptual image
-    fingerprint, public) of a decodable payload, returned as TWO
+    fingerprint, public) of a decoded ``[h, w, 3]`` RGB array, as TWO
     non-negative 32-bit halves ``(hi, lo)`` so the packing is exact in
     a signed bigint on every engine (one 64-bit int would put grid
-    cell 63 in the sign bit). None when :func:`decode_pixels` can't
-    decode.
+    cell 63 in the sign bit). Shared by :func:`image_hashes` and the
+    per-frame hashing in :func:`scene_cuts`.
 
-    All-integer pipeline, so the hash replays exactly in SQL: decode →
-    integer BT.601 luma → 8×8 nearest-neighbor resample
-    (``src = i·src_dim // 8``, the :func:`resize_images` index rule) →
-    floor mean over the 64 cells → bit i set iff cell i > mean
-    (STRICT, so a uniform image hashes to all-zero, not all-one).
-    Cell order is row-major; bit i of half ``lo`` covers cells 0-31,
-    ``hi`` cells 32-63."""
-    dec = decode_pixels(payload)
-    if dec is None:
-        return None
-    return _ahash_from_pixels(dec[2])
-
-
-def _ahash_from_pixels(arr) -> tuple[int, int]:
-    """The aHash core over an already-decoded ``[h, w, 3]`` RGB array
-    (shared by :func:`ahash_parts` and the per-frame hashing in
-    :func:`scene_cuts`)."""
+    All-integer pipeline, so the hash replays exactly in SQL: integer
+    BT.601 luma → 8×8 nearest-neighbor resample (``src = i·src_dim //
+    8``, the :func:`resize_images` index rule) → floor mean over the 64
+    cells → bit i set iff cell i > mean (STRICT, so a uniform image
+    hashes to all-zero, not all-one). Cell order is row-major; bit i of
+    half ``lo`` covers cells 0-31, ``hi`` cells 32-63."""
     h, w = arr.shape[0], arr.shape[1]
     lum = _luma(arr)
     ys = [y * h // 8 for y in range(8)]
@@ -3998,32 +3987,23 @@ _PHASH_DCT14 = tuple(
 )
 
 
-def phash_parts(payload: bytes):
+def _phash_from_pixels(arr) -> tuple[int, int]:
     """64-bit pHash (the DCT perceptual fingerprint — public method:
     resize, 2D DCT, median-threshold the low-frequency block) of a
-    decodable payload, returned as TWO non-negative halves ``(hi,
-    lo)``. None when :func:`decode_pixels` can't decode.
+    decoded RGB array, as ``(hi, lo)`` halves.
 
-    All-integer pipeline, so the hash replays exactly in SQL: decode →
-    integer BT.601 luma → 32×32 nearest-neighbor resample (the
-    ``src = i·src_dim // 32`` index rule shared with aHash/resize) →
-    SEPARABLE fixed-point DCT (T = M·L then C = T·Mᵀ with the
-    :data:`_PHASH_DCT14` integer basis — integer matmuls, exact) →
-    keep the top-left 8×8 of C, drop the DC term → median of the 63
-    AC values = the 32nd smallest (odd count, exact integer order
-    statistic, no averaging) → bit i set iff AC value i > median
-    (STRICT). AC order is row-major over (u, v) skipping (0, 0); bit i
-    of ``lo`` covers AC values 0-31, ``hi`` values 32-62 (bit 63 of
-    the conceptual word is always 0). Versus aHash (spatial means),
+    All-integer pipeline, so the hash replays exactly in SQL: integer
+    BT.601 luma → 32×32 nearest-neighbor resample (the ``src =
+    i·src_dim // 32`` index rule shared with aHash/resize) → SEPARABLE
+    fixed-point DCT (T = M·L then C = T·Mᵀ with the
+    :data:`_PHASH_DCT14` integer basis — integer matmuls, exact) → keep
+    the top-left 8×8 of C, drop the DC term → median of the 63 AC
+    values = the 32nd smallest (odd count, exact integer order
+    statistic) → bit i set iff AC value i > median (STRICT). AC order
+    is row-major over (u, v) skipping (0, 0); bit i of ``lo`` covers AC
+    values 0-31, ``hi`` values 32-62. Versus aHash (spatial means),
     pHash keys on the spectral envelope, so it survives smooth
     brightness gradients and mild blur that flip aHash bits."""
-    dec = decode_pixels(payload)
-    if dec is None:
-        return None
-    return _phash_from_pixels(dec[2])
-
-
-def _phash_from_pixels(arr) -> tuple[int, int]:
     import numpy as np
 
     h, w = arr.shape[0], arr.shape[1]
@@ -4045,29 +4025,17 @@ def _phash_from_pixels(arr) -> tuple[int, int]:
     return (hi, lo)
 
 
-def dhash_parts(payload: bytes):
+def _dhash_from_pixels(arr) -> tuple[int, int]:
     """64-bit dHash (the difference/gradient perceptual fingerprint —
     public method: resize to 9×8, bit = left pixel brighter than its
-    right neighbor) of a decodable payload, returned as TWO
-    non-negative halves ``(hi, lo)``. None when :func:`decode_pixels`
-    can't decode.
+    right neighbor) of a decoded RGB array, as ``(hi, lo)`` halves.
 
-    All-integer pipeline (the aHash/pHash discipline): decode →
-    integer BT.601 luma → 9×8 nearest-neighbor resample
-    (``src = i·src_dim // {9,8}``) → bit (row, col) set iff
-    cell[row][col] > cell[row][col+1] (STRICT — a uniform image
-    hashes all-zero). Row-major bits; ``lo`` covers rows 0-3, ``hi``
-    rows 4-7. Versus aHash (global mean) it keys on LOCAL gradients,
-    so global contrast changes that move the mean barely touch it;
-    versus pHash it is far cheaper (no DCT) with coarser
-    invariances — the standard trio, all three banding-compatible."""
-    dec = decode_pixels(payload)
-    if dec is None:
-        return None
-    return _dhash_from_pixels(dec[2])
-
-
-def _dhash_from_pixels(arr) -> tuple[int, int]:
+    Integer BT.601 luma → 9×8 nearest-neighbor resample (``src =
+    i·src_dim // {9,8}``) → bit (row, col) set iff cell[row][col] >
+    cell[row][col+1] (STRICT — a uniform image hashes all-zero).
+    Row-major bits; ``lo`` covers rows 0-3, ``hi`` rows 4-7. Versus
+    aHash (global mean) it keys on LOCAL gradients; versus pHash it is
+    far cheaper (no DCT) with coarser invariances."""
     h, w = arr.shape[0], arr.shape[1]
     lum = _luma(arr)
     ys = [y * h // 8 for y in range(8)]
@@ -5336,39 +5304,6 @@ def extract_feature_counts(
             )
 
     return df.mapInPandas(feat_batches, schema=out_schema)
-
-
-def extract_features(
-    df: DataFrame,
-    content_col: str = "content",
-    *,
-    id_col: str = "media_id",
-    dim: int = FEATURE_DIM,
-) -> DataFrame:
-    """(id, features array<float>) — the normalized embedding face that
-    feeds the similarity/ANN operators (``cosine_topk`` /
-    ``embedding_near_dup_pairs``): the REAL luma histogram for decodable
-    images (a classic retrieval baseline), byte histogram otherwise.
-
-    The Python kernel emits raw integer counts
-    (:func:`extract_feature_counts` with ``kind="luma"``); L1
-    normalization is a pure JVM expression on top — the UDF stays
-    minimal and the float math happens in whole-stage codegen, not in
-    Python."""
-    from pyspark.sql import functions as F
-
-    counts = extract_feature_counts(
-        df, content_col, id_col=id_col, dim=dim, kind="luma"
-    )
-    total = F.greatest(
-        F.aggregate("hist", F.lit(0), lambda a, x: a + x), F.lit(1)
-    ).cast("double")
-    return counts.select(
-        id_col,
-        F.transform("hist", lambda h: (h.cast("double") / total))
-        .cast("array<float>")
-        .alias("features"),
-    )
 
 
 def resize_images(

@@ -201,14 +201,6 @@ def train_residual_models(
     return anchors, books
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _sql_d(x: float) -> str:
     """Bit-exact SQL double literal: ``repr`` emits the shortest
     round-trip decimal and Spark's double-literal parse

@@ -37,7 +37,6 @@ corpus size with a 4096-row broadcast state.
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 from pyspark.sql import DataFrame, Window
@@ -330,81 +329,4 @@ def _round6(x: float) -> float:
             decimal.Decimal("0.000001"),
             rounding=decimal.ROUND_HALF_UP,
         )
-    )
-
-
-def write_quality_model(
-    spark,
-    weights: list[float],
-    bias: float,
-    path: str,
-    *,
-    buckets: int | None = None,
-) -> None:
-    """Persist a trained classifier as the stored-model layout the
-    index faces established (BM25/IVF/sketch precedent): the NONZERO
-    rounded weights as a relation (``weights/``: bucket, w) plus a
-    one-row ``meta/`` (buckets, bias_micro, n_nonzero). Weights round
-    through the same HALF_UP 6dp quantization scoring applies, so a
-    loaded model scores bit-identically to the in-memory one (pinned
-    in tests)."""
-    n_buckets = buckets or len(weights)
-    if len(weights) != n_buckets:
-        raise ValueError("write_quality_model: len(weights) != buckets")
-    rows = [
-        (i, _round6(x))
-        for i, x in enumerate(weights)
-        if _round6(x) != 0.0
-    ]
-    bounded_local_df(
-        spark,
-        rows or [(0, 0.0)], "bucket bigint, w double"
-    ).write.mode("overwrite").parquet(f"{path}/weights")
-    bounded_local_df(
-        spark,
-        [
-            (
-                int(n_buckets),
-                int(round(_round6(bias) * _MICRO)),
-                len(rows),
-            )
-        ],
-        "buckets int, bias_micro bigint, n_nonzero int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def read_quality_model(spark, path: str) -> tuple[list[float], float]:
-    """Load a :func:`write_quality_model` layout back to
-    ``(weights, bias)`` — meta read through the ``meta.old``
-    crash-window fallback shared with the other stored layouts."""
-    from lotad_spark.pipeline.retrieval import _read_meta
-
-    meta = _read_meta(spark, f"{path}/meta").collect()[0]
-    w = [0.0] * int(meta["buckets"])
-    for r in spark.read.parquet(f"{path}/weights").collect():
-        b = int(r["bucket"])
-        if not 0 <= b < len(w):
-            raise ValueError(
-                f"read_quality_model: bucket {b} outside the declared "
-                f"{len(w)}-bucket grid (corrupt or mismatched layout)"
-            )
-        w[b] = float(r["w"])
-    return w, float(meta["bias_micro"]) / _MICRO
-
-
-def score_against_quality_model(
-    spark,
-    model_path: str,
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Serve :func:`score_quality_classifier` off a stored model — the
-    grid size comes from meta, so scoring with mismatched buckets is
-    impossible by construction. Bit-identical to scoring with the
-    in-memory weights the model was written from (pinned in tests)."""
-    w, b = read_quality_model(spark, model_path)
-    return score_quality_classifier(
-        df, w, b, id_col=id_col, text_col=text_col
     )

@@ -29,8 +29,10 @@ ABOVE every real sim under desc ordering, polluting top-k), and engines
 genuinely diverge on it (DuckDB's list_cosine_similarity returns −1.0),
 so a zero vector breaks both ranking and the cross-engine contract.
 Real embedding pipelines L2-normalize upstream, making zero vectors
-invalid input; where that isn't guaranteed, gate the corpus through
-:func:`drop_zero_vectors` first (one shuffle-free filter).
+invalid input; where that isn't guaranteed, filter them out first with
+one shuffle-free filter on the squared norm, e.g.
+``df.filter(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x) > 0)``
+(NULL vectors drop with it).
 """
 
 from __future__ import annotations
@@ -710,21 +712,6 @@ def ivf_topk(
         .withColumn("sim", F.round(cosine(F.col("_qvec"), F.col(vec_col)), 6))
     )
     return _ranked_topk(scored, k, id_col=id_col).select("query_id", id_col, "sim")
-
-
-def drop_zero_vectors(
-    df: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Filter out all-zero (and NULL) vectors — the documented
-    precondition of every cosine-based operator in this module (see the
-    module docstring: 0⃗ makes cosine 0/0, which ranks as NaN-first in
-    Spark and diverges cross-engine). One shuffle-free filter; run it
-    once at ingest when upstream L2-normalization isn't guaranteed."""
-    v = F.col(vec_col).cast("array<double>")
-    sq = F.aggregate(
-        v, F.lit(0.0), lambda acc, x: acc + x * x
-    )
-    return df.filter(F.col(vec_col).isNotNull() & (sq > 0.0))
 
 
 def quantize_embeddings(

@@ -518,38 +518,6 @@ def append_to_sketch_index(
     _replace_dir(spark, f"{path}/meta.tmp", f"{path}/meta")
 
 
-def merge_sketch_indexes(spark, paths: list[str], out_path: str) -> None:
-    """Merge independently-built shard indexes into one — REJECTING
-    mismatched grids by meta comparison (the failure mode
-    :func:`cms_merge`'s contract documents as silently undercounting
-    is structurally impossible here: the grid rides with each
-    shard)."""
-    if not paths:
-        raise ValueError("merge_sketch_indexes: no input indexes")
-    metas = [read_sketch_meta(spark, p) for p in paths]
-    grid_keys = ("depth", "width", "n_bits", "n_hashes")
-    grids = [{k: m[k] for k in grid_keys} for m in metas]
-    if any(g != grids[0] for g in grids[1:]):
-        raise ValueError(
-            "merge_sketch_indexes: grid mismatch across inputs "
-            f"(merging different grids silently undercounts): {grids}"
-        )
-    cms_merge(
-        *[spark.read.parquet(f"{p}/cms") for p in paths]
-    ).write.mode("overwrite").parquet(f"{out_path}/cms")
-    bloom_merge(
-        *[spark.read.parquet(f"{p}/bloom") for p in paths]
-    ).write.mode("overwrite").parquet(f"{out_path}/bloom")
-    _sketch_meta(
-        spark,
-        grids[0]["depth"],
-        grids[0]["width"],
-        grids[0]["n_bits"],
-        grids[0]["n_hashes"],
-        sum(int(m["n_docs"]) for m in metas),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/meta")
-
-
 def sketch_index_estimate(
     spark,
     path: str,
@@ -580,25 +548,6 @@ def sketch_index_contains(
         spark.read.parquet(f"{path}/bloom"),
         terms,
         term_col,
-        n_bits=meta["n_bits"],
-        n_hashes=meta["n_hashes"],
-    )
-
-
-def sketch_index_prefilter(
-    spark,
-    path: str,
-    df: DataFrame,
-    col: str,
-) -> DataFrame:
-    """In-scan Bloom prefilter of a corpus-sized relation against a
-    stored index (meta-derived grid) — the 100 TB ingest-membership
-    shape with the layout contract attached."""
-    meta = read_sketch_meta(spark, path)
-    return bloom_prefilter(
-        df,
-        spark.read.parquet(f"{path}/bloom"),
-        col,
         n_bits=meta["n_bits"],
         n_hashes=meta["n_hashes"],
     )

@@ -627,7 +627,7 @@ def write_url_index(
 ) -> None:
     """Materialize the EXACT canonical-URL membership index the daily
     crawl loop dedups against (the precise sibling of the approximate
-    ``sketch_index_prefilter`` face): the DISTINCT canonical URLs of
+    Bloom prefilter): the DISTINCT canonical URLs of
     the corpus as parquet (``urls/``: canonical_url) plus a one-row
     ``meta/`` (n_urls). Canonicalization runs once at build;
     unparseable URLs (NULL canonical) are NOT indexed — they can never
@@ -743,66 +743,3 @@ def append_to_url_index(
         [(int(n),)], "n_urls bigint"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta.tmp")
     _replace_dir(spark, f"{path}/meta.tmp", f"{path}/meta")
-
-
-def stream_urls_into_index(
-    stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    available_now: bool = True,
-):
-    """Streaming ingestion into the URL index: each micro-batch folds
-    through :func:`append_to_url_index` (canonicalize → anti-join the
-    novel canonicals → parquet-append → meta rename-swap) inside a
-    ``foreachBatch`` sink, so the stored index converges to exactly
-    what the batch pipeline would have built over the same rows.
-    Bootstrap: a first micro-batch against a missing index writes it
-    (:func:`write_url_index`); re-running that bootstrap overwrites,
-    so the crash window there is also re-run-safe.
-
-    Crash/replay contract (the reason ``foreachBatch`` is safe here):
-    Structured Streaming replays an unacknowledged micro-batch
-    at-least-once after a crash, and this sink is NOT transactional —
-    but a replayed batch's already-appended URLs anti-join away as
-    non-novel, so the second delivery appends nothing and only
-    refreshes meta. The mid-append crash leaves partial part-files of
-    NOVEL urls only, which the replay likewise anti-joins; readers in
-    the meta-swap window fall back per ``_replace_dir``. Idempotent by
-    novelty, not by transaction — the same recovery story as the
-    batch append, now driven per micro-batch.
-
-    Returns the started ``StreamingQuery``; callers own
-    ``awaitTermination``. ``available_now=True`` (the default) drains
-    the source and stops — the daily-ingest shape; pass ``False`` for
-    a continuous micro-batch trigger."""
-    if not stream.isStreaming:
-        raise ValueError(
-            "stream_urls_into_index: input is a batch DataFrame — use "
-            "append_to_url_index / write_url_index directly"
-        )
-    from pyspark.errors import AnalysisException
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            spark.read.parquet(f"{path}/urls").schema
-            exists = True
-        except AnalysisException:
-            exists = False
-        if exists:
-            append_to_url_index(
-                batch_df, path, id_col=id_col, url_col=url_col
-            )
-        else:
-            write_url_index(batch_df, path, id_col=id_col, url_col=url_col)
-
-    writer = (
-        stream.select(id_col, url_col)
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

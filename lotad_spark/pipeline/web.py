@@ -613,26 +613,6 @@ def parse_crawl_delay(text: str) -> float | None:
     return delay
 
 
-def parse_sitemap_directives(text: str) -> list[str]:
-    """Absolute sitemap URLs from a robots.txt body — the sitemaps.org
-    ``Sitemap:`` field, which is group-INDEPENDENT per the protocol
-    (it applies regardless of any user-agent group), so every
-    occurrence collects. This closes the discovery loop: robots.txt →
-    sitemap URLs → fetch → :func:`sitemap_urls` → the frontier.
-    Driver-side like :func:`parse_robots` (bounded by domains, not the
-    corpus); relative values are kept verbatim for the caller to
-    resolve against the robots.txt URL."""
-    out: list[str] = []
-    for raw in text.lstrip("﻿").splitlines():
-        line = raw.split("#", 1)[0].strip()
-        key, sep, val = line.partition(":")
-        if sep and key.strip().lower() == "sitemap":
-            val = val.strip()
-            if val:
-                out.append(val)
-    return out
-
-
 def robots_filter(
     urls: DataFrame,
     rules: DataFrame,

@@ -5,7 +5,7 @@ from lotad_spark.sources.files import CsvDatabase, JsonlDatabase, OrcDatabase
 from lotad_spark.sources.parquet import ParquetDatabase, read_table
 from lotad_spark.sources.sqlite_native import SqliteNativeDatabase, write_sqlite
 from lotad_spark.sources.warc import read_warc, warc_http_text, write_warc_file
-from lotad_spark.sources.zorder import write_zordered, zvalue
+from lotad_spark.sources.zorder import zvalue
 
 __all__ = [
     "CsvDatabase",
@@ -18,6 +18,5 @@ __all__ = [
     "warc_http_text",
     "write_warc_file",
     "write_sqlite",
-    "write_zordered",
     "zvalue",
 ]

@@ -1,4 +1,4 @@
-"""JDBC database source (Postgres / SQLite / anything with a driver).
+"""JDBC database source (anything with a driver on ``spark.jars``).
 
 The reference attaches live Postgres/SQLite databases into DuckDB
 (lotad/connection.py:282-327). The Spark-native equivalent is the JDBC
@@ -7,12 +7,13 @@ database, and ``partition_column``/``num_partitions`` shards the scan
 across executors — which the reference (single connection per table)
 cannot do.
 
-Postgres/SQLite driver jars aren't shipped here, so those subclasses are
-exercised up to plan construction; the shared ``JdbcDatabase`` machinery
-(driver registration, catalog query, bounds probe, partitioned scan) IS
-exercised live end-to-end through :class:`DuckDbDatabase` with the public
-``org.duckdb:duckdb_jdbc`` driver (tests/test_jdbc_e2e.py) — on a real
-cluster pass ``spark.jars`` with whichever engine's driver you need.
+``JdbcDatabase`` takes the URL, driver properties and the table list
+(JDBC has no portable catalog query); a ``*_jdbc`` config spec builds
+exactly that. :class:`DuckDbDatabase` reads its own catalog and runs the
+whole path live (driver registration, catalog query, bounds probe,
+partitioned scan) with the public ``org.duckdb:duckdb_jdbc`` driver
+(tests/test_jdbc_e2e.py). SQLite files need no driver at all:
+``sources.sqlite_native``.
 """
 
 from __future__ import annotations
@@ -51,11 +52,10 @@ class JdbcDatabase:
 
     def list_tables(self) -> list[str]:
         """Table list. JDBC has no portable catalog query, so the list is
-        injected at construction (or fetched engine-specifically by
-        subclasses)."""
+        injected at construction (``DuckDbDatabase`` reads its catalog)."""
         if self._tables is None:
             raise NotImplementedError(
-                "pass tables=[...] or use an engine-specific subclass"
+                "JDBC has no portable table listing: pass tables=[...]"
             )
         return sorted(self._tables)
 
@@ -86,51 +86,6 @@ class JdbcDatabase:
 
     def get_schema(self, table_name: str, ignore_dates: bool = False) -> dict[str, str]:
         return schema_types(self.table(table_name).schema, ignore_dates)
-
-
-class PostgresDatabase(JdbcDatabase):
-    """Postgres via JDBC (reference: lotad/connection.py:282-296)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        host: str,
-        database: str,
-        *,
-        user: str,
-        password: str = "",
-        port: int = 5432,
-        db_id: str | None = None,
-        **kwargs,
-    ):
-        super().__init__(
-            spark,
-            f"jdbc:postgresql://{host}:{port}/{database}",
-            db_id or database,
-            properties={
-                "user": user,
-                "password": password,
-                "driver": "org.postgresql.Driver",
-            },
-            **kwargs,
-        )
-        self.database = database
-
-    def list_tables(self) -> list[str]:
-        if self._tables is not None:
-            return sorted(self._tables)
-        df = (
-            self.spark.read.format("jdbc")
-            .option("url", self.url)
-            .option(
-                "query",
-                "SELECT table_name FROM information_schema.tables "
-                "WHERE table_schema = 'public' AND table_type = 'BASE TABLE'",
-            )
-            .options(**self.properties)
-            .load()
-        )
-        return sorted(r["table_name"] for r in df.collect())
 
 
 class DuckDbDatabase(JdbcDatabase):
@@ -167,34 +122,3 @@ class DuckDbDatabase(JdbcDatabase):
             .load()
         )
         return sorted(r["table_name"] for r in df.collect())
-
-
-class SqliteDatabase(JdbcDatabase):
-    """SQLite file via JDBC (reference: lotad/connection.py:299-327)."""
-
-    def __init__(
-        self, spark: SparkSession, path: str, db_id: str | None = None, **kwargs
-    ):
-        super().__init__(
-            spark,
-            f"jdbc:sqlite:{path}",
-            db_id or path,
-            properties={"driver": "org.sqlite.JDBC"},
-            **kwargs,
-        )
-
-    def list_tables(self) -> list[str]:
-        if self._tables is not None:
-            return sorted(self._tables)
-        df = (
-            self.spark.read.format("jdbc")
-            .option("url", self.url)
-            .option(
-                "query",
-                "SELECT name FROM sqlite_master WHERE type = 'table' "
-                "AND name NOT LIKE 'sqlite_%'",
-            )
-            .options(**self.properties)
-            .load()
-        )
-        return sorted(r["name"] for r in df.collect())

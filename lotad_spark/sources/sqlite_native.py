@@ -1,10 +1,9 @@
 """Native SQLite source — live file scan with zero external drivers.
 
 The reference attaches live SQLite databases (lotad/connection.py:299-327).
-The JDBC subclass in sources/jdbc.py covers clusters that ship the
-``org.xerial:sqlite-jdbc`` jar; this module removes even that dependency by
-scanning the file with Python's stdlib ``sqlite3`` through an Arrow-batched
-``mapInPandas`` kernel, sharded over rowid ranges.
+This module needs no JDBC driver jar: it scans the file with Python's
+stdlib ``sqlite3`` through an Arrow-batched ``mapInPandas`` kernel, sharded
+over rowid ranges.
 
 Execution shape
 ---------------

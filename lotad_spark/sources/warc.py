@@ -45,27 +45,6 @@ WARC_SCHEMA = (
 )
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress CONCATENATED gzip members (the .warc.gz layout:
-    one member per record) into one byte stream. Test/synthesis
-    helper — the read path uses :func:`iter_warc_records`, which
-    decompresses member-at-a-time instead of materializing the whole
-    stream."""
-    import zlib
-
-    out = bytearray()
-    pos = 0
-    while pos < len(data):
-        d = zlib.decompressobj(wbits=31)
-        out += d.decompress(data[pos:])
-        out += d.flush()
-        tail = d.unused_data
-        if not tail:
-            break
-        pos = len(data) - len(tail)
-    return bytes(out)
-
-
 def _records_with_end(data: bytes):
     """Yield (headers_dict, payload_bytes, end_offset) per complete
     record in ``data``; stops (without consuming) at the first

@@ -7,16 +7,18 @@ range-sorting by THAT gives every interleaved column tight min-max
 ranges per file — the standard layout for "filter by either x or y"
 scans at data-lake scale.
 
-All pure integer expressions (quantize → spread bits → OR-interleave),
-bit-identical in any engine; the write is one range exchange, exactly
-what a single-column sort would cost.
+``zvalue`` is that code as one column: pure integer expressions
+(quantize → spread bits → OR-interleave), bit-identical in any engine.
+Laying a table out by it is ``repartitionByRange(n, z)`` plus
+``sortWithinPartitions(z)`` before the write — one range exchange,
+exactly what a single-column sort would cost.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 BITS = 16  # per-dimension resolution; 2 dims × 16 bits = 32-bit codes
@@ -67,27 +69,3 @@ def zvalue(cols: Sequence[tuple[Column | str, float, float]]) -> Column:
             raise ValueError(f"zvalue: need lo < hi for dim {d}")
         out = out + F.shiftleft(_spread(_quantize(col, lo, hi), n), d)
     return out
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[tuple[str, float, float]],
-    *,
-    n_files: int = 32,
-) -> None:
-    """Write ``df`` as parquet laid out along the Morton curve of
-    ``cols``: range-partition by z-value (Spark samples quantiles, so
-    files hold contiguous curve segments) and sort within partitions —
-    after this, a filter on ANY interleaved column prunes most files by
-    footer min-max alone. One range exchange; the z column is not
-    persisted."""
-    z = zvalue(cols).alias("_z")
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

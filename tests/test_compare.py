@@ -324,6 +324,14 @@ class TestCompareAll:
         ).collect()[0]
         assert (row.rows_only_in_db1, row.rows_only_in_db2) == (3_000_000_000, 7)
 
+    def test_equal_db_ids_rejected(self, spark, customer, tmp_path):
+        """The per-side counts and summary rows are keyed by db id, so two
+        sides with one id could not be told apart."""
+        db1 = DictDatabase({"customer": customer}, "x")
+        db2 = DictDatabase({"customer": customer}, "x")
+        with pytest.raises(ValueError, match="both databases have db_id 'x'"):
+            compare_all(spark, db1, db2, output_path=str(tmp_path / "out"))
+
 
 class TestBoundedLocalDf:
     def test_rows_become_a_local_relation(self, spark):
@@ -426,37 +434,6 @@ class TestNoPythonWorker:
         assert lines["REPORT_OK"] == "True"
         assert lines["SUGGEST"] == "['load_id']"
         assert lines["PY_CHILDREN"] == "[]"
-
-
-class TestGenericTypes:
-    def test_cross_engine_names_normalize_equal(self):
-        from lotad_spark.typemaps import generic_type
-
-        assert generic_type("TEXT") == generic_type("VARCHAR")
-        assert generic_type("BYTEA") == generic_type("BLOB")
-        assert generic_type("FLOAT8") == generic_type("DOUBLE PRECISION")
-        assert generic_type("DECIMAL(18,2)") == "DECIMAL"
-        assert generic_type("TEXT[]") == "VARCHAR[]"
-        assert generic_type("WEIRDTYPE") == "WEIRDTYPE"
-
-    def test_schema_drift_suppressed_after_normalization(self):
-        from lotad_spark.drift import generate_table_schema_drift
-        from lotad_spark.typemaps import generic_type
-
-        # Postgres TEXT vs DuckDB VARCHAR: raw names differ, generic equal
-        drift = generate_table_schema_drift(
-            "t", "pg", {"c": "TEXT"}, "duck", {"c": "VARCHAR"},
-            generic_type=generic_type,
-        )
-        assert drift == []
-        # genuinely different types still reported, with RAW (GENERIC) form
-        drift = generate_table_schema_drift(
-            "t", "pg", {"c": "TEXT"}, "duck", {"c": "BIGINT"},
-            generic_type=generic_type,
-        )
-        assert len(drift) == 1
-        assert drift[0].db1_column_type == "TEXT (VARCHAR)"
-        assert drift[0].db2_column_type == "BIGINT"
 
 
 class TestHadoopFsCatalog:

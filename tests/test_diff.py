@@ -30,12 +30,18 @@ def reference_diff(
     n1, n2, cols = normalize_for_diff(
         df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
     )
-    t1, t2 = _tag(n1, db1_id, cols, True), _tag(n2, db2_id, cols, True)
+    t1, t2 = _tag(n1, 0, cols, True), _tag(n2, 1, cols, True)
+    side = F.col(PROVENANCE_COL)
     diff = (
         t1.join(t2.select(HASH_COL), HASH_COL, "left_anti")
         .unionByName(t2.join(t1.select(HASH_COL), HASH_COL, "left_anti"))
         .dropDuplicates()
-        .select(PROVENANCE_COL, *[F.col(f"`{c}`") for c in cols], HASH_COL)
+        .select(
+            F.when(side == 0, F.lit(db1_id)).otherwise(F.lit(db2_id))
+            .alias(PROVENANCE_COL),
+            *[F.col(f"`{c}`") for c in cols],
+            HASH_COL,
+        )
     )
     return DiffResult(diff=diff, columns=cols, db1_id=db1_id, db2_id=db2_id)
 
@@ -153,6 +159,23 @@ class TestDiffScenarios:
         res = _diff(db1, db2, db1_id="left.db", db2_id="right.db", strategy=strategy)
         sides = {r.observed_in for r in res.diff.collect()}
         assert sides == {"left.db", "right.db"}
+
+
+class TestEqualIds:
+    def test_equal_ids_report_only_drifted_rows(self, spark):
+        """Both sides may carry one id (e.g. two snapshots of one db):
+        the plan keeps the sides apart by its own 0/1 tag, so shared
+        rows still cancel, as in the reference plan."""
+        schema = "id long, v string"
+        df1 = spark.createDataFrame([(1, "a"), (2, "b")], schema)
+        df2 = spark.createDataFrame([(1, "a"), (3, "c")], schema)
+
+        def rows(res):
+            return sorted((r.observed_in, r.id, r.v) for r in res.diff.collect())
+
+        got = rows(diff_tables(df1, df2, db1_id="x", db2_id="x"))
+        assert got == [("x", 2, "b"), ("x", 3, "c")]
+        assert got == rows(reference_diff(df1, df2, db1_id="x", db2_id="x"))
 
 
 class TestNormalize:

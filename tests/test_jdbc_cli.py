@@ -5,7 +5,7 @@ import pytest
 from click.testing import CliRunner
 
 from lotad_spark.cli import cli
-from lotad_spark.sources.jdbc import JdbcDatabase, PostgresDatabase, SqliteDatabase
+from lotad_spark.sources.jdbc import JdbcDatabase
 
 
 class TestJdbcSource:
@@ -16,18 +16,6 @@ class TestJdbcSource:
     def test_requires_table_list_or_subclass(self, spark):
         with pytest.raises(NotImplementedError):
             JdbcDatabase(spark, "jdbc:x://h/db").list_tables()
-
-    def test_postgres_url_and_driver(self, spark):
-        db = PostgresDatabase(
-            spark, "h", "mydb", user="u", password="p", port=5433, tables=["t"]
-        )
-        assert db.url == "jdbc:postgresql://h:5433/mydb"
-        assert db.properties["driver"] == "org.postgresql.Driver"
-        assert db.db_id == "mydb"
-
-    def test_sqlite_url(self, spark):
-        db = SqliteDatabase(spark, "/tmp/x.db", tables=["t"])
-        assert db.url == "jdbc:sqlite:/tmp/x.db"
 
 
 class TestCli:

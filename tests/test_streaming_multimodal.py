@@ -11,6 +11,15 @@ def _events(spark, sf_dir):
     return ParquetDatabase(spark, sf_dir, "db").table("events")
 
 
+def _hash_parts(kind: str, payload: bytes):
+    """One image's ``(hi, lo)`` perceptual hash halves, as ``image_hashes``
+    computes them per row; None when the payload does not decode."""
+    from lotad_spark.pipeline.multimodal import _HASH_KERNELS, decode_pixels
+
+    dec = decode_pixels(payload)
+    return None if dec is None else _HASH_KERNELS[kind](dec[2])
+
+
 class TestWindowedAgg:
     def test_batch_shape(self, spark, sf_dir):
         out = windowed_event_agg(_events(spark, sf_dir))
@@ -567,7 +576,6 @@ class TestMultimodal:
             _luma,
             _phash_from_pixels,
             image_phash,
-            phash_parts,
         )
 
         rng = np.random.RandomState(5)
@@ -608,8 +616,8 @@ class TestMultimodal:
         assert _phash_from_pixels(arr - 30) == (hi, lo)
 
         # uniform image: every AC coefficient is 0 -> all-zero hash
-        assert phash_parts(b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
-        assert phash_parts(b"junk") is None
+        assert _hash_parts("phash", b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
+        assert _hash_parts("phash", b"junk") is None
 
         # cross-format equality + fallback labeling through the op
         hdr = b"P6 8 8 255 "
@@ -618,7 +626,7 @@ class TestMultimodal:
         png = self._make_png(
             [list(px[r * 24 : (r + 1) * 24]) for r in range(8)]
         )
-        assert phash_parts(p6) == phash_parts(png)
+        assert _hash_parts("phash", p6) == _hash_parts("phash", png)
         df = spark.createDataFrame(
             [
                 (1, bytearray(p6)),
@@ -685,7 +693,6 @@ class TestMultimodal:
         from lotad_spark.pipeline.multimodal import (
             _dhash_from_pixels,
             _luma,
-            dhash_parts,
             image_dhash,
             image_near_dup_pairs,
         )
@@ -708,8 +715,8 @@ class TestMultimodal:
         assert _dhash_from_pixels(arr) == (hi, lo)
         # strictly monotone map: gradient ORDER unchanged, hash exact
         assert _dhash_from_pixels(arr * 2) == (hi, lo)
-        assert dhash_parts(b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
-        assert dhash_parts(b"junk") is None
+        assert _hash_parts("dhash", b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
+        assert _hash_parts("dhash", b"junk") is None
         hdr = b"P6 8 8 255 "
         px = bytes(v for i in range(64) for v in ((i * 4) % 256,) * 3)
         df = spark.createDataFrame(
@@ -739,7 +746,6 @@ class TestMultimodal:
         import numpy as np
 
         from lotad_spark.pipeline.multimodal import (
-            ahash_parts,
             image_ahash,
             image_near_dup_pairs,
         )
@@ -751,9 +757,9 @@ class TestMultimodal:
         png = self._make_png(
             [list(px[r * 24 : (r + 1) * 24]) for r in range(8)]
         )
-        assert ahash_parts(p6) == ahash_parts(png)
-        assert ahash_parts(b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
-        assert ahash_parts(b"junk") is None
+        assert _hash_parts("ahash", p6) == _hash_parts("ahash", png)
+        assert _hash_parts("ahash", b"P6 4 4 255 " + bytes([9] * 48)) == (0, 0)
+        assert _hash_parts("ahash", b"junk") is None
         edited = bytearray(px)
         edited[0:3] = b"\xfa\xfa\xfa"
         df = spark.createDataFrame(
@@ -1087,24 +1093,6 @@ class TestMultimodal:
         # 250 bytes → 3 stub frames (0, 1, 2)
         assert [r.frame_idx for r in rows] == [0, 1, 2]
         assert "content" not in frame_sample_plan(df).columns
-
-    def test_extract_features_feeds_similarity(self, spark):
-        from lotad_spark.pipeline.multimodal import FEATURE_DIM, extract_features
-
-        df = spark.createDataFrame(
-            [(1, b"abcabc"), (2, b"abcabc"), (3, b"zzzzzz"), (4, None)],
-            "media_id long, content binary",
-        )
-        out = extract_features(df)
-        assert out.schema.simpleString() == (
-            "struct<media_id:bigint,features:array<float>>"
-        )
-        got = {r.media_id: list(r.features) for r in out.collect()}
-        assert len(got[1]) == FEATURE_DIM
-        assert got[1] == got[2]  # deterministic: same bytes, same features
-        assert got[1] != got[3]
-        assert abs(sum(got[1]) - 1.0) < 1e-6  # normalized histogram
-        assert sum(got[4]) == 0  # NULL payload -> zero vector
 
     def test_resize_binary_roundtrip(self, spark):
         from lotad_spark.pipeline.multimodal import resize_images

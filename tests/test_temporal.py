@@ -9,9 +9,14 @@ from lotad_spark.operators import (
     asof_join,
     merge_rollup,
     range_join,
-    rollup_report,
     rollup_time_bucket,
 )
+
+
+def _rollup_rows(rollup, dims):
+    """A rollup's stored partials as sorted tuples, for equality checks."""
+    cols = ["bucket", *dims, "n", "sum_value", "min_value", "max_value"]
+    return sorted(map(tuple, rollup.select(*cols).collect()))
 
 
 def _ts(minute, second=0):
@@ -291,8 +296,8 @@ def test_rollup_merge_equals_direct(spark, sf_dir):
     direct = rollup_time_bucket(
         ev, ts_col="ts", value_col="value", unit="hour", dims=["event_type"]
     )
-    got = sorted(map(tuple, rollup_report(hours, dims=["event_type"]).collect()))
-    want = sorted(map(tuple, rollup_report(direct, dims=["event_type"]).collect()))
+    got = _rollup_rows(hours, ["event_type"])
+    want = _rollup_rows(direct, ["event_type"])
     assert got == want and len(got) > 0
 
 
@@ -311,14 +316,14 @@ def test_rollup_chain_and_report(spark):
     days = merge_rollup(
         merge_rollup(minutes, unit="hour", dims=["k"]), unit="day", dims=["k"]
     )
-    r = rollup_report(days, dims=["k"]).collect()
+    r = days.collect()
     assert len(r) == 1
     row = r[0]
     assert row["n"] == 4
     assert float(row["sum_value"]) == 16.0
     assert float(row["min_value"]) == 1.5
     assert float(row["max_value"]) == 8.0
-    assert float(row["avg_value"]) == 4.0
+    assert float(row["sum_value"]) / row["n"] == 4.0
 
 
 def test_rollup_upsert_equals_batch(spark, sf_dir, tmp_path):
@@ -358,28 +363,16 @@ def test_rollup_upsert_equals_batch(spark, sf_dir, tmp_path):
         dims=["event_type"],
     )
     assert sorted(os.listdir(untouched_day)) == before  # never rewritten
-    got = sorted(
-        map(
-            tuple,
-            rollup_report(
-                read_rollup(spark, path), dims=["event_type"]
-            ).collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            rollup_report(
-                rollup_time_bucket(
-                    ev,
-                    ts_col="ts",
-                    value_col="value",
-                    unit="minute",
-                    dims=["event_type"],
-                ),
-                dims=["event_type"],
-            ).collect(),
-        )
+    got = _rollup_rows(read_rollup(spark, path), ["event_type"])
+    want = _rollup_rows(
+        rollup_time_bucket(
+            ev,
+            ts_col="ts",
+            value_col="value",
+            unit="minute",
+            dims=["event_type"],
+        ),
+        ["event_type"],
     )
     assert got == want and len(got) > 0
 
@@ -533,20 +526,20 @@ def test_rollup_cli_init_upsert_serves_batch_hours(spark, sf_dir, tmp_path):
     ])
     assert r2.exit_code == 0, r2.output
     assert "upserted" in r2.output
-    got = sorted(map(tuple, rollup_report(
+    got = _rollup_rows(
         merge_rollup(
             read_rollup(spark, store), unit="hour", dims=["event_type"]
         ),
-        dims=["event_type"],
-    ).collect()))
+        ["event_type"],
+    )
     ev = read_table(spark, events)
-    want = sorted(map(tuple, rollup_report(
+    want = _rollup_rows(
         rollup_time_bucket(
             ev, ts_col="ts", value_col="value", unit="hour",
             dims=["event_type"],
         ),
-        dims=["event_type"],
-    ).collect()))
+        ["event_type"],
+    )
     assert got == want and len(got) > 0
 
 

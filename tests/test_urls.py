@@ -631,101 +631,6 @@ class TestDomainOps:
         assert "Exchange" not in plan
 
 
-class TestStreamUrlIngest:
-    """stream≡batch soak for stream_urls_into_index: the streamed index
-    must equal write_url_index over the union of all micro-batches,
-    with a mid-stream duplicate collapsing to one stored canonical."""
-
-    def test_two_microbatches_with_midstream_dup(self, spark, tmp_path):
-        from lotad_spark.pipeline import (
-            stream_urls_into_index,
-            write_url_index,
-        )
-
-        src = str(tmp_path / "src")
-        idx = str(tmp_path / "idx")
-        ck = str(tmp_path / "ck")
-        schema = "doc_id bigint, url string"
-        b1 = spark.createDataFrame(
-            [(1, "http://a.com/x"), (2, "https://WWW.B.com:443/y/")],
-            schema,
-        )
-        b2 = spark.createDataFrame(
-            [
-                (3, "HTTP://A.com/x"),  # canonical-dup of doc 1
-                (4, "http://c.com/z?utm_source=t&k=1"),
-                (5, "not a url"),  # NULL canonical: never indexed
-            ],
-            schema,
-        )
-        b1.coalesce(1).write.mode("append").parquet(src)
-        b2.coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_urls_into_index(stream, idx, ck)
-        q.awaitTermination(180)
-        # maxFilesPerTrigger=1 over two source files → two micro-batches
-        # (bootstrap write + one append), or the runner is not streaming.
-        assert len(q.recentProgress) >= 2
-
-        got = sorted(
-            r.canonical_url
-            for r in spark.read.parquet(f"{idx}/urls").collect()
-        )
-        ref = str(tmp_path / "ref")
-        write_url_index(b1.unionByName(b2), ref)
-        want = sorted(
-            r.canonical_url
-            for r in spark.read.parquet(f"{ref}/urls").collect()
-        )
-        assert got == want
-        assert len(got) == len(set(got)) == 3  # a.com dup collapsed, NULL absent
-        n_meta = spark.read.parquet(f"{idx}/meta").collect()[0].n_urls
-        assert n_meta == len(got)
-
-        # Second run, same checkpoint, one NEW file: only novel URLs
-        # appended; replaying nothing (checkpoint already acked files
-        # 1-2). The duplicate of c.com must anti-join away.
-        b3 = spark.createDataFrame(
-            [(6, "http://C.com/z?k=1&gclid=zz"), (7, "http://d.org/w")],
-            schema,
-        )
-        b3.coalesce(1).write.mode("append").parquet(src)
-        stream2 = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q2 = stream_urls_into_index(stream2, idx, ck)
-        q2.awaitTermination(180)
-        got2 = sorted(
-            r.canonical_url
-            for r in spark.read.parquet(f"{idx}/urls").collect()
-        )
-        ref2 = str(tmp_path / "ref2")
-        write_url_index(b1.unionByName(b2).unionByName(b3), ref2)
-        want2 = sorted(
-            r.canonical_url
-            for r in spark.read.parquet(f"{ref2}/urls").collect()
-        )
-        assert got2 == want2 and len(got2) == 4
-        n_meta2 = spark.read.parquet(f"{idx}/meta").collect()[0].n_urls
-        assert n_meta2 == 4
-
-    def test_batch_input_rejected(self, spark):
-        from lotad_spark.pipeline import stream_urls_into_index
-
-        df = spark.createDataFrame(
-            [(1, "http://a.com/")], "doc_id bigint, url string"
-        )
-        with pytest.raises(ValueError, match="batch DataFrame"):
-            stream_urls_into_index(df, "/tmp/x", "/tmp/y")
-
-
 class TestCanonicalUrlDedup:
     """canonical_url_dedup (r17): declared-canonical grouping with
     own-URL fallback and min-id keeper."""

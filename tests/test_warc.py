@@ -3,17 +3,34 @@ layouts, truncation honesty, and the HTTP peel."""
 
 import gzip
 import os
+import zlib
 
 import pytest
 
 from lotad_spark.sources.warc import (
-    _gunzip_members,
     iter_warc_records,
     parse_warc_records,
     read_warc,
     warc_http_text,
     write_warc_file,
 )
+
+
+def _gunzip_members(data: bytes) -> bytes:
+    """Decompress CONCATENATED gzip members (the .warc.gz layout: one
+    member per record) into one byte stream, independently of the read
+    path's member-at-a-time :func:`iter_warc_records`."""
+    out = bytearray()
+    pos = 0
+    while pos < len(data):
+        d = zlib.decompressobj(wbits=31)
+        out += d.decompress(data[pos:])
+        out += d.flush()
+        tail = d.unused_data
+        if not tail:
+            break
+        pos = len(data) - len(tail)
+    return bytes(out)
 
 
 def _roundtrip_records(tmp_path, gz):

@@ -635,33 +635,6 @@ class TestMainContent:
         assert "EvalPython" not in plan
 
 
-class TestSitemapDirectives:
-    def test_collects_across_groups_and_strips(self):
-        from lotad_spark.pipeline.web import parse_sitemap_directives
-
-        robots = (
-            "﻿User-agent: googlebot\n"
-            "Disallow: /private\n"
-            "Sitemap: https://a.com/sitemap.xml  # the main one\n"
-            "\n"
-            "User-agent: *\n"
-            "Allow: /\n"
-            "sitemap:https://a.com/news.xml\n"
-            "SITEMAP: /relative.xml\n"
-            "Sitemap:\n"  # empty value contributes nothing
-        )
-        assert parse_sitemap_directives(robots) == [
-            "https://a.com/sitemap.xml",
-            "https://a.com/news.xml",
-            "/relative.xml",
-        ]
-
-    def test_no_directives(self):
-        from lotad_spark.pipeline.web import parse_sitemap_directives
-
-        assert parse_sitemap_directives("User-agent: *\nDisallow:\n") == []
-
-
 class TestHtmlMetaAndAnchors:
     """html_meta / html_anchors (r16): head metadata with NULL-absent
     semantics and (href, anchor_text) pairs across quoting styles."""

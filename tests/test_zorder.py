@@ -5,7 +5,7 @@ import glob
 import pyarrow.parquet as pq
 import pytest
 
-from lotad_spark.sources import ParquetDatabase, write_zordered, zvalue
+from lotad_spark.sources import ParquetDatabase, zvalue
 
 
 def _interleave2(x: int, y: int) -> int:
@@ -56,9 +56,10 @@ class TestWriteZordered:
     def test_per_file_ranges_tighten_on_both_columns(
         self, spark, sf_dir, tmp_path
     ):
-        """The point of the layout: after z-ordering on (value, user_id),
-        EACH file's min-max range on BOTH columns is a fraction of the
-        global range — that's what footer-based pruning feeds on."""
+        """The point of the code: after range-sorting a write by the
+        z-value of (value, user_id), EACH file's min-max range on BOTH
+        columns is a fraction of the global range — that's what
+        footer-based pruning feeds on."""
         ev = ParquetDatabase(spark, sf_dir, "db").table("events").select(
             "event_id", "user_id", "value"
         )
@@ -68,9 +69,16 @@ class TestWriteZordered:
         import pyspark.sql.functions as F
 
         vmax, umax = ev.agg(F.max("value"), F.max("user_id")).collect()[0]
-        write_zordered(
-            ev, out, [("value", 0.0, float(vmax)), ("user_id", 0.0, float(umax))],
-            n_files=16,
+        # the layout: range-partition by z-value (Spark samples quantiles,
+        # so files hold contiguous curve segments), sort within files
+        z = zvalue([("value", 0.0, float(vmax)), ("user_id", 0.0, float(umax))])
+        (
+            ev.withColumn("_z", z)
+            .repartitionByRange(16, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(out)
         )
         files = glob.glob(f"{out}/part-*.parquet")
         assert len(files) >= 8

@@ -145,13 +145,14 @@ class DriftAnalysis:
         return f"{self.output_path}/{table_name}"
 
     def write(self) -> None:
-        """Materialize the three summary tables as parquet."""
+        """Materialize the three summary tables as parquet, one file each
+        (a few rows: a file per row would cost a task and a file each)."""
         for rows, schema, name in (
             (self._summary_rows, _SUMMARY_SCHEMA, DATA_DRIFT_SUMMARY_TABLE),
             (self._missing_rows, _MISSING_SCHEMA, MISSING_TABLE_TABLE),
             (self._schema_rows, _SCHEMA_DRIFT_SCHEMA, SCHEMA_DRIFT_TABLE),
         ):
-            bounded_local_df(self.spark, rows, schema).write.mode(
+            bounded_local_df(self.spark, rows, schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(self.table_dir(name))
 

@@ -37,6 +37,7 @@ from lotad_spark.drift import (
     generate_missing_table_drift,
     generate_table_schema_drift,
 )
+from lotad_spark.hashing import PROVENANCE_COL, sql_string
 from lotad_spark.operators.diff import NoComparableColumns, diff_tables
 from lotad_spark.sources.parquet import schema_types
 
@@ -182,11 +183,15 @@ class DatabaseComparator:
         # can't starve the small ones submitted by sibling threads.
         out_dir = self.analysis.table_dir(table_name)
         obs = Observation()
-        side = F.col("observed_in")
         observed = result.diff.observe(
             obs,
-            F.count(F.when(side == self.db1.db_id, 1)).alias("n1"),
-            F.count(F.when(side == self.db2.db_id, 1)).alias("n2"),
+            *(
+                F.expr(
+                    f"count(CASE WHEN {PROVENANCE_COL} = {sql_string(db_id)} "
+                    f"THEN 1 END) AS {name}"
+                )
+                for name, db_id in (("n1", self.db1.db_id), ("n2", self.db2.db_id))
+            ),
         )
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"table_{table_name}"

@@ -27,14 +27,17 @@ Engineering differences from the reference (documented, deliberate):
   feed Spark's codegen'd ``xxhash64``. JSON-looking strings and nested
   columns (via ``to_json``) go through ``lotad_spark/jvm/CanonicalHash.java``,
   a Java UDF registered as ``get_row_hash`` that stays inside whole-stage
-  codegen: hashing starts no Python worker.
+  codegen: hashing starts no Python worker. The hash is built as one SQL
+  text (``row_hash_sql``), which the JVM parses in one call, where a
+  Column built operator by operator costs a driver round trip each.
 
 ``canonical_value_hash`` below is the Python statement of the semantics and
 the oracle the Java port is tested against (tests/test_hashing.py), down to
 orjson's number and escaping rules and Python's ``repr(float)``.
 
 The Java classes of ``lotad_spark/jvm/`` (this UDF and the JVM helpers of
-the parquet source and the wizard, see ``jvm_helper``) are compiled once per
+the parquet source and the wizard, see ``jvm_helper``, and the local file
+system ``session.get_spark`` installs) are compiled once per
 machine on first use (``javac``, JDK 17+) into one jar under
 ``~/.cache/lotad_spark/<hash of sources + Spark version>/`` and loaded into
 each session with ``ADD JAR``. The hash column is computed last in the
@@ -191,61 +194,75 @@ def jvm_helper(spark, name: str):
     return loader.loadClass(f"lotad_spark.jvm.{name}").newInstance()
 
 
-def _canonical(col: Column) -> Column:
-    return F.call_function(SQL_FUNCTION, col)
+def quote_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backquoted, backticks doubled.
+
+    Every SQL text and every ``F.col`` of a data column takes this form,
+    so a column named ``x.y``, ``a`b`` or ``sp ace`` resolves as itself."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslash escapes, the
+    parser's default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _is_nested(dt: T.DataType) -> bool:
     return isinstance(dt, (T.StructType, T.MapType, T.ArrayType))
 
 
-def canonical_member(
-    col: Column, dtype: T.DataType, json_strings: bool = True
-) -> Column:
-    """Reduce one column to its canonical string member for row hashing.
-
-    Needs ``get_row_hash`` registered in the session that resolves it
-    (``canonical_row_hash`` does that).
+def _member_sql(ident: str, dtype: T.DataType, json_strings: bool) -> str:
+    """SQL text reducing one column to its canonical string member.
 
     * nested types → ``to_json`` then canonical JSON digest;
     * strings → canonical JSON digest only when the value looks like JSON
-      (a JVM ``when`` guard: the UDF never sees plain strings);
+      (a JVM ``CASE`` guard: the UDF never sees plain strings);
       ``json_strings=False`` renders them as-is;
     * binary → base64 rendering;
-    * everything else → string cast; NULL → ``"None"`` (reference parity:
-      ``str(None)``).
+    * booleans → ``"True"``/``"False"``: the reference renders non-JSON
+      scalars with ``str(value)`` (lotad/utils.py:75-77), so a boolean
+      column and its stringified copy must NOT drift against each other,
+      where Spark's string cast yields ``"true"``. ``CASE`` sends a NULL
+      condition to its (absent) ``ELSE``, so NULL stays NULL;
+    * everything else → string cast (float rendering still differs from
+      ``str()`` in corners — ``1e20`` vs ``1.0E20`` — which only matters
+      when one side arrives pre-stringified).
+
+    NULL → ``"None"`` throughout (reference parity: ``str(None)``).
     """
     if _is_nested(dtype):
-        return F.coalesce(_canonical(F.to_json(col)), F.lit(CANONICAL_NULL))
-    if json_strings and isinstance(dtype, T.StringType):
-        looks_json = (
-            col.startswith("{") | col.startswith("[") | col.startswith("%7B")
+        member = f"{SQL_FUNCTION}(to_json({ident}))"
+    elif json_strings and isinstance(dtype, T.StringType):
+        looks_json = " OR ".join(
+            f"startswith({ident}, '{c}')" for c in _JSON_INIT_CHARS
         )
-        member = F.when(looks_json, _canonical(col)).otherwise(col)
-        return F.coalesce(member, F.lit(CANONICAL_NULL))
-    if isinstance(dtype, T.BinaryType):
-        return F.coalesce(F.base64(col), F.lit(CANONICAL_NULL))
-    return _scalar_member(col, dtype)
+        member = (
+            f"CASE WHEN {looks_json} THEN {SQL_FUNCTION}({ident}) ELSE {ident} END"
+        )
+    elif isinstance(dtype, T.BinaryType):
+        member = f"base64({ident})"
+    elif isinstance(dtype, T.BooleanType):
+        member = f"CASE WHEN {ident} THEN 'True' WHEN NOT {ident} THEN 'False' END"
+    else:
+        member = f"CAST({ident} AS STRING)"
+    return f"coalesce({member}, '{CANONICAL_NULL}')"
 
 
-def _scalar_member(col: Column, dtype: T.DataType) -> Column:
-    """String rendering of a primitive with Python ``str()`` parity.
-
-    The reference renders non-JSON scalars with ``str(value)``
-    (lotad/utils.py:75-77), so ``True`` must hash as ``"True"`` — a boolean
-    column and its stringified copy must NOT drift against each other.
-    Spark's ``cast("string")`` yields ``"true"``; fix booleans JVM-side.
-    (Float rendering still differs in corners — ``1e20`` vs ``1.0E20`` —
-    which only matters when one side arrives pre-stringified; documented
-    caveat, not hit by same-typed comparisons.)
-    """
-    if isinstance(dtype, T.BooleanType):
-        # SQL CASE sends NULL conditions to `otherwise`, so a plain
-        # when/otherwise would render NULL as "False"; keep NULL flowing to
-        # the coalesce instead (reference: str(None) == "None").
-        rendered = F.when(col, F.lit("True")).when(~col, F.lit("False"))
-        return F.coalesce(rendered, F.lit(CANONICAL_NULL))
-    return F.coalesce(col.cast("string"), F.lit(CANONICAL_NULL))
+def row_hash_sql(
+    types: Iterable[tuple[str, T.DataType]], *, json_strings: bool = True
+) -> str:
+    """SQL text of the canonical hash over ``(column, type)`` pairs (sorted
+    by name): each column's canonical member feeds Spark's ``xxhash64``,
+    rendered as lower-case hex. The one statement of the row hash: the
+    diff applies it to its normalized columns, everything else through
+    ``canonical_row_hash``. Resolves in a session with ``get_row_hash``
+    registered."""
+    members = ", ".join(
+        _member_sql(quote_ident(c), dt, json_strings)
+        for c, dt in sorted(types, key=lambda pair: pair[0])
+    )
+    return f"lower(hex(xxhash64({members})))"
 
 
 def canonical_row_hash(
@@ -262,11 +279,10 @@ def canonical_row_hash(
     """
     register_sql_functions(df.sparkSession)
     fields = {f.name: f.dataType for f in df.schema.fields}
-    cols = sorted(columns) if columns is not None else sorted(fields)
-    members = [
-        canonical_member(F.col(f"`{c}`"), fields[c], json_strings) for c in cols
-    ]
-    return F.lower(F.hex(F.xxhash64(*members)))
+    cols = fields if columns is None else columns
+    return F.expr(
+        row_hash_sql([(c, fields[c]) for c in cols], json_strings=json_strings)
+    )
 
 
 def with_row_hash(

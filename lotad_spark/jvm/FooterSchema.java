@@ -6,6 +6,8 @@ import java.util.ArrayList;
 import java.util.Comparator;
 import java.util.List;
 
+import com.fasterxml.jackson.core.JsonProcessingException;
+import com.fasterxml.jackson.databind.ObjectMapper;
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FileSystem;
@@ -63,8 +65,12 @@ public final class FooterSchema {
     return json;
   }
 
-  public List<String> nanosColumns() {
-    return nanosColumns;
+  /**
+   * The TIMESTAMP(NANOS) column names as a JSON array: one py4j call, where
+   * iterating a List costs a call per element and an exception at its end.
+   */
+  public String nanosColumns() throws JsonProcessingException {
+    return new ObjectMapper().writeValueAsString(nanosColumns);
   }
 
   /**

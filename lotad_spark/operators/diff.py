@@ -41,15 +41,18 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lotad_spark.hashing import (
     HASH_COL,
     PROVENANCE_COL,
-    canonical_row_hash,
     _is_nested,
+    quote_ident,
+    register_sql_functions,
+    row_hash_sql,
+    sql_string,
 )
 from lotad_spark.sources.parquet import DATE_TYPES
 
@@ -58,8 +61,50 @@ class NoComparableColumns(ValueError):
     """The two inputs share no column left to compare."""
 
 
-def _quoted(c: str) -> F.Column:
-    return F.col(f"`{c}`")
+def _json_if_nested(ident: str, dt: T.DataType) -> tuple[str, T.DataType]:
+    """A column as SQL text and type, nested types rendered as JSON text."""
+    if _is_nested(dt):
+        return f"to_json({ident})", T.StringType()
+    return ident, dt
+
+
+def _normalized(
+    df1: DataFrame,
+    df2: DataFrame,
+    ignore_columns: Iterable[str],
+    ignore_dates: bool,
+) -> tuple[list[str], list[str], list[tuple[str, T.DataType]]]:
+    """Each side's normalization as SQL text, and the normalized types.
+
+    Returns ``(exprs1, exprs2, types)``: one ``expr AS name`` per shared
+    column for each side, and ``(name, type)`` of the normalized columns
+    (shared by both sides). Mirrors reference lotad/db_compare.py:283-302:
+    schema intersection (P1), ignore rules (P2), date exclusion (P9),
+    nested→JSON (P3), mismatch→string cast (P4), sorted order (P6).
+    """
+    ignore = set(ignore_columns)
+    s1 = {f.name: f.dataType for f in df1.schema.fields}
+    s2 = {f.name: f.dataType for f in df2.schema.fields}
+
+    exprs1: list[str] = []
+    exprs2: list[str] = []
+    types: list[tuple[str, T.DataType]] = []
+    for name in sorted(set(s1) & set(s2)):
+        if name in ignore:
+            continue
+        if ignore_dates and (
+            isinstance(s1[name], DATE_TYPES) or isinstance(s2[name], DATE_TYPES)
+        ):
+            continue
+        ident = quote_ident(name)
+        (e1, t1), (e2, t2) = (_json_if_nested(ident, s[name]) for s in (s1, s2))
+        if t1 != t2:
+            e1, e2 = f"CAST({e1} AS STRING)", f"CAST({e2} AS STRING)"
+            t1 = T.StringType()
+        exprs1.append(f"{e1} AS {ident}")
+        exprs2.append(f"{e2} AS {ident}")
+        types.append((name, t1))
+    return exprs1, exprs2, types
 
 
 def normalize_for_diff(
@@ -72,37 +117,10 @@ def normalize_for_diff(
     """Project both sides onto the comparable plane.
 
     Returns ``(df1_norm, df2_norm, columns)`` where columns are the sorted
-    shared column names. Mirrors reference lotad/db_compare.py:283-302:
-    schema intersection (P1), ignore rules (P2), date exclusion (P9),
-    nested→JSON (P3), mismatch→string cast (P4), sorted order (P6).
+    shared column names; see ``_normalized`` for the rules.
     """
-    ignore = set(ignore_columns)
-    s1 = {f.name: f.dataType for f in df1.schema.fields}
-    s2 = {f.name: f.dataType for f in df2.schema.fields}
-
-    shared: list[str] = []
-    for name in sorted(set(s1) & set(s2)):
-        if name in ignore:
-            continue
-        if ignore_dates and (
-            isinstance(s1[name], DATE_TYPES) or isinstance(s2[name], DATE_TYPES)
-        ):
-            continue
-        shared.append(name)
-
-    def side(df: DataFrame, own: dict, other: dict) -> DataFrame:
-        exprs = []
-        for name in shared:
-            col, dt = _quoted(name), own[name]
-            if _is_nested(dt):
-                col, dt = F.to_json(col), T.StringType()
-            other_dt = T.StringType() if _is_nested(other[name]) else other[name]
-            if dt != other_dt:
-                col = col.cast("string")
-            exprs.append(col.alias(name))
-        return df.select(*exprs)
-
-    return side(df1, s1, s2), side(df2, s2, s1), shared
+    exprs1, exprs2, types = _normalized(df1, df2, ignore_columns, ignore_dates)
+    return df1.selectExpr(*exprs1), df2.selectExpr(*exprs2), [c for c, _ in types]
 
 
 @dataclass
@@ -126,7 +144,13 @@ class DiffResult:
         return self.diff.isEmpty()
 
     def counts(self) -> dict[str, int]:
-        """Drifted-row count per provenance side (summary A1)."""
+        """Drifted-row count per provenance side (summary A1), keyed by db
+        id; equal ids raise ``ValueError``, as one key cannot hold both."""
+        if self.db1_id == self.db2_id:
+            raise ValueError(
+                f"counts: both sides have the db id {self.db1_id!r}; "
+                "count by side from the diff rows instead"
+            )
         if self._counts is None:
             rows = (
                 self.diff.groupBy(PROVENANCE_COL)
@@ -141,18 +165,18 @@ class DiffResult:
         return self._counts
 
 
-def _tag(df: DataFrame, side: int, cols: list[str], json_strings: bool) -> DataFrame:
-    """Hash ``df`` and tag it with its side, 0 or 1, as a ``tinyint``.
+def _tag(
+    df: DataFrame, side: int, types: list[tuple[str, T.DataType]], json_strings: bool
+) -> DataFrame:
+    """Hash the normalized ``df`` (column types ``types``) and tag it with
+    its side, 0 or 1, as a ``tinyint``.
 
     The plan compares and shuffles the side, never the user's db id: ids
     may be equal, and a one-byte tag is what each shuffled row carries."""
-    hashed = df.withColumn(
-        HASH_COL, canonical_row_hash(df, cols, json_strings=json_strings)
-    )
-    return hashed.select(
-        F.lit(side).cast("tinyint").alias(PROVENANCE_COL),
-        *[_quoted(c) for c in cols],
-        HASH_COL,
+    return df.selectExpr(
+        f"CAST({side} AS TINYINT) AS {PROVENANCE_COL}",
+        *(quote_ident(c) for c, _ in types),
+        f"{row_hash_sql(types, json_strings=json_strings)} AS {HASH_COL}",
     )
 
 
@@ -175,11 +199,11 @@ def diff_tables(
     like JSON would then drift on formatting alone.
 
     The plan is one exchange of both sides' tagged rows by hash; see the
-    module docs for its shape and for duplicate-key skew.
+    module docs for its shape and for duplicate-key skew. It is built
+    from SQL text, a few driver round trips per step whatever the width.
     """
-    n1, n2, cols = normalize_for_diff(
-        df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
-    )
+    exprs1, exprs2, types = _normalized(df1, df2, ignore_columns, ignore_dates)
+    cols = [c for c, _ in types]
     if not cols:
         raise NoComparableColumns(
             "diff_tables: the two inputs share no comparable columns "
@@ -191,10 +215,10 @@ def diff_tables(
             f"diff_tables: input data columns collide with reserved metadata "
             f"columns {sorted(reserved)}; rename them before diffing"
         )
-    t1 = _tag(n1, 0, cols, json_strings)
-    t2 = _tag(n2, 1, cols, json_strings)
+    register_sql_functions(df1.sparkSession)
+    t1 = _tag(df1.selectExpr(*exprs1), 0, types, json_strings)
+    t2 = _tag(df2.selectExpr(*exprs2), 1, types, json_strings)
 
-    w = Window.partitionBy(HASH_COL)
     # A hash survives iff it was observed on exactly one side:
     # min(side) == max(side) over the hash's window (sides are the
     # literals 0 and 1; the ids replace them only in the final
@@ -204,20 +228,22 @@ def diff_tables(
     # normalize -0.0 to 0.0, so float and double columns stay out of the
     # key and keep their first raw value; that is exact, because equal
     # hashes mean equal rendered floats.
-    floats = {f.name for f in n1.schema.fields
-              if isinstance(f.dataType, (T.FloatType, T.DoubleType))}
+    window = f"OVER (PARTITION BY {HASH_COL})"
+    keys = [c for c, dt in types if not isinstance(dt, (T.FloatType, T.DoubleType))]
     diff = (
         t1.unionByName(t2)
-        .withColumn("_min_side", F.min(PROVENANCE_COL).over(w))
-        .withColumn("_max_side", F.max(PROVENANCE_COL).over(w))
-        .filter(F.col("_min_side") == F.col("_max_side"))
+        .selectExpr(
+            "*",
+            f"min({PROVENANCE_COL}) {window} AS _min_side",
+            f"max({PROVENANCE_COL}) {window} AS _max_side",
+        )
+        .filter("_min_side = _max_side")
         .drop("_min_side", "_max_side")
-        .dropDuplicates([PROVENANCE_COL, HASH_COL, *(c for c in cols if c not in floats)])
-        .select(
-            F.when(F.col(PROVENANCE_COL) == 0, F.lit(db1_id))
-            .otherwise(F.lit(db2_id))
-            .alias(PROVENANCE_COL),
-            *[_quoted(c) for c in cols],
+        .dropDuplicates([PROVENANCE_COL, HASH_COL, *keys])
+        .selectExpr(
+            f"CASE WHEN {PROVENANCE_COL} = 0 THEN {sql_string(db1_id)} "
+            f"ELSE {sql_string(db2_id)} END AS {PROVENANCE_COL}",
+            *(quote_ident(c) for c in cols),
             HASH_COL,
         )
     )

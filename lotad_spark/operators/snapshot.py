@@ -16,7 +16,12 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lotad_spark.hashing import HASH_COL, PROVENANCE_COL, canonical_row_hash
+from lotad_spark.hashing import (
+    HASH_COL,
+    PROVENANCE_COL,
+    canonical_row_hash,
+    quote_ident,
+)
 
 
 def write_hash_snapshot(
@@ -105,7 +110,7 @@ def diff_against_snapshot(
         # per hash (matching write_hash_snapshot's distinct()).
         .select(
             F.lit(db_id).alias(PROVENANCE_COL),
-            *[F.col(f"`{c}`") for c in cols],
+            *[F.col(quote_ident(c)) for c in cols],
             HASH_COL,
         )
         .dropDuplicates()

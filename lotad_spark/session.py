@@ -6,13 +6,20 @@ pipeline's ``mapInPandas`` stages), shuffle partitions sized to
 cores instead of the 200 default, UTC session timezone so timestamp
 comparisons against external engines (DuckDB oracle) are stable. Every
 session gets the Java ``get_row_hash`` UDF (``hashing.register_sql_functions``).
+A local master also gets ``lotad_spark/jvm/LocalFs.java`` as the ``file:``
+file system, which sets the permissions of written files in-process
+instead of spawning a ``chmod`` per file (see ``_in_process_permissions``).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_LOCAL_FS_CLASS = "lotad_spark.jvm.LocalFs"
 
 
 def default_parallelism() -> int:
@@ -102,6 +109,33 @@ def _default_driver_mem() -> str:
     return f"{max(1, min(16, avail_gb // 2))}g"
 
 
+def _in_process_permissions(master: str) -> dict[str, str]:
+    """Confs that install ``LocalFs`` as the ``file:`` file system.
+
+    Without Hadoop's native library, every directory and file a local
+    write creates (part files, ``.crc`` files, ``_temporary`` and attempt
+    directories) costs a ``chmod`` process; ``LocalFs`` makes the same
+    system call in-process. Hadoop loads the class by name, so
+    the jar must be on the driver's class path, which only a JVM launch
+    sets (a caller's own ``spark.driver.extraClassPath`` is appended); and
+    only a local master runs every executor in the driver JVM. A JVM
+    already running without the jar (one that ``spark-submit`` launched,
+    say) keeps Hadoop's file system."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    from lotad_spark.hashing import canonical_hash_jar
+
+    jar = canonical_hash_jar(pyspark.__version__)
+    fs_impl = {"spark.hadoop.fs.file.impl": _LOCAL_FS_CLASS}
+    gateway = SparkContext._gateway
+    if gateway is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:  # spark-submit's JVM
+            return {}
+        return {"spark.driver.extraClassPath": jar, **fs_impl}
+    class_path = gateway.jvm.java.lang.System.getProperty("java.class.path")
+    return fs_impl if jar in class_path.split(os.pathsep) else {}
+
+
 def get_spark(
     app_name: str = "lotad_spark",
     *,
@@ -127,9 +161,10 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             _repo_root + ((os.pathsep + _pp) if _pp else "")
         )
+    master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(master)
         # Fork Python workers from a daemon that has pandas/pyarrow and
         # the Arrow-UDF serializer stack ALREADY imported (see
         # lotad_spark/python_daemon.py): a burst of concurrent Arrow
@@ -186,9 +221,13 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", os.environ.get("LOTAD_SPARK_UI", "false"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = _in_process_permissions(master)
+    for k, v in (extra_conf or {}).items():
+        if k == "spark.driver.extraClassPath" and k in conf:
+            v = conf[k] + os.pathsep + v
+        conf[k] = v
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # SQL-callable canonical hash (a Java UDF), mirroring the reference's

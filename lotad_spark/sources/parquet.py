@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lotad_spark.hashing import jvm_helper
+from lotad_spark.hashing import jvm_helper, quote_ident
 
 
 def _open_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
@@ -50,7 +50,7 @@ def _open_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]
     reader = spark.read
     if schema is not None:
         reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
-    return reader.parquet(path), list(footer.nanosColumns())
+    return reader.parquet(path), json.loads(footer.nanosColumns())
 
 
 def _floor_div_1000(col_name: str) -> F.Column:
@@ -60,8 +60,8 @@ def _floor_div_1000(col_name: str) -> F.Column:
     semantics. Integer-only (no double round-trip — int64 ns epochs exceed
     2^53 and would lose precision through FLOOR(x / 1000.0)).
     """
-    c = F.col(f"`{col_name}`")
-    q = F.expr(f"`{col_name}` DIV 1000")
+    c = F.col(quote_ident(col_name))
+    q = F.expr(f"{quote_ident(col_name)} DIV 1000")
     return F.when(c % 1000 < 0, q - 1).otherwise(q)
 
 
@@ -81,7 +81,9 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
         df = df.withColumn(c, F.timestamp_micros(_floor_div_1000(c)))
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+            df = df.withColumn(
+                field.name, F.col(quote_ident(field.name)).cast("timestamp")
+            )
     return df
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lotad_spark.hashing import jvm_helper
+from lotad_spark.hashing import jvm_helper, quote_ident, sql_string
 
 SAMPLE_LIMIT = 10000  # reference: LIMIT 10000
 
@@ -29,7 +29,7 @@ def column_overlap_count(
 ) -> int:
     """Rows of ``df2`` whose ``column`` value appears in a distinct sample of
     ``df1[column]`` (the wizard's J3 probe, as a broadcast semi join)."""
-    sample = df1.select(F.col(f"`{column}`")).distinct().limit(sample_limit)
+    sample = df1.select(F.col(quote_ident(column))).distinct().limit(sample_limit)
     return df2.join(F.broadcast(sample), on=column, how="left_semi").count()
 
 
@@ -73,34 +73,33 @@ def suggest_ignore_columns(
     instead of rows × columns — the exchange is bounded by config, not
     by table size (pinned by tests/test_wizard.py). Exact: every value in
     the global first-k is in some partition's local first-k."""
-    from pyspark.sql import Window
-
     s1 = {f.name: f.dataType for f in df1.schema.fields}
     s2 = {f.name: f.dataType for f in df2.schema.fields}
     shared = [c for c in sorted(set(s1) & set(s2)) if s1[c] == s2[c]]
     if not shared:
         return []
 
+    # SQL text: a few driver round trips per step, whatever the width.
+    pairs = ", ".join(
+        f"struct({sql_string(c)} AS column_name, "
+        f"CAST({quote_ident(c)} AS STRING) AS value)"
+        for c in shared
+    )
+
     def melt(df: DataFrame) -> DataFrame:
-        pairs = F.array(*[
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.col(f"`{c}`").cast("string").alias("value"),
-            )
-            for c in shared
-        ])
         return (
-            df.select(F.explode(pairs).alias("p"))
+            df.selectExpr(f"explode(array({pairs})) AS p")
             .select("p.column_name", "p.value")
-            .filter(F.col("value").isNotNull())
+            .filter("value IS NOT NULL")
         )
 
-    w = Window.partitionBy("column_name").orderBy("value")
     sample = (
         _local_top_values(melt(df1), sample_limit)
         .distinct()
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= sample_limit)
+        .selectExpr(
+            "*", "row_number() OVER (PARTITION BY column_name ORDER BY value) AS _r"
+        )
+        .filter(f"_r <= {int(sample_limit)}")
         .drop("_r")
     )
     overlapping = {

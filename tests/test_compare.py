@@ -308,6 +308,25 @@ class TestCompareAll:
             "rows_only_in_db2",
         }
 
+    def test_each_summary_table_is_one_file(self, spark, tmp_path):
+        """A few summary rows are one task and one data file, not one each."""
+        from lotad_spark.analysis import (
+            DATA_DRIFT_SUMMARY_TABLE,
+            MISSING_TABLE_TABLE,
+            SCHEMA_DRIFT_TABLE,
+            DriftAnalysis,
+        )
+        from lotad_spark.drift import TableDataDiff
+
+        analysis = DriftAnalysis(spark, str(tmp_path / "out"), "db1", "db2")
+        for name in ("a", "b", "c"):
+            analysis.add_data_drift(TableDataDiff(name, str(tmp_path / name), 1, 2))
+        analysis.write()
+        for table in (DATA_DRIFT_SUMMARY_TABLE, MISSING_TABLE_TABLE, SCHEMA_DRIFT_TABLE):
+            parts = list((tmp_path / "out" / table).glob("part-*"))
+            assert len(parts) == 1, (table, parts)
+        summary = spark.read.parquet(analysis.table_dir(DATA_DRIFT_SUMMARY_TABLE))
+        assert summary.count() == 3
 
     def test_summary_counts_past_int32(self, spark, tmp_path):
         """A drifted-row count over 2^31-1 is written and read back whole."""

@@ -4,10 +4,9 @@
 import pytest
 from pyspark.sql import functions as F
 
-from lotad_spark.hashing import HASH_COL, PROVENANCE_COL
+from lotad_spark.hashing import HASH_COL, PROVENANCE_COL, quote_ident, with_row_hash
 from lotad_spark.operators.diff import (
     DiffResult,
-    _tag,
     diff_tables,
     normalize_for_diff,
 )
@@ -26,11 +25,20 @@ def reference_diff(
     """The reference's diff plan, translated directly: two left-anti joins
     on the canonical hash + union-distinct
     (db_compare_create_tmp_table_merge.sql:1-45). The test oracle for the
-    engine's strategies; the scenarios below pin it too."""
+    engine's strategies; the scenarios below pin it too. It hashes through
+    the public ``with_row_hash``, not the diff's own SQL text."""
     n1, n2, cols = normalize_for_diff(
         df1, df2, ignore_columns=ignore_columns, ignore_dates=ignore_dates
     )
-    t1, t2 = _tag(n1, 0, cols, True), _tag(n2, 1, cols, True)
+
+    def tag(df, side):
+        return with_row_hash(df, cols).select(
+            F.lit(side).cast("tinyint").alias(PROVENANCE_COL),
+            *[F.col(quote_ident(c)) for c in cols],
+            HASH_COL,
+        )
+
+    t1, t2 = tag(n1, 0), tag(n2, 1)
     side = F.col(PROVENANCE_COL)
     diff = (
         t1.join(t2.select(HASH_COL), HASH_COL, "left_anti")
@@ -39,7 +47,7 @@ def reference_diff(
         .select(
             F.when(side == 0, F.lit(db1_id)).otherwise(F.lit(db2_id))
             .alias(PROVENANCE_COL),
-            *[F.col(f"`{c}`") for c in cols],
+            *[F.col(quote_ident(c)) for c in cols],
             HASH_COL,
         )
     )
@@ -176,6 +184,70 @@ class TestEqualIds:
         got = rows(diff_tables(df1, df2, db1_id="x", db2_id="x"))
         assert got == [("x", 2, "b"), ("x", 3, "c")]
         assert got == rows(reference_diff(df1, df2, db1_id="x", db2_id="x"))
+
+    def test_counts_reject_equal_ids(self, spark):
+        """A dict keyed by db id cannot hold both sides' counts."""
+        df = spark.createDataFrame([(1,)], "id long")
+        res = diff_tables(df, df.filter("id > 1"), db1_id="x", db2_id="x")
+        with pytest.raises(ValueError, match="'x'"):
+            res.counts()
+
+
+class TestColumnNames:
+    @pytest.mark.parametrize("name", ["x.y", "a`b", "sp ace"])
+    def test_odd_names_diff_like_the_reference(self, spark, name):
+        """Names that need quoting in SQL text resolve as themselves."""
+        df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+        df2 = spark.createDataFrame([(1, "a"), (3, "c")], "id long, v string")
+        df1, df2 = (d.withColumnRenamed("v", name) for d in (df1, df2))
+
+        def rows(res):
+            return sorted((r.observed_in, r.id, r[name]) for r in res.diff.collect())
+
+        got = rows(diff_tables(df1, df2))
+        assert got == [("db1", 2, "b"), ("db2", 3, "c")]
+        assert got == rows(reference_diff(df1, df2))
+
+
+    def test_ids_with_quotes_and_backslashes(self, spark):
+        df1 = spark.createDataFrame([(1,)], "id long")
+        df2 = spark.createDataFrame([(2,)], "id long")
+        ids = ("it's", "c:\\db\\")
+        res = diff_tables(df1, df2, db1_id=ids[0], db2_id=ids[1])
+        assert sorted((r.observed_in, r.id) for r in res.diff.collect()) == [
+            (ids[1], 2), (ids[0], 1)
+        ]
+
+
+class TestDriverRoundTrips:
+    @pytest.mark.parametrize("width,bound", [(3, 150), (30, 400)])
+    def test_plan_build_is_a_few_py4j_commands(self, spark, width, bound):
+        """Building a diff plan runs no job; its cost is driver round
+        trips. SQL text keeps them to a few per step, not a few per
+        column and operator (Column-built plans sent 782 commands at 3
+        columns and 5,291 at 30)."""
+        from py4j.clientserver import ClientServerConnection
+
+        def wide():
+            return spark.range(10).selectExpr(
+                *[f"id + {i} AS c{i:02d}" for i in range(width)]
+            )
+
+        diff_tables(wide(), wide())  # resolves the session's lookups once
+        df1, df2 = wide(), wide()
+        sent = []
+        send = ClientServerConnection.send_command
+
+        def counting(conn, command):
+            sent.append(command)
+            return send(conn, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            diff_tables(df1, df2)
+        finally:
+            ClientServerConnection.send_command = send
+        assert len(sent) < bound
 
 
 class TestNormalize:

@@ -60,6 +60,15 @@ class TestSuggestIgnoreColumns:
         # Reference counts db2 rows whose value appears in the db1 sample.
         assert column_overlap_count(df1, df2, "c") == 2
 
+    def test_names_needing_quotes(self, spark):
+        """Columns named ``a`b``, ``x.y`` and ``sp ace`` probe as themselves."""
+        schema = "id int, `a``b` string, `x.y` string, `sp ace` string"
+        df1 = spark.createDataFrame([(1, "u1", "k", "s1")], schema)
+        df2 = spark.createDataFrame([(1, "u2", "k", "s2")], schema)
+        assert suggest_ignore_columns(df1, df2) == ["a`b", "sp ace"]
+        assert column_overlap_count(df1, df2, "a`b") == 0
+        assert column_overlap_count(df1, df2, "x.y") == 1
+
     def test_batched_probe_job_count_independent_of_width(self, spark):
         """All columns probe in ONE action — a wide table must not pay one
         sequential Spark job per column (round-3 shape: N jobs for N

@@ -10,6 +10,11 @@ parquet tables mirroring the reference's output DuckDB file:
 * ``<out>/lotad_missing_table_drift`` — tables present on one side only;
 * ``<out>/lotad_table_schema_drift`` — column-level schema drift.
 
+The drift tables are Spark writes, one job per compared table. The three
+summary tables hold a few rows each, already on the driver; they are
+written from there as parquet files with no Spark job, as the reference's
+summaries are cheap ``INSERT``s into its output file.
+
 Reference parity quirk, kept deliberately: the reference wraps every value
 of the missing-table and schema-drift records in literal double quotes at
 INSERT time (lotad/data_analysis.py:110-116,130-135) — ``"customer"``, and
@@ -24,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from lotad_spark.drift import MissingTableDrift, TableDataDiff, TableSchemaDrift
-from lotad_spark.sources.memory import bounded_local_df
+from lotad_spark.sources.memory import write_bounded_parquet
 
 DATA_DRIFT_SUMMARY_TABLE = "lotad_db_data_drift_summary"
 MISSING_TABLE_TABLE = "lotad_missing_table_drift"
@@ -145,16 +150,15 @@ class DriftAnalysis:
         return f"{self.output_path}/{table_name}"
 
     def write(self) -> None:
-        """Materialize the three summary tables as parquet, one file each
-        (a few rows: a file per row would cost a task and a file each)."""
+        """Materialize the three summary tables as parquet, one file each.
+        They are written from the driver (``write_bounded_parquet``): a
+        few rows need no Spark job, task or commit."""
         for rows, schema, name in (
             (self._summary_rows, _SUMMARY_SCHEMA, DATA_DRIFT_SUMMARY_TABLE),
             (self._missing_rows, _MISSING_SCHEMA, MISSING_TABLE_TABLE),
             (self._schema_rows, _SCHEMA_DRIFT_SCHEMA, SCHEMA_DRIFT_TABLE),
         ):
-            bounded_local_df(self.spark, rows, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(self.table_dir(name))
+            write_bounded_parquet(self.spark, rows, schema, self.table_dir(name))
 
     # ---- getters (sorted like the reference's, data_analysis.py:181-200) ----
 

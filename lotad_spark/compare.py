@@ -13,7 +13,8 @@ Spark re-expression of the reference's ``DatabaseComparator.compare_all``
 
 Concurrency: the reference fans out one OS process per table
 (multiprocessing.Pool, db_compare.py:193). Here a driver ThreadPool submits
-one Spark job chain per table and the FAIR scheduler multiplexes executors —
+one Spark job chain per table, each thread in its own FAIR pool, and the
+scheduler multiplexes executors —
 tables run concurrently *and* each table's scan/join parallelizes across the
 cluster, which the reference cannot do.
 """
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import logging
 import re
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from collections.abc import Iterable
@@ -49,6 +51,9 @@ from lotad_spark.sources.parquet import schema_types
 # no Python process, so the value is not re-priced for the current
 # plan; re-sweep it before changing it.
 MAX_CONCURRENT_TABLES = 4
+# compare_all's pool threads are named <prefix>_0 .. <prefix>_<workers-1>,
+# and each thread's jobs run in the FAIR pool of its own name.
+_POOL_PREFIX = "lotad_table"
 
 
 @dataclass
@@ -179,8 +184,11 @@ class DatabaseComparator:
         # metrics of the write job itself — no persist, no re-read, no
         # second count job (mirrors the reference's CTAS-then-aggregate
         # shape, db_compare.py:308-312,356-364, minus its extra scan). Each
-        # table is also pinned to its own FAIR pool so a big table's write
-        # can't starve the small ones submitted by sibling threads.
+        # running table is also pinned to its own FAIR pool so a big table's
+        # write can't starve the small ones submitted by sibling threads.
+        # The pool is the submitting thread's slot, not the table: Spark
+        # never drops a pool, and sorts every pool on each resource offer,
+        # so a pool per table name would pile up over a catalog.
         out_dir = self.analysis.table_dir(table_name)
         obs = Observation()
         observed = result.diff.observe(
@@ -194,7 +202,7 @@ class DatabaseComparator:
             ),
         )
         self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"table_{table_name}"
+            "spark.scheduler.pool", threading.current_thread().name
         )
         try:
             observed.write.mode("overwrite").parquet(out_dir)
@@ -245,7 +253,9 @@ class DatabaseComparator:
         all_schema_drift = []
         drifted: list[TableDataDiff] = []
         workers = max(1, min(MAX_CONCURRENT_TABLES, len(shared)))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
+        with ThreadPoolExecutor(
+            max_workers=workers, thread_name_prefix=_POOL_PREFIX
+        ) as pool:
             for schema_drift, res in pool.map(
                 lambda t: self._compare_one(t, t in compare_data), shared
             ):

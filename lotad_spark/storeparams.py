@@ -17,16 +17,11 @@ from pyspark.sql.utils import AnalysisException
 def write_params(
     spark: SparkSession, path: str, schema: str, values: tuple
 ) -> None:
-    """Record build parameters as a one-row parquet at ``path``.
+    """Record build parameters as a one-row parquet at ``path``, written
+    from the driver with no Spark job (``write_bounded_parquet``)."""
+    from lotad_spark.sources.memory import write_bounded_parquet
 
-    A ``bounded_local_df`` relation: a ``createDataFrame(list)`` one is a
-    Python RDD, which cost ~4 s of Python-worker roundtrips per params
-    write at local[32]."""
-    from lotad_spark.sources.memory import bounded_local_df
-
-    bounded_local_df(spark, [values], schema).write.mode(
-        "overwrite"
-    ).parquet(path)
+    write_bounded_parquet(spark, [values], schema, path)
 
 
 def read_params(spark: SparkSession, path: str) -> Row | None:

@@ -20,6 +20,50 @@ def _dbs(spark, t1: dict, t2: dict):
     return DictDatabase(t1, "db1"), DictDatabase(t2, "db2")
 
 
+def _small_catalog(spark):
+    """Two shared tables, one drifted and one with zero data drift but a
+    column only db2 has; one table only db1 has."""
+    from lotad_spark.sources.memory import bounded_local_df
+
+    def t(rows, ddl):
+        return bounded_local_df(spark, rows, ddl)
+
+    return _dbs(
+        spark,
+        {
+            "drifted": t([(1, "x"), (2, "y")], "k int, v string"),
+            "same": t([(1,)], "k int"),
+            "gone": t([(1,)], "k int"),
+        },
+        {
+            "drifted": t([(1, "x"), (3, "z")], "k int, v string"),
+            "same": t([(1, 1.0)], "k int, extra double"),
+        },
+    )
+
+
+class _SqlExecutions:
+    """SQL executions recorded in the session's status store since
+    construction. The store is filled from the listener bus, so each read
+    first waits for the bus to drain."""
+
+    def __init__(self, spark):
+        self._store = spark._jsparkSession.sharedState().statusStore()
+        self._bus = spark.sparkContext._jsc.sc().listenerBus()
+        self._first = max(self._ids(), default=-1) + 1
+
+    def _ids(self):
+        self._bus.waitUntilEmpty()
+        it = self._store.executionsList().iterator()
+        ids = []
+        while it.hasNext():
+            ids.append(int(it.next().executionId()))
+        return ids
+
+    def since(self) -> int:
+        return sum(1 for i in self._ids() if i >= self._first)
+
+
 class TestCompareAll:
     def test_no_changes_all_empty(self, spark, customer, tmp_path):
         db1, db2 = _dbs(spark, {"customer": customer}, {"customer": customer})
@@ -343,6 +387,37 @@ class TestCompareAll:
         ).collect()[0]
         assert (row.rows_only_in_db1, row.rows_only_in_db2) == (3_000_000_000, 7)
 
+    def test_one_job_per_compared_table(self, spark, tmp_path):
+        """compare_all runs one SQL execution per compared table and none
+        for the summary tables, which are written from the driver."""
+        db1, db2 = _small_catalog(spark)
+        out = str(tmp_path / "out")
+        compare_all(spark, db1, db2, output_path=out)  # warm-up
+        execs = _SqlExecutions(spark)
+        res = compare_all(spark, db1, db2, output_path=out)
+        assert execs.since() == 2
+        assert [(d.table_name, d.rows_only_in_db1, d.rows_only_in_db2)
+                for d in res.data_drift] == [("drifted", 1, 1)]
+        assert '"gone" not found in "db2"' in res.report()
+        assert '"same"."extra"' in res.report()
+
+    def test_fair_pools_bounded_by_threads(self, spark, tmp_path):
+        """Each compare_all thread has one FAIR pool, so pools do not pile
+        up one per table name: Spark never drops a pool."""
+        from lotad_spark.compare import MAX_CONCURRENT_TABLES
+        from lotad_spark.sources.memory import bounded_local_df
+
+        def side(v):
+            return {f"t{i}": bounded_local_df(spark, [(i, v)], "k int, v string")
+                    for i in range(6)}
+
+        db1, db2 = _dbs(spark, side("a"), side("b"))
+        for run in range(2):
+            res = compare_all(spark, db1, db2, output_path=str(tmp_path / f"o{run}"))
+            assert len(res.data_drift) == 6
+        queue = spark.sparkContext._jsc.sc().taskScheduler().rootPool().schedulableQueue()
+        assert queue.size() <= MAX_CONCURRENT_TABLES + 1
+
     def test_equal_db_ids_rejected(self, spark, customer, tmp_path):
         """The per-side counts and summary rows are keyed by db id, so two
         sides with one id could not be told apart."""
@@ -368,6 +443,105 @@ class TestBoundedLocalDf:
 
         with pytest.raises(ValueError, match="2 fields"):
             bounded_local_df(spark, [(1, "a", "extra")], "k bigint, v string")
+
+
+class TestSummaryFiles:
+    """The summary tables are parquet files written from the driver; they
+    must read back like the Spark write they replace."""
+
+    NAMES = ("plain", "q'uo\"te", "back\\slash", "nön-ascii 表")
+
+    def _analysis(self, spark, out, names):
+        from lotad_spark.analysis import DriftAnalysis
+        from lotad_spark.drift import (
+            MissingTableDrift,
+            TableDataDiff,
+            TableSchemaDrift,
+        )
+
+        analysis = DriftAnalysis(spark, out, "db1", "db2")
+        for i, name in enumerate(names):
+            analysis.add_data_drift(TableDataDiff(name, f"{out}/{i}", i, 2 * i))
+            analysis.add_missing_table_drift([MissingTableDrift(name, "db1", "db2")])
+            analysis.add_schema_drift(
+                [TableSchemaDrift(name, name, "db1", "db2", "VARCHAR", None)]
+            )
+        return analysis
+
+    @staticmethod
+    def _tables(analysis):
+        from lotad_spark.analysis import (
+            _MISSING_SCHEMA,
+            _SCHEMA_DRIFT_SCHEMA,
+            _SUMMARY_SCHEMA,
+            DATA_DRIFT_SUMMARY_TABLE,
+            MISSING_TABLE_TABLE,
+            SCHEMA_DRIFT_TABLE,
+        )
+
+        return (
+            (DATA_DRIFT_SUMMARY_TABLE, _SUMMARY_SCHEMA, analysis._summary_rows),
+            (MISSING_TABLE_TABLE, _MISSING_SCHEMA, analysis._missing_rows),
+            (SCHEMA_DRIFT_TABLE, _SCHEMA_DRIFT_SCHEMA, analysis._schema_rows),
+        )
+
+    @pytest.mark.parametrize("names", [NAMES, ()], ids=["rows", "empty"])
+    def test_read_back_with_ddl_schema(self, spark, tmp_path, names):
+        import duckdb
+        from pyspark.sql.types import _parse_datatype_string
+
+        analysis = self._analysis(spark, str(tmp_path / "out"), names)
+        analysis.write()
+        for table, ddl, rows in self._tables(analysis):
+            assert len(rows) == len(names)
+            path = analysis.table_dir(table)
+            df = spark.read.parquet(path)
+            assert df.schema == _parse_datatype_string(ddl), table
+            assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
+            got = duckdb.sql(
+                f"SELECT * FROM read_parquet('{path}/*.parquet')"
+            ).fetchall()
+            assert sorted(got) == sorted(rows), table
+
+    def test_rewrite_replaces_the_table(self, spark, tmp_path):
+        out = tmp_path / "out"
+        analysis = self._analysis(spark, str(out), self.NAMES)
+        analysis.write()
+        analysis.write()
+        for table, _, rows in self._tables(analysis):
+            files = sorted(p.name for p in (out / table).iterdir()
+                           if not p.name.endswith(".crc"))
+            assert len(files) == 2 and files[0] == "_SUCCESS", files
+            assert files[1].startswith("part-00000-"), files
+            assert files[1].endswith("-c000.snappy.parquet"), files
+            assert spark.read.parquet(str(out / table)).count() == len(rows)
+
+    def test_file_uri_output_path(self, spark, tmp_path):
+        analysis = self._analysis(spark, f"file://{tmp_path}/out", self.NAMES)
+        analysis.write()
+        for table, _, rows in self._tables(analysis):
+            assert (tmp_path / "out" / table / "_SUCCESS").exists()
+            df = spark.read.parquet(analysis.table_dir(table))
+            assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
+
+
+class TestWriteBoundedParquet:
+    def test_starts_no_sql_execution(self, spark, tmp_path):
+        from lotad_spark.storeparams import read_params, write_params
+
+        execs = _SqlExecutions(spark)
+        write_params(spark, str(tmp_path / "params"), "n int, ok boolean", (3, True))
+        assert execs.since() == 0
+        row = read_params(spark, str(tmp_path / "params"))
+        assert (row.n, row.ok) == (3, True)
+
+    def test_row_width_must_match_schema(self, spark, tmp_path):
+        from lotad_spark.sources.memory import write_bounded_parquet
+
+        with pytest.raises(ValueError, match="2 fields"):
+            write_bounded_parquet(spark, [(1, "a", "extra")], "k bigint, v string",
+                                  str(tmp_path / "t"))
+        assert not (tmp_path / "t").exists()
 
 
 class TestNoPythonWorker:

@@ -33,7 +33,12 @@ Engineering differences from the reference (documented, deliberate):
 
 ``canonical_value_hash`` below is the Python statement of the semantics and
 the oracle the Java port is tested against (tests/test_hashing.py), down to
-orjson's number and escaping rules and Python's ``repr(float)``.
+orjson's number and escaping rules and Python's ``repr(float)``. The Java
+port parses with the Jackson streaming parser of Spark's own jars, its size
+limits lifted, and adds the rejections orjson makes and Jackson does not
+(trailing content, lone surrogates, numbers that overflow a double, non-ASCII
+characters in ``\\u`` escapes); which near-miss documents parse is pinned by
+a mutation fuzz against the oracle.
 
 The Java classes of ``lotad_spark/jvm/`` (this UDF and the JVM helpers of
 the parquet source and the wizard, see ``jvm_helper``, and the local file

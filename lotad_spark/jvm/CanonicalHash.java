@@ -1,6 +1,7 @@
 package lotad_spark.jvm;
 
 import java.io.ByteArrayOutputStream;
+import java.io.IOException;
 import java.math.BigDecimal;
 import java.math.BigInteger;
 import java.math.MathContext;
@@ -8,10 +9,16 @@ import java.math.RoundingMode;
 import java.nio.charset.StandardCharsets;
 import java.util.ArrayList;
 import java.util.Comparator;
-import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
+import java.util.TreeMap;
 
+import com.fasterxml.jackson.core.JsonFactory;
+import com.fasterxml.jackson.core.JsonParseException;
+import com.fasterxml.jackson.core.JsonParser;
+import com.fasterxml.jackson.core.JsonToken;
+import com.fasterxml.jackson.core.JsonTokenId;
+import com.fasterxml.jackson.core.StreamReadConstraints;
 import org.apache.spark.sql.api.java.UDF1;
 
 /**
@@ -21,10 +28,14 @@ import org.apache.spark.sql.api.java.UDF1;
  *
  * <p>A string that starts with '{', '[' or "%7B" is parsed as JSON
  * ("%7B" strings are URL-decoded first, exactly as urllib.parse.unquote
- * does); a failed parse keeps the raw string. Objects digest as the compact
- * JSON of their keys sorted by code point mapped to the canonical strings of
- * their values; arrays digest as the compact JSON of their elements'
- * canonical strings sorted by code point; a string inside parsed JSON is
+ * does); a failed parse keeps the raw string. Parsing is Jackson's streaming
+ * parser from Spark's own jars, whose default features reject what orjson
+ * rejects (leading zeros, NaN, comments, trailing commas, raw control
+ * characters, bad escapes); {@link #read} and {@link #asciiEscapes} add the
+ * checks Jackson lacks. The parse renders as it goes: objects digest as the compact JSON of
+ * their keys sorted by code point mapped to the canonical strings of their
+ * values; arrays digest as the compact JSON of their elements' canonical
+ * strings sorted by code point; a string inside parsed JSON is
  * canonicalized again; scalars render as Python's str() does. The digest is
  * unkeyed BLAKE2b with an 8-byte output (RFC 7693), as 16 lowercase hex
  * digits, so hashes persisted by snapshots stay comparable.
@@ -39,9 +50,21 @@ public final class CanonicalHash implements UDF1<String, String> {
    */
   static final int MAX_DEPTH = 1000;
 
-  private static final Object NULL = new Object();
   private static final BigInteger INT_MIN = BigInteger.ONE.shiftLeft(63).negate();
   private static final BigInteger INT_MAX = BigInteger.ONE.shiftLeft(64).subtract(BigInteger.ONE);
+
+  // orjson has no size limits, so none of Jackson's (1000-character
+  // numbers, 50,000-character names, 20M-character strings, 1000 levels)
+  // applies. Field names are not interned into a table shared by threads.
+  private static final JsonFactory JSON = JsonFactory.builder()
+      .streamReadConstraints(StreamReadConstraints.builder()
+          .maxNumberLength(Integer.MAX_VALUE)
+          .maxNameLength(Integer.MAX_VALUE)
+          .maxStringLength(Integer.MAX_VALUE)
+          .maxNestingDepth(Integer.MAX_VALUE)
+          .build())
+      .disable(JsonFactory.Feature.CANONICALIZE_FIELD_NAMES)
+      .build();
 
   @Override
   public String call(String value) {
@@ -58,60 +81,131 @@ public final class CanonicalHash implements UDF1<String, String> {
       return value;
     }
     String text = value.startsWith("%7B") ? unquote(value) : value;
-    Object parsed;
-    try {
-      parsed = new Parser(text, depth).parseDocument();
-    } catch (IllegalArgumentException e) {
+    if (!asciiEscapes(text)) {
       return value;
     }
-    return render(parsed, depth);
+    try (JsonParser p = JSON.createParser(text)) {
+      p.nextToken();
+      String out = read(p, depth);
+      return p.nextToken() == null ? out : value; // orjson rejects trailing content
+    } catch (IOException e) {
+      return value;
+    }
   }
 
-  @SuppressWarnings("unchecked")
-  private static String render(Object v, int depth) {
-    if (v instanceof String) {
-      return canonical((String) v, depth);
-    }
-    if (v instanceof Map) {
-      Map<String, Object> map = (Map<String, Object>) v;
-      List<String> keys = new ArrayList<>(map.keySet());
-      keys.sort(CODE_POINT_ORDER);
-      StringBuilder out = new StringBuilder("{");
-      for (String k : keys) {
-        if (out.length() > 1) {
-          out.append(',');
+  /**
+   * Canonical string of the value at the parser's current token, consuming
+   * it. Besides Jackson's own checks it fails where orjson.loads raises:
+   * nesting past {@link #MAX_DEPTH}, a surrogate that is not half of a
+   * pair, numbers that overflow a double. Integers in [-2^63, 2^64-1] stay
+   * exact; wider ones become doubles, as in orjson. Duplicate keys keep the
+   * last value.
+   */
+  private static String read(JsonParser p, int depth) throws IOException {
+    switch (p.currentTokenId()) {
+      case JsonTokenId.ID_START_OBJECT: {
+        checkDepth(p, depth);
+        Map<String, String> members = new TreeMap<>(CODE_POINT_ORDER);
+        for (String key = p.nextFieldName(); key != null; key = p.nextFieldName()) {
+          paired(p, key);
+          p.nextToken();
+          members.put(key, read(p, depth + 1));
         }
-        writeJsonString(out, k);
-        out.append(':');
-        writeJsonString(out, render(map.get(k), depth + 1));
-      }
-      return digest(out.append('}').toString().getBytes(StandardCharsets.UTF_8));
-    }
-    if (v instanceof List) {
-      List<String> members = new ArrayList<>();
-      for (Object e : (List<Object>) v) {
-        members.add(render(e, depth + 1));
-      }
-      members.sort(CODE_POINT_ORDER);
-      StringBuilder out = new StringBuilder("[");
-      for (String m : members) {
-        if (out.length() > 1) {
-          out.append(',');
+        StringBuilder out = new StringBuilder("{");
+        for (Map.Entry<String, String> m : members.entrySet()) {
+          if (out.length() > 1) {
+            out.append(',');
+          }
+          writeJsonString(out, m.getKey());
+          out.append(':');
+          writeJsonString(out, m.getValue());
         }
-        writeJsonString(out, m);
+        return digest(out.append('}').toString().getBytes(StandardCharsets.UTF_8));
       }
-      return digest(out.append(']').toString().getBytes(StandardCharsets.UTF_8));
+      case JsonTokenId.ID_START_ARRAY: {
+        checkDepth(p, depth);
+        List<String> members = new ArrayList<>();
+        while (p.nextToken() != JsonToken.END_ARRAY) {
+          members.add(read(p, depth + 1));
+        }
+        members.sort(CODE_POINT_ORDER);
+        StringBuilder out = new StringBuilder("[");
+        for (String m : members) {
+          if (out.length() > 1) {
+            out.append(',');
+          }
+          writeJsonString(out, m);
+        }
+        return digest(out.append(']').toString().getBytes(StandardCharsets.UTF_8));
+      }
+      case JsonTokenId.ID_STRING:
+        return canonical(paired(p, p.getText()), depth);
+      case JsonTokenId.ID_NUMBER_INT: {
+        String text = p.getText();
+        if (text.length() < 19) { // at most 18 digits: inside the long range
+          return text.equals("-0") ? "0" : text;
+        }
+        BigInteger i = new BigInteger(text);
+        if (i.compareTo(INT_MIN) >= 0 && i.compareTo(INT_MAX) <= 0) {
+          return i.toString();
+        }
+        return pythonRepr(finite(p, Double.parseDouble(text)));
+      }
+      case JsonTokenId.ID_NUMBER_FLOAT:
+        return pythonRepr(finite(p, Double.parseDouble(p.getText())));
+      case JsonTokenId.ID_TRUE:
+        return "True";
+      case JsonTokenId.ID_FALSE:
+        return "False";
+      case JsonTokenId.ID_NULL:
+        return "None";
+      default:
+        throw new JsonParseException(p, "expected a value");
     }
-    if (v instanceof Double) {
-      return pythonRepr((Double) v);
+  }
+
+  private static void checkDepth(JsonParser p, int depth) throws JsonParseException {
+    if (depth >= MAX_DEPTH) {
+      throw new JsonParseException(p, "nested deeper than " + MAX_DEPTH);
     }
-    if (v instanceof Boolean) {
-      return (Boolean) v ? "True" : "False";
+  }
+
+  /** orjson rejects a lone surrogate, which Jackson decodes from "\\ud800". */
+  private static String paired(JsonParser p, String s) throws JsonParseException {
+    for (int i = 0; i < s.length(); i++) {
+      if (Character.isSurrogate(s.charAt(i))
+          && !(Character.isHighSurrogate(s.charAt(i)) && ++i < s.length()
+              && Character.isLowSurrogate(s.charAt(i)))) {
+        throw new JsonParseException(p, "unpaired surrogate");
+      }
     }
-    if (v == NULL) {
-      return "None";
+    return s;
+  }
+
+  /**
+   * False when a \\u escape holds a non-ASCII character, which orjson
+   * rejects and Jackson's character parser reads as the hex digit of its
+   * low byte ("\\u000\\ue064" as "\\u000d"). A backslash and the character
+   * after it are one escape, so "\\\\u" is no \\u escape.
+   */
+  private static boolean asciiEscapes(String s) {
+    for (int i = s.indexOf('\\'); i >= 0 && i + 1 < s.length(); i = s.indexOf('\\', i + 2)) {
+      if (s.charAt(i + 1) == 'u') {
+        for (int k = i + 2; k < Math.min(i + 6, s.length()); k++) {
+          if (s.charAt(k) >= 0x80) {
+            return false;
+          }
+        }
+      }
     }
-    return v.toString(); // BigInteger
+    return true;
+  }
+
+  private static double finite(JsonParser p, double d) throws JsonParseException {
+    if (Double.isInfinite(d)) {
+      throw new JsonParseException(p, "number overflows a double");
+    }
+    return d;
   }
 
   /** Python's str ordering: by code point, so astral characters sort after U+FFFF. */
@@ -280,7 +374,11 @@ public final class CanonicalHash implements UDF1<String, String> {
     return -1;
   }
 
-  /** UTF-8 decoding that replaces each maximal ill-formed subpart with U+FFFD, as Python does. */
+  /**
+   * UTF-8 decoding that replaces each maximal ill-formed subpart with U+FFFD, as Python does.
+   * The JDK's decoder writes one U+FFFD for a surrogate encoding (ED A0..BF xx) where Python
+   * writes one a byte: 144 of 20,000 random 1-32 byte strings decoded differently, all so.
+   */
   private static void decodeUtf8(byte[] b, StringBuilder out) {
     int i = 0;
     while (i < b.length) {
@@ -325,285 +423,6 @@ public final class CanonicalHash implements UDF1<String, String> {
         out.append('\uFFFD');
       }
       i = k;
-    }
-  }
-
-  // ---- strict JSON (RFC 8259, orjson's acceptance) ----------------------
-
-  /**
-   * Parses one JSON document into Map / List / String / BigInteger /
-   * Double / Boolean / NULL, failing with IllegalArgumentException where
-   * orjson.loads raises: trailing content, leading zeros, NaN/Infinity,
-   * raw control characters or unpaired surrogates in strings, numbers
-   * that overflow a double. Integers in [-2^63, 2^64-1] stay integers;
-   * wider ones become doubles, as in orjson. Duplicate keys keep the last value.
-   */
-  private static final class Parser {
-    private final String s;
-    private final int baseDepth;
-    private int pos;
-
-    Parser(String s, int baseDepth) {
-      this.s = s;
-      this.baseDepth = baseDepth;
-    }
-
-    Object parseDocument() {
-      Object v = value(baseDepth);
-      skipWhitespace();
-      if (pos != s.length()) {
-        throw fail();
-      }
-      return v;
-    }
-
-    private IllegalArgumentException fail() {
-      return new IllegalArgumentException("invalid JSON at " + pos);
-    }
-
-    private void skipWhitespace() {
-      while (pos < s.length()) {
-        char c = s.charAt(pos);
-        if (c != ' ' && c != '\t' && c != '\n' && c != '\r') {
-          return;
-        }
-        pos++;
-      }
-    }
-
-    private char next() {
-      skipWhitespace();
-      if (pos >= s.length()) {
-        throw fail();
-      }
-      return s.charAt(pos);
-    }
-
-    private Object value(int depth) {
-      char c = next();
-      switch (c) {
-        case '{': return object(depth + 1);
-        case '[': return array(depth + 1);
-        case '"': return string();
-        case 't': return literal("true", Boolean.TRUE);
-        case 'f': return literal("false", Boolean.FALSE);
-        case 'n': return literal("null", NULL);
-        default:
-          if (c == '-' || (c >= '0' && c <= '9')) {
-            return number();
-          }
-          throw fail();
-      }
-    }
-
-    private Object literal(String word, Object v) {
-      if (!s.startsWith(word, pos)) {
-        throw fail();
-      }
-      pos += word.length();
-      return v;
-    }
-
-    private Map<String, Object> object(int depth) {
-      if (depth > MAX_DEPTH) {
-        throw fail();
-      }
-      pos++;
-      Map<String, Object> map = new HashMap<>();
-      if (next() == '}') {
-        pos++;
-        return map;
-      }
-      while (true) {
-        if (next() != '"') {
-          throw fail();
-        }
-        String key = string();
-        if (next() != ':') {
-          throw fail();
-        }
-        pos++;
-        map.put(key, value(depth));
-        char c = next();
-        pos++;
-        if (c == '}') {
-          return map;
-        }
-        if (c != ',') {
-          throw fail();
-        }
-      }
-    }
-
-    private List<Object> array(int depth) {
-      if (depth > MAX_DEPTH) {
-        throw fail();
-      }
-      pos++;
-      List<Object> list = new ArrayList<>();
-      if (next() == ']') {
-        pos++;
-        return list;
-      }
-      while (true) {
-        list.add(value(depth));
-        char c = next();
-        pos++;
-        if (c == ']') {
-          return list;
-        }
-        if (c != ',') {
-          throw fail();
-        }
-      }
-    }
-
-    private String string() {
-      pos++; // opening quote
-      StringBuilder out = null;
-      int start = pos;
-      while (true) {
-        if (pos >= s.length()) {
-          throw fail();
-        }
-        char c = s.charAt(pos);
-        if (c == '"') {
-          String tail = s.substring(start, pos++);
-          return out == null ? tail : out.append(tail).toString();
-        }
-        if (c < 0x20) {
-          throw fail();
-        }
-        if (Character.isSurrogate(c)) {
-          if (!Character.isHighSurrogate(c) || pos + 1 >= s.length()
-              || !Character.isLowSurrogate(s.charAt(pos + 1))) {
-            throw fail();
-          }
-          pos += 2;
-          continue;
-        }
-        if (c != '\\') {
-          pos++;
-          continue;
-        }
-        if (out == null) {
-          out = new StringBuilder();
-        }
-        out.append(s, start, pos);
-        pos++;
-        if (pos >= s.length()) {
-          throw fail();
-        }
-        char e = s.charAt(pos++);
-        switch (e) {
-          case '"': out.append('"'); break;
-          case '\\': out.append('\\'); break;
-          case '/': out.append('/'); break;
-          case 'b': out.append('\b'); break;
-          case 'f': out.append('\f'); break;
-          case 'n': out.append('\n'); break;
-          case 'r': out.append('\r'); break;
-          case 't': out.append('\t'); break;
-          case 'u': {
-            char u = hex4();
-            if (Character.isLowSurrogate(u)) {
-              throw fail();
-            }
-            if (Character.isHighSurrogate(u)) {
-              if (!s.startsWith("\\u", pos)) {
-                throw fail();
-              }
-              pos += 2;
-              char low = hex4();
-              if (!Character.isLowSurrogate(low)) {
-                throw fail();
-              }
-              out.append(u).append(low);
-            } else {
-              out.append(u);
-            }
-            break;
-          }
-          default:
-            throw fail();
-        }
-        start = pos;
-      }
-    }
-
-    private char hex4() {
-      if (pos + 4 > s.length()) {
-        throw fail();
-      }
-      int v = 0;
-      for (int i = 0; i < 4; i++) {
-        int h = hexValue(s.charAt(pos++));
-        if (h < 0) {
-          throw fail();
-        }
-        v = v * 16 + h;
-      }
-      return (char) v;
-    }
-
-    private Object number() {
-      int start = pos;
-      if (s.charAt(pos) == '-') {
-        pos++;
-      }
-      if (pos >= s.length() || !isDigit(s.charAt(pos))) {
-        throw fail();
-      }
-      if (s.charAt(pos) == '0') {
-        pos++;
-        if (pos < s.length() && isDigit(s.charAt(pos))) {
-          throw fail();
-        }
-      } else {
-        digits();
-      }
-      boolean integral = true;
-      if (pos < s.length() && s.charAt(pos) == '.') {
-        pos++;
-        if (pos >= s.length() || !isDigit(s.charAt(pos))) {
-          throw fail();
-        }
-        digits();
-        integral = false;
-      }
-      if (pos < s.length() && (s.charAt(pos) == 'e' || s.charAt(pos) == 'E')) {
-        pos++;
-        if (pos < s.length() && (s.charAt(pos) == '+' || s.charAt(pos) == '-')) {
-          pos++;
-        }
-        if (pos >= s.length() || !isDigit(s.charAt(pos))) {
-          throw fail();
-        }
-        digits();
-        integral = false;
-      }
-      String text = s.substring(start, pos);
-      if (integral) {
-        BigInteger i = new BigInteger(text);
-        if (i.compareTo(INT_MIN) >= 0 && i.compareTo(INT_MAX) <= 0) {
-          return i;
-        }
-      }
-      double d = Double.parseDouble(text);
-      if (Double.isInfinite(d)) {
-        throw fail();
-      }
-      return d;
-    }
-
-    private void digits() {
-      while (pos < s.length() && isDigit(s.charAt(pos))) {
-        pos++;
-      }
-    }
-
-    private static boolean isDigit(char c) {
-      return c >= '0' && c <= '9';
     }
   }
 

@@ -106,7 +106,10 @@ class ParquetDatabase:
     def list_tables(self) -> list[str]:
         """Catalog scan via the Hadoop FileSystem API — works on any
         scheme Spark can read (file://, hdfs://, s3a://…), not just the
-        driver's local disk."""
+        driver's local disk.
+
+        A directory is a table when it holds a data file or a
+        ``name=value`` partition directory (a ``partitionBy`` write)."""
         jvm = self.spark._jvm
         jpath = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
@@ -115,7 +118,10 @@ class ParquetDatabase:
             entry = status.getPath().getName()
             if status.isDirectory():
                 for sub in fs.listStatus(status.getPath()):
-                    if sub.getPath().getName().endswith(self.EXT):
+                    name = sub.getPath().getName()
+                    if name.endswith(self.EXT) or (
+                        sub.isDirectory() and "=" in name and name[0] not in "_."
+                    ):
                         # a directory table may itself carry the
                         # extension (df.write targets like customer.orc)
                         names.add(

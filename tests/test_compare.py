@@ -225,6 +225,32 @@ class TestCompareAll:
         assert [d.table_name for d in res.data_drift] == ["t"]
         assert res.analysis.get_table_schema_drift() == []
 
+    def test_partitioned_parquet_table_compared(self, spark, tmp_path):
+        """A ``partitionBy`` table directory holds only ``k=v``
+        directories; it is listed, compared and its drift reported."""
+        from lotad_spark.sources import ParquetDatabase
+
+        sides = []
+        for i, n in enumerate((12, 11)):
+            path = tmp_path / f"db{i + 1}"
+            spark.range(n).selectExpr("id", "id % 3 AS k").write.partitionBy(
+                "k"
+            ).parquet(str(path / "events"))
+            spark.range(4).write.parquet(str(path / "plain.parquet"))
+            sides.append(ParquetDatabase(spark, str(path), f"db{i + 1}"))
+        assert sides[0].list_tables() == ["events", "plain"]
+        res = compare_all(spark, *sides, output_path=str(tmp_path / "out"))
+        assert res.compared_tables == ["events", "plain"]
+        assert res.analysis.get_data_drift_summary() == [
+            {
+                "table_name": "events",
+                "db1": "db1",
+                "rows_only_in_db1": 1,
+                "db2": "db2",
+                "rows_only_in_db2": 0,
+            }
+        ]
+
     def test_fully_ignored_table_skips_only_its_data_drift(
         self, spark, tmp_path, caplog
     ):

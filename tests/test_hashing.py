@@ -202,6 +202,12 @@ _TRAPS = [
     "[1e]",
     '["\\x"]',
     "[\x0c1]",
+    # a \u escape holding a non-ASCII character fails (Jackson's character
+    # parser reads it as the hex digit of its low byte); after an escaped
+    # backslash, "u" is a plain character
+    '{"\\u000\ue064": 1}',
+    '["\\u004\u0131"]',
+    '["\\\\u\ue064"]',
     # floats render as Python repr (shortest round-trip digits, its layout)
     "[0.1, 1e16, 1e15, 1e-05, 0.0001, -0.0, 1e22, 5e-324, 2.5e-3, 1E2]",
     "[1.7976931348623157e308, 123456789.123, 9007199254740993.0, 0.30000000000000004]",
@@ -236,6 +242,13 @@ _TRAPS = [
     "[[], {}, [[]]]",
     "[true, false, null, \"None\", \"True\"]",
     "[" * 400 + "]" * 400,
+    # orjson has no size limits; Jackson's defaults (1000-character numbers,
+    # 50,000-character names) would reject the float, the key and the
+    # mantissa (the integer overflows a double, so orjson rejects it)
+    pytest.param("[1." + "2" * 1199 + "]", id="float_1201_chars"),
+    pytest.param("[" + "1" * 1101 + "]", id="int_1101_digits"),
+    pytest.param('{"' + "k" * 60000 + '": 1}', id="key_60000_chars"),
+    pytest.param("[" + "7" * 1500 + "e-1490]", id="mantissa_1500_digits"),
 ]
 
 
@@ -281,6 +294,37 @@ _documents = st.one_of(
 )
 
 
+# Edits that turn a valid document into a near miss: JSON tokens, numbers
+# orjson rejects, control characters, escapes and lone surrogate escapes.
+_MUTATION_TOKENS = [
+    "{", "}", "[", "]", ",", ":", '"', "\\", " ", "0", "-", ".", "e", "01", "-0",
+    "1e400", ".5", "1.", "NaN", "Infinity", "true", "nul", "/**/", "\x00",
+    "\x01", "\x0c", "\t", "\n", "\x7f", "\u2028", "\ufeff", "\\u", "\\x",
+    "\\/", "\\u00e9", "\\ud800", "\\udc00", "\\ud83d\\ude00", "%7B", "%",
+]
+_mutations = st.lists(
+    st.tuples(
+        st.sampled_from(["insert", "delete", "replace"]),
+        st.integers(0, 2**16),
+        st.sampled_from(_MUTATION_TOKENS),
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+def _mutate(text: str, mutations) -> str:
+    for op, where, token in mutations:
+        i = where % (len(text) + 1)
+        if op == "insert":
+            text = text[:i] + token + text[i:]
+        elif op == "delete":
+            text = text[:i] + text[i + len(token):]
+        else:
+            text = text[:i] + token + text[i + len(token):]
+    return text
+
+
 class TestJavaParity:
     """CanonicalHash.canonical must equal canonical_value_hash bit for bit:
     snapshots persist these digests."""
@@ -309,6 +353,16 @@ class TestJavaParity:
         for variant in (urllib.parse.quote(text), urllib.parse.quote(text, safe="") + noise):
             value = "%7B" + variant
             assert java_hash.canonical(value) == canonical_value_hash(value)
+
+    @settings(max_examples=400, deadline=None)
+    @given(_documents, _mutations, st.booleans())
+    def test_mutated_documents(self, java_hash, doc, mutations, url_encode):
+        """Which near misses parse and which stay raw strings is orjson's
+        call; the Java port must agree on every one."""
+        text = _mutate(json.dumps(doc, ensure_ascii=False), mutations)
+        if url_encode:
+            text = "%7B" + urllib.parse.quote(text[1:])
+        assert java_hash.canonical(text) == canonical_value_hash(text)
 
     @pytest.mark.parametrize("length", [0, 1, 127, 128, 129, 255, 256, 257])
     def test_blake2b_block_boundaries(self, java_hash, length):
